@@ -21,11 +21,15 @@ def filter_history_window(df: DataFrame, activity_date: str, prediction_date: st
     ``start_date < ts < pred`` (caspr/utils/spark/preprocess.py:577-581);
     ``grace_days`` is the pandas twin's extra offset
     (caspr/utils/preprocess.py:90-92). Bounds are exclusive on both sides.
+
+    The start is floored to whole seconds, as the reference's
+    ``unix_timestamp`` floors it; the end keeps ``pred``'s microseconds,
+    matching the reference's ``ts < pred`` — flooring it too would drop
+    an event in the same second as, but before, the prediction date.
     """
     start = (F.unix_timestamp(F.col(prediction_date))
              - F.lit(history_days * 86400)).cast("timestamp")
-    end = (F.unix_timestamp(F.col(prediction_date))
-           - F.lit(grace_days * 86400)).cast("timestamp")
+    end = F.col(prediction_date) - F.make_dt_interval(days=F.lit(grace_days))
     return df.filter((F.col(activity_date) > start) & (F.col(activity_date) < end))
 
 

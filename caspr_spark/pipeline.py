@@ -8,9 +8,9 @@
 4. E1 capped frequency label-encoding      [fitted state]
 5. E5 min-max / standard scaling           [fitted state]
 6. E8/E9 NaN fills (long layout)
-7. P1-P3 fixed-length sequence pivot
-8. J4 profile join (non-sequential + label columns)
-9. E8/E9 NaN fills (pivoted layout)
+7. P1-P3 fixed-length sequences, with the J4 profile (non-sequential +
+   label columns) riding the same per-entity aggregate
+8. E8/E9 NaN fills (wide layout)
 
 — and returns ``(wide_df, model)``; ``model.transform(val)`` reapplies the
 train-fitted encoding + summary so val/test see exactly the train-time
@@ -18,21 +18,26 @@ feature space (leakage discipline of ``data_process_all_sp``,
 caspr/utils/spark/preprocess.py:615-632). Stage order matches the
 reference ``pipeline`` (preprocess.py:542-612).
 
-Scale notes: the only shuffles are the W1 window and the P3 pivot — both
-hash-partitioned by the entity key, so AQE reuses one exchange; encode
-joins broadcast (dictionaries capped at 30k rows); scaling/fills are pure
-expressions inside whole-stage codegen. The reference's mid-pipeline
-``repartition`` (preprocess.py:594-596) is unnecessary here — broadcast
-joins never skew the fact table.
+Scale notes: the featurization core is one shuffle — the W1
+``row_number`` window (a partial ``WindowGroupLimit`` keeps at most
+``seq_len`` rows per entity before the exchange) feeding one hash
+aggregate on the same entity partitioning; ``layout`` only picks the
+final projection of that aggregate. Encode joins broadcast (dictionaries
+capped at 30k rows); scaling/fills are pure expressions inside
+whole-stage codegen. The reference's mid-pipeline ``repartition``
+(preprocess.py:594-596) is unnecessary here — broadcast joins never skew
+the fact table.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from caspr_spark.cache import register_cache
@@ -41,8 +46,7 @@ from caspr_spark.operators.encode import (CategoricalEncoding, fit_encoding,
                                           MAX_CAT_CARDINALITY)
 from caspr_spark.operators.fills import fill_nans
 from caspr_spark.operators.filters import filter_history_window, filter_last_n
-from caspr_spark.operators.pivot import collect_sequences, featurize_sequential, sequences_to_wide
-from caspr_spark.operators.rank import get_rank
+from caspr_spark.operators.pivot import collect_sequences, sequences_to_wide
 from caspr_spark.operators.scale import (Summary, fit_summary, load_summary,
                                          normalize_columns, save_summary)
 
@@ -59,11 +63,9 @@ class SequenceFeaturizer:
     interval: bool = False
     scaling: str = "min_max"
     max_cardinality: int = MAX_CAT_CARDINALITY
-    layout: str = "wide"  # "wide" (reference-compatible) or "array" (scale path)
-    # persist the filtered prefix across the fit actions + featurization
-    # (one materialization instead of one scan per fit job); disable when
-    # the filtered window exceeds cluster storage
-    cache_fit: bool = True
+    # final projection of the one sequence aggregate: "wide" (reference
+    # slot-major {slot}_{col} order) or "array" (column-major)
+    layout: str = "wide"
 
     def fit(self, df: DataFrame) -> "SequenceFeaturizerModel":
         _, model = self.fit_transform(df, _materialize=False)
@@ -79,18 +81,18 @@ class SequenceFeaturizer:
         """
         r = self.roles
         r.validate(df)
+        # Persist the filtered prefix across the fit actions and the
+        # featurization (one materialization instead of one scan per fit
+        # job). Cache only the columns the fit jobs and the featurization
+        # consume: persist() materializes EVERY column of the plan it is
+        # handed (the cache is opaque to Catalyst's pruning), so without
+        # this projection a payload column the roles never reference — a
+        # props/body blob on the event row — is built into the cache and
+        # paid for on every fit pass. Pure column pruning: the downstream
+        # stages select from exactly this set, so results are unchanged.
         long_df = self._prefix(df)
-        if self.cache_fit:
-            # Cache only the columns the fit jobs and the featurization
-            # consume: persist() materializes EVERY column of the plan it
-            # is handed (the cache is opaque to Catalyst's pruning), so
-            # without this projection a payload column the roles never
-            # reference — a props/body blob on the event row — is built
-            # into the cache and paid for on every fit pass. Pure column
-            # pruning: the downstream stages select from exactly this set,
-            # so results are unchanged.
-            long_df = long_df.select(*self._consumed_cols(long_df))
-            long_df = register_cache(long_df.persist())
+        long_df = long_df.select(*self._consumed_cols(long_df))
+        long_df = register_cache(long_df.persist())
 
         norm_cols = r.date_cols + r.cont_cols
         if set(norm_cols) & set(r.cat_cols):
@@ -109,28 +111,19 @@ class SequenceFeaturizer:
             # job back-fills executors the TakeOrdered tails leave idle
             # instead of paying one extra sequential job latency. Values
             # are identical to the sequential order by construction.
-            from concurrent.futures import ThreadPoolExecutor
-
+            #
             # Spark job groups / descriptions / scheduler pools are JVM
             # thread-locals: a plain pool thread would submit the summary
             # job OUTSIDE any job group or label the caller set, so
             # cancellation scopes and bench/UI labels would silently not
             # cover it. inheritable_thread_target captures the current
             # thread's local properties and re-applies them in the worker
-            # (the documented PySpark idiom for driver-side concurrency);
-            # if the pinned-thread contract it needs is unavailable, fall
-            # back to the bare call — correctness is unaffected either
-            # way (fit_summary persists nothing and reads disjoint
-            # columns).
+            # (the documented PySpark idiom for driver-side concurrency).
+            @inheritable_thread_target
             def _summary():
                 return fit_summary(long_df, norm_cols)
-            try:
-                from pyspark import inheritable_thread_target
-                _summary_job = inheritable_thread_target(_summary)
-            except Exception:
-                _summary_job = _summary
             with ThreadPoolExecutor(max_workers=1) as pool:
-                summary_fut = pool.submit(_summary_job)
+                summary_fut = pool.submit(_summary)
                 encoding = fit_encoding(long_df, r.cat_cols,
                                         self.max_cardinality)
                 summary = summary_fut.result()
@@ -161,26 +154,19 @@ class SequenceFeaturizer:
     def _rank(self, df: DataFrame) -> DataFrame:
         """W1 on the stashed raw timestamp; drops the stash.
 
-        The collect-based featurization paths (array layout, and the
-        wide layout with profile columns — see ``_finish``) consume only
-        ``rank_desc``, so they rank with a single ``row_number`` window
-        instead of get_rank's row_number + count pair: one window
-        function pass over the entity partition instead of two (the
-        padding slots resolve post-aggregation in
-        ``collect_sequences``). The pivot path keeps the full get_rank
-        (its slot arithmetic needs ``seq_len``/``rank_asc`` pre-pivot).
+        Adds only ``rank_desc`` (``get_rank``'s ordering and tie-break):
+        ``collect_sequences`` resolves the padding slots after the
+        aggregate, so the ``count() over (partition by entity)`` behind
+        ``get_rank``'s ``seq_len``/``rank_asc`` is never needed — one
+        window function over the entity partition, which Spark plans
+        with a partial ``WindowGroupLimit`` once ``_finish`` filters
+        ``rank_desc <= seq_len``.
         """
-        from pyspark.sql import Window
-
         r = self.roles
-        if self.layout == "array" or self._profile_cols():
-            order = ([F.col("__rank_ts").desc()]
-                     + [F.col(c).desc() for c in (r.order_tiebreak or [])])
-            w = Window.partitionBy(*[F.col(c) for c in r.tgt_id]).orderBy(*order)
-            return df.withColumn("rank_desc",
-                                 F.row_number().over(w)).drop("__rank_ts")
-        return get_rank(df, r.tgt_id, "__rank_ts",
-                        tiebreak=r.order_tiebreak).drop("__rank_ts")
+        order = ([F.col("__rank_ts").desc()]
+                 + [F.col(c).desc() for c in (r.order_tiebreak or [])])
+        w = Window.partitionBy(*[F.col(c) for c in r.tgt_id]).orderBy(*order)
+        return df.withColumn("rank_desc", F.row_number().over(w)).drop("__rank_ts")
 
     def _consumed_cols(self, long_df: DataFrame) -> list[str]:
         """Every column of the post-``_prefix`` long relation that any
@@ -203,13 +189,11 @@ class SequenceFeaturizer:
 
     def _profile_cols(self) -> list[str]:
         """The non-sequential columns carried through the featurization
-        (shared by ``_rank``'s light-mode decision and ``_finish``).
-        Order-preserving dedup: ``prediction_date`` may already appear in
-        ``output_cols`` (without being declared non-sequential), and a
-        duplicate here would alias the same aggregate twice — the fused
-        wide+profile select would then raise an ambiguous-column
-        AnalysisException (the old join path silently duplicated the
-        column instead)."""
+        (shared by ``_consumed_cols`` and ``_finish``). Order-preserving
+        dedup: ``prediction_date`` may already appear in ``output_cols``
+        (without being declared non-sequential), and a duplicate here
+        would alias the same aggregate twice — the wide select would
+        then raise an ambiguous-column AnalysisException."""
         r = self.roles
         extra = ([r.prediction_date]
                  if not self.interval and r.prediction_date not in r.non_seq_cols
@@ -255,7 +239,7 @@ class SequenceFeaturizerModel:
                             p.history_days, r.prediction_date, p.interval,
                             summary_date, p.scaling)
 
-        # carry prediction_date through the pivot when absolute-mode date
+        # carry prediction_date through the aggregate when absolute-mode date
         # fills will need it on the wide layout (the reference requires the
         # caller to declare it non-sequential; we carry it implicitly)
         prof_vals = p._profile_cols()
@@ -268,35 +252,22 @@ class SequenceFeaturizerModel:
         # profile columns ride the sequence aggregate itself (max over the
         # single rank-1 row is deterministic): the whole featurization —
         # sequences + profile — is ONE hash aggregate, zero joins, the
-        # 100 TB shape. Both layouts use it; they differ only in how the
-        # aggregate is materialized into columns.
+        # 100 TB shape. The layouts differ only in how the aggregate is
+        # projected into columns.
         prof_aggs = [F.max(F.when(F.col("rank_desc") == 1, F.col(c)))
                      .alias(c) for c in prof_vals]
+        feat = collect_sequences(long_df, r.tgt_id, p.seq_len, r.seq_cols,
+                                 p.left_pad, extra_aggs=prof_aggs)
         if p.layout == "array":
-            feat = collect_sequences(long_df, r.tgt_id, p.seq_len, r.seq_cols,
-                                     p.left_pad, extra_aggs=prof_aggs)
             wide = sequences_to_wide(feat, r.seq_cols, p.seq_len)
-        elif prof_vals:
-            # wide layout WITH profile columns: the former shape — pivot,
-            # then join the rank-1 profile rows back on tgt_id — executed
-            # the windowed long table twice and joined the two one-row-per-
-            # entity relations with a sort-merge join (2 extra sorts + a
-            # second Exchange+Window pass over the fact table, seen in the
-            # r15 before-plan). Fusing the profile into the one sequence
-            # aggregate removes the join and the second window execution;
-            # the select below reproduces the pivot layout's exact
-            # slot-major column order (tgt_id, {slot}_{col}..., profile),
-            # so the output is column-for-column identical to the join
-            # form (oracle-verified at both SFs).
-            feat = collect_sequences(long_df, r.tgt_id, p.seq_len, r.seq_cols,
-                                     p.left_pad, extra_aggs=prof_aggs)
+        else:
+            # the reference pivot's slot-major order (tgt_id,
+            # {slot}_{col}..., profile) and its null-key drop
             exprs = [F.col(c) for c in r.tgt_id]
             exprs += [F.col(f"{c}_seq")[s - 1].alias(f"{s}_{c}")
                       for s in range(1, p.seq_len + 1) for c in r.seq_cols]
             exprs += [F.col(c) for c in prof_vals]
             wide = feat.na.drop(subset=r.tgt_id).select(*exprs)
-        else:
-            wide = featurize_sequential(long_df, r.tgt_id, p.seq_len, r.seq_cols, p.left_pad)
 
         cat_w, cont_w, _, _, date_w = r.wide_lists(p.seq_len, p.left_pad)
         present = set(wide.columns)
@@ -314,7 +285,7 @@ class SequenceFeaturizerModel:
         os.makedirs(path, exist_ok=True)
         cfg = {k: getattr(self.params, k)
                for k in ("history_days", "seq_len", "left_pad", "interval",
-                          "scaling", "max_cardinality", "layout", "cache_fit")}
+                          "scaling", "max_cardinality", "layout")}
         cfg["roles"] = self.params.roles.to_dict()
         with open(os.path.join(path, "params.json"), "w") as f:
             json.dump(cfg, f)
@@ -326,6 +297,7 @@ class SequenceFeaturizerModel:
         with open(os.path.join(path, "params.json")) as f:
             cfg = json.load(f)
         roles = ColumnRoles.from_dict(cfg.pop("roles"))
+        cfg.pop("cache_fit", None)  # removed field; older params.json carry it
         params = SequenceFeaturizer(roles=roles, **cfg)
         return cls(params,
                    CategoricalEncoding.load(os.path.join(path, "encoding.json")),

@@ -50,6 +50,20 @@ class TestFilters:
         ids = {r["event_id"] for r in out.select("event_id").collect()}
         assert ids == {1, 30, 31, 32, 40, 41}
 
+    def test_history_window_end_is_exact(self, spark):
+        """The end bound is ``ts < prediction_date`` to the microsecond: an
+        event 0.4 s before a fractional-second prediction date is in the
+        window, one at the prediction date is not."""
+        df = spark.createDataFrame(
+            [(1, "2024-01-15 10:00:00.300000"),
+             (2, "2024-01-15 10:00:00.700000")],
+            "event_id long, ts_s string"
+        ).select("event_id", F.to_timestamp("ts_s").alias("ts"),
+                 F.to_timestamp(F.lit("2024-01-15 10:00:00.700000"))
+                  .alias("prediction_date"))
+        out = filter_history_window(df, "ts", "prediction_date", 7)
+        assert [r["event_id"] for r in out.collect()] == [1]
+
     def test_last_n(self, micro_events):
         df = get_rank(micro_events, ["user_id"], "ts", tiebreak=["event_id"])
         out = filter_last_n(df, 2)

@@ -1,9 +1,13 @@
 """End-to-end pipeline tests: leakage discipline, fills, persistence."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
 from caspr_spark import ColumnRoles, SequenceFeaturizer
+from caspr_spark.operators import (featurize_sequential, fill_nans, get_rank,
+                                   normalize_columns)
 from caspr_spark.pipeline import SequenceFeaturizerModel, data_process_all
 
 
@@ -109,21 +113,74 @@ class TestPipeline:
                                   interval=True)
         _, model = feat.fit_transform(micro_events)
         model.save(str(tmp_path / "m"))
+        # params.json files written before the fit cache became
+        # unconditional carry a ``cache_fit`` key; they must still load
+        params = tmp_path / "m" / "params.json"
+        cfg = json.loads(params.read_text())
+        params.write_text(json.dumps({**cfg, "cache_fit": True}))
         m2 = SequenceFeaturizerModel.load(str(tmp_path / "m"))
         a = model.transform(micro_events).orderBy("user_id").toPandas()
         b = m2.transform(micro_events).orderBy("user_id").toPandas()
         assert a[sorted(a.columns)].equals(b[sorted(b.columns)])
 
-    def test_array_layout_pipeline(self, micro_events):
-        fw = SequenceFeaturizer(roles=roles(), history_days=7, seq_len=3,
-                                interval=True)
-        fa = SequenceFeaturizer(roles=roles(), history_days=7, seq_len=3,
-                                interval=True, layout="array")
-        a, _ = fw.fit_transform(micro_events)
-        b, _ = fa.fit_transform(micro_events)
-        pa = a.orderBy("user_id").toPandas()
-        pb = b.orderBy("user_id").toPandas()
-        assert pa[sorted(pa.columns)].equals(pb[sorted(pb.columns)])
+    @pytest.mark.parametrize("profile", [False, True])
+    @pytest.mark.parametrize("seq_len", [2, 3, 10])
+    @pytest.mark.parametrize("left_pad", [False, True])
+    def test_array_layout_pipeline(self, micro_events, left_pad, seq_len,
+                                   profile):
+        """Both layouts equal the pivot reference. seq_len 2 truncates
+        user 4's three in-window events, 3 fits them exactly and 10 is
+        longer than every history; ``profile`` adds a non-sequential
+        column carried from each entity's latest event."""
+        df = micro_events.withColumn("segment", F.col("user_id") % 2)
+        r = roles()
+        if profile:
+            r.non_seq_cols = ["segment"]
+        fw = SequenceFeaturizer(roles=r, history_days=7, seq_len=seq_len,
+                                left_pad=left_pad, interval=True)
+        fa = SequenceFeaturizer(roles=r, history_days=7, seq_len=seq_len,
+                                left_pad=left_pad, interval=True,
+                                layout="array")
+        a, model = fw.fit_transform(df)
+        b, _ = fa.fit_transform(df)
+        ref = _pivot_reference(model, df)
+        assert a.columns == ref.columns
+        pr = ref.orderBy("user_id").toPandas()
+        for out in (a, b):
+            po = out.orderBy("user_id").toPandas()
+            assert po[sorted(po.columns)].equals(pr[sorted(pr.columns)])
+
+
+def _pivot_reference(model, df):
+    """The pivot featurization the layouts must reproduce: ``get_rank`` +
+    ``featurize_sequential`` over the model's fitted, encoded, scaled long
+    frame, profile columns joined from each entity's latest event, then
+    the same wide fills."""
+    p, r = model.params, model.params.roles
+    summary_date = {d: model.summary[d] for d in r.date_cols}
+    long_df = model.encoding.apply(p._prefix(df), r.cat_cols)
+    long_df, _ = normalize_columns(long_df, r.date_cols + r.cont_cols,
+                                   model.summary, p.scaling)
+    long_df = fill_nans(long_df, r.cat_cols, r.cont_cols, r.date_cols,
+                        p.history_days, r.prediction_date, p.interval,
+                        summary_date, p.scaling)
+    ranked = get_rank(long_df, r.tgt_id, "__rank_ts",
+                      tiebreak=r.order_tiebreak).drop("__rank_ts")
+    wide = featurize_sequential(ranked, r.tgt_id, p.seq_len, r.seq_cols,
+                                p.left_pad)
+    prof = p._profile_cols()
+    if prof:
+        latest = ranked.filter("rank_desc = 1").select(*r.tgt_id, *prof)
+        wide = wide.join(latest, r.tgt_id)
+    cat_w, cont_w, _, _, date_w = r.wide_lists(p.seq_len, p.left_pad)
+    present = set(wide.columns)
+    wide = fill_nans(wide, [c for c in cat_w if c in present],
+                     [c for c in cont_w if c in present],
+                     [c for c in date_w if c in present],
+                     p.history_days, r.prediction_date, p.interval,
+                     summary_date, p.scaling)
+    declared = set(r.non_seq_cols) | set(r.output_cols)
+    return wide.drop(*[c for c in prof if c not in declared])
 
 
 class TestEmptyInput:

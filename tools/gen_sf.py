@@ -33,8 +33,9 @@ Two modes (r5 verdict item 6):
   per entity" shape a 100 TB event table has and the replica-offset
   modes cannot manufacture (they scale entities WITH events, keeping
   rows/entity constant). Built for the Partial-WindowGroupLimit
-  shuffle-bytes A/B (``tools/wgl_ab_r16.py``); other tables are copied
-  once, untouched.
+  shuffle-bytes A/B (record: ``plans/r16/wgl_longhist_ab.json``; per-layer
+  shuffle bytes now come from ``perfbench/run.py --trace 1`` and
+  ``perfbench/diff.py``); other tables are copied once, untouched.
 
 Usage: python tools/gen_sf.py [--src DIR] [--dst DIR] [--k 10]
        [--mode fresh|clone|longhist]
