@@ -16,6 +16,8 @@ Scale shape (100 TB corpus):
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -144,8 +146,10 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
 def _signatures_from_shingles(sh: DataFrame, id_col: str, num_hashes: int,
                               sig_col: str = "minhash",
                               hash_family: str = "fast") -> DataFrame:
-    """Signatures from a prepared ``(id, __shingles array)`` DataFrame."""
-    p = F.lit(_MERSENNE31)
+    """Signatures from a prepared ``(id, __shingles array)`` DataFrame.
+
+    The ``num_hashes`` slot minima are one SQL expression, parsed once,
+    instead of one Column per slot (each a py4j round-trip)."""
     h1, h2 = _base_hash_pair(F.col("__s"), hash_family)
     hashed = sh.select(
         F.col(id_col),
@@ -158,11 +162,9 @@ def _signatures_from_shingles(sh: DataFrame, id_col: str, num_hashes: int,
     # of h1 + i*h2 for large i all collapse to the h2 ordering and the
     # "permutations" stop being min-wise independent (banding S-curve
     # degrades to ~J instead of J^rows)
-    mins = [F.min(F.pmod(F.col("__h1") + i * F.col("__h2"), p)).alias(f"__m{i}")
-            for i in range(num_hashes)]
-    agg = hashed.groupBy(id_col).agg(*mins)
-    return agg.select(id_col, F.array(*[f"__m{i}" for i in range(num_hashes)])
-                      .alias(sig_col))
+    slots = ", ".join(f"min(pmod(__h1 + {i} * __h2, {_MERSENNE31}))"
+                      for i in range(num_hashes))
+    return hashed.groupBy(id_col).agg(F.expr(f"array({slots})").alias(sig_col))
 
 
 def minhash_lsh_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -195,11 +197,9 @@ def minhash_lsh_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     ``signatures``: a precomputed ``(id_col, shingles, minhash)``
     frame (the :func:`build_history_signatures` shape, keyed by
     ``id_col``) skips the shingle+minhash build entirely — the shape a
-    caller that ALSO needs the batch's signatures downstream uses to
-    compute them once (the streaming corpus sink builds per-batch
-    signatures once and shares them across internal dedup, the
-    history join, and nothing else — the state fold re-derives from
-    written bytes by design). The frame MUST have been built with the
+    caller that ALSO needs the batch's signatures downstream (e.g. to
+    fold them into a signature state) uses to compute them once. The
+    frame MUST have been built with the
     same ``num_hashes``/``shingle_size``/``hash_family`` — band keys
     and Jaccard values silently differ otherwise (the persisted-sketch
     contract of :func:`dedup_against_history`).
@@ -210,12 +210,9 @@ def minhash_lsh_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
         raise ValueError(f"bands ({bands}) must divide num_hashes "
                          f"({num_hashes}); trailing signature slots would be "
                          "silently ignored")
-    rows_per_band = num_hashes // bands
     if signatures is not None:
         _check_signature_family(signatures, hash_family)
-        sh_base = signatures.select(
-            F.col(id_col), F.col("shingles").alias("__shingles"))
-        sigs = signatures.select(id_col, "minhash")
+        side = _signature_side(signatures, id_col)
     else:
         # shingle construction (the regex-heavy part) runs ONCE, at full
         # parallelism: the persisted (id, shingles) relation feeds both
@@ -224,11 +221,11 @@ def minhash_lsh_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
         # it (LRU); loop callers wrap the call + materialization in
         # ``caspr_spark.cache_scope()`` which unpersists on exit.
         sh_base = ensure_parallelism(df).select(
-            F.col(id_col),
+            F.col(id_col).alias("__id"),
             _shingles(text_col, shingle_size).alias("__shingles"))
         if verify:
             sh_base = register_cache(sh_base.persist())
-        # The banded self-join below consumes `sigs` TWICE (left and right
+        # The banded self-join consumes `sigs` TWICE (left and right
         # sides); without a persist each side re-runs the full signature
         # aggregate — AQE does not reuse the exchange stage across the two
         # branches (measured: the 64-min hash aggregate executed twice,
@@ -237,55 +234,106 @@ def minhash_lsh_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
         # persisted shingles — and LRU-evictable, same discipline as
         # sh_base (recompute path stays correct).
         sigs = register_cache(
-            _signatures_from_shingles(sh_base, id_col, num_hashes,
+            _signatures_from_shingles(sh_base, "__id", num_hashes,
                                       hash_family=hash_family).persist())
+        side = (sigs, sh_base)
 
-    # `minhash` is an aggregate output (a materialized attribute), so the
-    # band-key slices below just index an in-memory array — no re-hashing.
-    # fast: hash the slot concat down to 8 bytes; portable: keep the raw
-    # concat string (collision-free, engine-reproducible — posexplode's
-    # band index disambiguates across bands on both paths).
-    def _band_key(j):
+    matches = _near_matches(side, None, True, num_hashes, bands,
+                            hash_family, threshold if verify else None)
+    id_a, id_b = F.col("__oid").alias("id_a"), F.col("__id").alias("id_b")
+    pairs = (matches.select(id_b, id_a, "jaccard") if verify
+             else matches.select(id_a, id_b))
+    dedup = df.join(matches.select(F.col("__id").alias(id_col)), on=id_col,
+                    how="left_anti")
+    return dedup, pairs
+
+
+def _band_keys(num_hashes: int, bands: int, hash_family: str):
+    """The ``bands`` LSH band keys of the ``minhash`` column, as one
+    array expression. ``minhash`` is a materialized attribute (an
+    aggregate output or a stored column), so the slices just index an
+    in-memory array — no re-hashing. fast: hash each band's slot
+    concat down to 8 bytes; portable: keep the raw concat string
+    (collision-free, engine-reproducible). ``posexplode``'s band index
+    disambiguates across bands on both families."""
+    rows = num_hashes // bands
+
+    def key(j):
         concat = F.concat_ws(",", F.transform(
-            F.slice("minhash", j * rows_per_band + 1, rows_per_band),
+            F.slice("minhash", j * rows + 1, rows),
             lambda x: x.cast("string")))
         return F.xxhash64(concat, j) if hash_family == "fast" else concat
 
-    band_keys = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)), _band_key)
-    banded = sigs.select(
-        id_col, F.posexplode(band_keys).alias("band", "band_key"))
+    return F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), key)
 
-    left = banded.select(F.col(id_col).alias("id_a"), "band", "band_key")
-    right = banded.select(F.col(id_col).alias("id_b"), "band", "band_key")
-    # The distinct() is one extra shuffle — of the candidate-pair
-    # relation, which for a mostly-unique corpus is FAR smaller than the
-    # banded relation. The similarity path's first-collision trick does
-    # not transfer here: band keys are 64-bit hashes (cannot bit-pack 16
-    # of them into a word), so emitting each pair once would mean carrying
-    # a bands-element long array through the banding shuffle — ~8·bands
-    # extra bytes on ALL N·bands rows to save a shuffle of the few
-    # candidate rows. Keep the distinct.
-    pairs = (left.join(right, on=["band", "band_key"])
-                 .filter(F.col("id_a") < F.col("id_b"))
-                 .select("id_a", "id_b").distinct())
 
-    if verify:
-        sh = sh_base
-        pairs = (pairs
-                 .join(sh.select(F.col(id_col).alias("id_a"),
-                                 F.col("__shingles").alias("__sh_a")), "id_a")
-                 .join(sh.select(F.col(id_col).alias("id_b"),
-                                 F.col("__shingles").alias("__sh_b")), "id_b")
-                 .withColumn("jaccard",
-                             F.size(F.array_intersect("__sh_a", "__sh_b")) /
-                             F.size(F.array_union("__sh_a", "__sh_b")))
-                 .drop("__sh_a", "__sh_b")
-                 .filter(F.col("jaccard") >= threshold))
+def _signature_side(table: DataFrame, id_name: str):
+    """A signature table (the :func:`build_history_signatures` shape,
+    keyed by ``id_name``) as a :func:`_near_matches` side: one frame
+    serves both the band keys and the shingles."""
+    t = table.select(F.col(id_name).alias("__id"),
+                     F.col("shingles").alias("__shingles"), "minhash")
+    return t, t
 
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    dedup = df.join(losers, on=id_col, how="left_anti")
-    return dedup, pairs
+
+def _near_matches(batch, history, self_join: bool, num_hashes: int,
+                  bands: int, hash_family: str, threshold):
+    """The one banded-join-and-verify pass behind every MinHash
+    near-duplicate decision: :func:`minhash_lsh_dedup` (batch side
+    only), near-mode :func:`dedup_against_history` (history side only)
+    and :func:`caspr_spark.streaming.dedup_corpus_sink` (both).
+
+    ``batch`` and ``history`` are ``(sigs, shingles)`` frame pairs
+    keyed by ``__id`` — ``sigs`` holds ``minhash``, ``shingles`` holds
+    ``__shingles`` (:func:`_signature_side` passes one frame as both).
+    The batch's band keys join ONCE against the tagged union of the
+    batch's own band keys (``__side='batch'``, when ``self_join``) and
+    the history's (``__side='history'``, when given). A candidate is
+    kept when its other side is history or a LOWER batch id — the
+    greedy survivor rule: a doc is a loser when it verifies against
+    any history doc or any lower batch id, loser or not. One
+    shingle-Jaccard join against the same tagged union verifies the
+    candidates. Returns ``(__id, __side, __oid, jaccard)`` rows with
+    ``jaccard >= threshold``, or the unverified ``(__id, __side,
+    __oid)`` candidates when ``threshold`` is None. Both sides must
+    key on the same id type.
+
+    The candidate ``distinct()`` is one extra shuffle — of the
+    candidate relation, which for a mostly-unique corpus is FAR
+    smaller than the banded relation. Band keys are 64-bit hashes (16
+    of them cannot bit-pack into a word), so emitting each pair once
+    would mean carrying a bands-element array through the banding
+    shuffle on ALL N·bands rows to save a shuffle of the few candidate
+    rows."""
+    bk = _band_keys(num_hashes, bands, hash_family)
+    sides = [(tag, pair) for tag, pair in (
+        ("batch", batch if self_join else None), ("history", history))
+        if pair is not None]
+
+    def tagged(i: int, *cols):
+        frames = [pair[i].select(F.lit(tag).alias("__side"),
+                                 F.col("__id").alias("__oid"), *cols)
+                  for tag, pair in sides]
+        return reduce(DataFrame.unionByName, frames)
+
+    left = batch[0].select("__id", F.posexplode(bk).alias("band", "band_key"))
+    right = tagged(0, F.posexplode(bk).alias("band", "band_key"))
+    cands = (left.join(right, on=["band", "band_key"])
+                 .filter((F.col("__side") == "history")
+                         | (F.col("__oid") < F.col("__id")))
+                 .select("__id", "__side", "__oid").distinct())
+    if threshold is None:
+        return cands
+    return (cands
+            .join(tagged(1, F.col("__shingles").alias("__sb")),
+                  on=["__side", "__oid"])
+            .join(batch[1].select("__id", F.col("__shingles").alias("__sa")),
+                  on="__id")
+            .withColumn("jaccard",
+                        F.size(F.array_intersect("__sa", "__sb")) /
+                        F.size(F.array_union("__sa", "__sb")))
+            .filter(F.col("jaccard") >= threshold)
+            .select("__id", "__side", "__oid", "jaccard"))
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
@@ -1352,70 +1400,27 @@ def dedup_against_history(batch: DataFrame, history: DataFrame | None,
     if hash_family not in ("fast", "portable"):
         raise ValueError(f"hash_family must be 'fast' or 'portable', "
                          f"got {hash_family!r}")
-    rows_per_band = num_hashes // bands
     from caspr_spark.sources import ensure_parallelism
 
-    # family-aware band keys — SAME construction as minhash_lsh_dedup:
-    # fast hashes the slot concat to 8 bytes, portable keeps the raw
-    # concat string (engine-reproducible; posexplode's band index
-    # disambiguates across bands on both paths)
-    def _bk(j):
-        concat = F.concat_ws(",", F.transform(
-            F.slice("minhash", j * rows_per_band + 1, rows_per_band),
-            lambda x: x.cast("string")))
-        return F.xxhash64(concat, j) if hash_family == "fast" else concat
+    def _side(df: DataFrame, signatures: DataFrame | None, sig_id: str):
+        if signatures is not None:
+            # banding from the stored minhash column is map-side (no
+            # shingling, no text scan); shingles come from the same table
+            _check_signature_family(signatures, hash_family)
+            return _signature_side(signatures, sig_id)
+        sh = register_cache(ensure_parallelism(df).select(
+            F.col(id_col).alias("__id"),
+            _shingles(text_col, shingle_size).alias("__shingles")).persist())
+        return (_signatures_from_shingles(sh, "__id", num_hashes,
+                                          hash_family=hash_family), sh)
 
-    band_keys = F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), _bk)
-
-    def _banded(df: DataFrame, out_id: str):
-        sh = ensure_parallelism(df).select(
-            F.col(id_col).alias(out_id),
-            _shingles(text_col, shingle_size).alias("__shingles"))
-        sh = register_cache(sh.persist())
-        sigs = _signatures_from_shingles(sh, out_id, num_hashes,
-                                         hash_family=hash_family)
-        banded = sigs.select(out_id,
-                             F.posexplode(band_keys).alias("band",
-                                                           "band_key"))
-        return banded, sh
-
-    if history_signatures is not None:
-        _check_signature_family(history_signatures, hash_family)
-    if batch_signatures is not None:
-        _check_signature_family(batch_signatures, hash_family)
-        bb = batch_signatures.select(
-            F.col(id_col).alias("__bid"),
-            F.posexplode(band_keys).alias("band", "band_key"))
-        bsh = batch_signatures.select(
-            F.col(id_col).alias("__bid"),
-            F.col("shingles").alias("__shingles"))
-    else:
-        bb, bsh = _banded(batch, "__bid")
-    if history_signatures is not None:
-        # banding from the persisted minhash column is map-side (no
-        # shingling, no text scan); shingles come from the same table
-        hb = history_signatures.select(
-            "history_id", F.posexplode(band_keys).alias("band", "band_key"))
-        hsh = history_signatures.select(
-            "history_id", F.col("shingles").alias("__shingles"))
-    else:
-        hb, hsh = _banded(history, "history_id")
-    cands = (bb.join(hb, on=["band", "band_key"])
-               .select("__bid", "history_id").distinct())
-    matches = (cands
-               .join(bsh.select(F.col("__bid"),
-                                F.col("__shingles").alias("__sa")), "__bid")
-               .join(hsh.select(F.col("history_id"),
-                                F.col("__shingles").alias("__sb")),
-                     "history_id")
-               .withColumn("jaccard",
-                           F.size(F.array_intersect("__sa", "__sb")) /
-                           F.size(F.array_union("__sa", "__sb")))
-               .filter(F.col("jaccard") >= threshold)
-               .select(F.col("__bid").alias(id_col), "history_id",
-                       "jaccard"))
-    losers = matches.select(id_col).distinct()
-    kept = batch.join(losers, on=id_col, how="left_anti")
+    hist = _side(history, history_signatures, "history_id")
+    matches = (_near_matches(_side(batch, batch_signatures, id_col), hist,
+                             False, num_hashes, bands, hash_family,
+                             threshold)
+               .select(F.col("__id").alias(id_col),
+                       F.col("__oid").alias("history_id"), "jaccard"))
+    kept = batch.join(matches.select(id_col), on=id_col, how="left_anti")
     return kept, matches
 
 

@@ -595,16 +595,19 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
     composition of the incremental-dedup state layer, as a ready
     ``foreachBatch`` callable. Per micro-batch ``b``:
 
-    1. batch-INTERNAL dedup (``batch_internal=True``): exact mode
-       keeps the min-id doc per content key
-       (:func:`~caspr_spark.llm.dedup.exact_dedup`); near mode runs
-       the LSH pass within the batch
-       (:func:`~caspr_spark.llm.dedup.minhash_lsh_dedup`);
-    2. drop docs already in the CORPUS: anti-join against the
-       versioned key table (exact) / banded join against the
-       versioned signature table (near) via
-       :func:`~caspr_spark.llm.dedup.dedup_against_history` — history
-       is never rescanned or self-joined;
+    1. find the batch's duplicates. Exact mode: keep the min-id doc
+       per content key (:func:`~caspr_spark.llm.dedup.exact_dedup`,
+       ``batch_internal=True``), then anti-join the versioned key
+       table (:func:`~caspr_spark.llm.dedup.dedup_against_history`).
+       Near mode: ONE banded join of the batch's band keys against
+       the union of its own band keys (``batch_internal=True``) and
+       the versioned signature table's, then one shingle-Jaccard
+       verification join — a doc is dropped when it verifies against
+       a LOWER batch id (the :func:`~caspr_spark.llm.dedup.minhash_lsh_dedup`
+       greedy rule) or against ANY history doc (the near-mode
+       :func:`~caspr_spark.llm.dedup.dedup_against_history` rule).
+       History is never rescanned or self-joined;
+    2. keep the batch minus those losers (one anti join);
     3. write the kept docs to ``out_dir/k{b}`` (parquet ``_SUCCESS``
        commit; a markerless pre-existing dir is a crashed attempt of
        the SAME batch and is rewritten; an already-MARKED dir means
@@ -637,25 +640,27 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
     hash-only key table (~40 B/doc — a 1e9-doc corpus joins against
     ~40 GB, shuffled on the key, never the text); per-batch writes are
     O(batch). Near mode builds the batch's shingle+minhash signatures
-    ONCE per micro-batch and shares them across the internal LSH dedup
-    and the history banded join (``signatures=`` /
-    ``batch_signatures=`` plumbing); the state fold alone re-derives
-    from the written parquet. ``writer_id`` (pass the checkpoint dir)
-    arms the single-writer lease on the state dir. Kept docs are
-    re-read from the just-written parquet for the fold, so output and
-    state are derived from the same bytes and the batch plan runs
-    once; per-batch caches are released by a ``cache_scope`` around
-    each fold, so a long-lived stream never accumulates stale
-    persisted relations.
+    ONCE per micro-batch; they feed the batch side of the banded join,
+    its verification, and the state fold. The batch-internal and
+    history candidates come from the same banded join over batch ∪
+    history band keys, so the fold plans one candidate pass, not two
+    chained ones (each of which AQE would stage and broadcast on its
+    own). ``writer_id`` (pass the checkpoint dir) arms the
+    single-writer lease on the state dir. Kept docs are re-read from
+    the just-written parquet for the fold, so output and state are
+    derived from the same bytes and the batch plan runs once;
+    per-batch caches are released by a ``cache_scope`` around each
+    fold, so a long-lived stream never accumulates stale persisted
+    relations.
     """
     if mode not in ("exact", "near"):
         raise ValueError(f"mode must be 'exact' or 'near', got {mode!r}")
-    from caspr_spark.llm.dedup import (append_history_keys_state,
+    from caspr_spark.llm.dedup import (_near_matches, _signature_side,
+                                       append_history_keys_state,
                                        append_history_signatures_state,
                                        build_history_signatures,
                                        check_signature_state,
                                        dedup_against_history, exact_dedup,
-                                       minhash_lsh_dedup,
                                        read_history_keys_state,
                                        read_history_signatures_state)
     from caspr_spark.state import (claim_writer, output_committed,
@@ -691,43 +696,27 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
         from caspr_spark.cache import register_cache
 
         kept = batch_df
-        batch_sigs = None
-        if mode == "near":
+        if mode == "exact":
+            if batch_internal:
+                kept = exact_dedup(kept, text_col, id_col, normalize)
+            if committed:
+                kept, _ = dedup_against_history(
+                    kept, None, id_col, text_col, mode="exact",
+                    normalize=normalize,
+                    history_keys=read_history_keys_state(spark, state_dir))
+        else:
             # ONE shingle+minhash pass per micro-batch, shared by the
-            # internal LSH dedup and the history banded join (the
-            # state fold still re-derives signatures from the WRITTEN
-            # kept docs — output and state keep deriving from the
-            # same bytes)
+            # banded join and the state fold
             batch_sigs = register_cache(
                 build_history_signatures(batch_df, id_col, text_col,
                                          num_hashes, shingle_size,
                                          hash_family)
                 .withColumnRenamed("history_id", id_col).persist())
             # withColumnRenamed returns a fresh object — re-attach the
-            # provenance mark so the downstream guards skip their probes
+            # provenance mark so the fold's family guard skips its probe
             batch_sigs._caspr_hash_family = hash_family
-        if batch_internal:
-            kept = (exact_dedup(kept, text_col, id_col, normalize)
-                    if mode == "exact" else
-                    minhash_lsh_dedup(kept, id_col, text_col, num_hashes,
-                                      bands, shingle_size, threshold,
-                                      hash_family=hash_family,
-                                      signatures=batch_sigs)[0])
-        if committed:
-            if mode == "exact":
-                kept, _ = dedup_against_history(
-                    kept, None, id_col, text_col, mode="exact",
-                    normalize=normalize,
-                    history_keys=read_history_keys_state(spark, state_dir))
-            else:
-                bs = (batch_sigs.join(kept.select(id_col), on=id_col,
-                                      how="left_semi")
-                      if batch_internal else batch_sigs)
-                # the join returned a fresh object — re-attach the
-                # provenance mark or the family guard probes per batch
-                # (safe: the sink built these signatures itself)
-                bs._caspr_hash_family = hash_family
-                hs = read_history_signatures_state(spark, state_dir)
+            history = None
+            if committed:
                 if not family_verified:
                     # PRE-WRITE guard (r14 ADVICE): the FIRST history
                     # fold of this sink instance verifies BOTH the
@@ -744,17 +733,17 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
                     check_signature_state(spark, state_dir,
                                           hash_family, num_hashes)
                     family_verified.append(True)
-                # verified (this fold or an earlier one) — attach the
-                # provenance mark so dedup_against_history skips its
-                # own per-batch family probe
-                hs._caspr_hash_family = hash_family
-                kept, _ = dedup_against_history(
-                    kept, None, id_col, text_col, mode="near",
-                    num_hashes=num_hashes, bands=bands,
-                    shingle_size=shingle_size, threshold=threshold,
-                    hash_family=hash_family,
-                    history_signatures=hs,
-                    batch_signatures=bs)
+                history = _signature_side(
+                    read_history_signatures_state(spark, state_dir),
+                    "history_id")
+            if batch_internal or history is not None:
+                matches = _near_matches(
+                    _signature_side(batch_sigs, id_col), history,
+                    batch_internal, num_hashes, bands, hash_family,
+                    threshold)
+                kept = batch_df.join(
+                    matches.select(F.col("__id").alias(id_col)),
+                    on=id_col, how="left_anti")
         out_path = f"{out_dir}/k{batch_id}"
         # A crash BETWEEN the output's _SUCCESS commit and the state
         # fold replays here with the output dir already complete; the
@@ -777,7 +766,7 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
         else:
             # the fold derives its ROW SET from the written bytes
             # (kept_written ids) but reuses the batch's already-computed
-            # signature values instead of a third full shingle+minhash
+            # signature values instead of a second full shingle+minhash
             # pass — deterministic build, so the committed state bytes
             # are identical (regression-tested in test_streaming)
             # check_state=False: the fold-side family/width probe is one

@@ -59,6 +59,40 @@ class TestMinHash:
         assert all(len(r["minhash"]) == 64 for r in s1)
         assert [r["minhash"] for r in s1] == [r["minhash"] for r in s2]
 
+    @pytest.mark.parametrize("hash_family", ["fast", "portable"])
+    @pytest.mark.parametrize("num_hashes", [16, 64])
+    def test_signatures_match_per_slot_reference(self, spark, dup_docs,
+                                                 hash_family, num_hashes):
+        """The one-expression slot aggregate equals the per-slot
+        construction (one aliased ``min`` Column per slot, re-selected
+        into an array) value for value, on both families — the fast
+        family has no DuckDB twin, so nothing else pins its values.
+        Null, empty, whitespace-only and shorter-than-k texts included."""
+        from caspr_spark.llm.dedup import (_MERSENNE31, _base_hash_pair,
+                                           _shingles)
+        edge = spark.createDataFrame(
+            [(7, None), (8, ""), (9, "   "), (10, "word"),
+             (11, "two words"), (12, "three words here")],
+            "doc_id long, text string")
+        docs = dup_docs.unionByName(edge)
+        p = F.lit(_MERSENNE31)
+        h1, h2 = _base_hash_pair(F.col("__s"), hash_family)
+        hashed = (docs.select("doc_id", F.explode(_shingles("text", 3))
+                              .alias("__s"))
+                  .select("doc_id", h1.alias("__h1"), h2.alias("__h2")))
+        mins = [F.min(F.pmod(F.col("__h1") + i * F.col("__h2"), p))
+                .alias(f"__m{i}") for i in range(num_hashes)]
+        ref = (hashed.groupBy("doc_id").agg(*mins)
+               .select("doc_id", F.array(*[f"__m{i}"
+                                           for i in range(num_hashes)])
+                       .alias("sig")))
+        got = minhash_signatures(docs, num_hashes=num_hashes, sig_col="sig",
+                                 hash_family=hash_family)
+        assert got.dtypes == [("doc_id", "bigint"), ("sig", "array<bigint>")]
+        want = {r.doc_id: r.sig for r in ref.collect()}
+        assert {r.doc_id: r.sig for r in got.collect()} == want
+        assert len(want) == 12
+
     def test_identical_docs_identical_sigs(self, dup_docs):
         sigs = {r["doc_id"]: r["minhash"]
                 for r in minhash_signatures(dup_docs).collect()}

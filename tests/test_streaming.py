@@ -1325,3 +1325,150 @@ class TestGramCensusStateSink:
             state_mod.fold_commit(
                 spark, rd, 2, "rebuild", 4,
                 spark.createDataFrame([(2,)], "id long"), merge)
+
+
+def _py_shingle_set(text, k=3):
+    toks = text.lower().split()
+    if len(toks) < k:
+        return {" ".join(toks)}
+    return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+
+
+class TestNearCorpusSinkFold:
+    """The near-mode corpus sink finds batch-internal and history
+    near-duplicates in ONE banded join over batch ∪ history band keys;
+    it must keep exactly what the chained composition kept — the
+    internal LSH pass (``minhash_lsh_dedup``), then the history join
+    (``dedup_against_history``) on the survivors' signatures — and
+    commit the same state frames."""
+
+    H1 = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
+    P = "one two three four five six seven eight nine ten eleven twelve"
+    A = "red orange yellow green blue indigo violet black white grey pink brown"
+    B = A.rsplit(" ", 1)[0] + " cyan"            # A ≈ B (J = 9/11)
+    C = "maroon " + B.split(" ", 1)[1]           # B ≈ C (J = 9/11), A ≉ C
+    N = "lorem ipsum dolor sit amet consectetur adipiscing elit sed do eiusmod"
+    BATCHES = {
+        1: [(1, H1), (2, P), (3, P)],            # internal exact dup, no history
+        2: [(10, H1),                            # matches history only
+            (11, H1.rsplit(" ", 1)[0] + " mike"),  # matches 10 (lower) AND 1
+            (12, A), (13, B),
+            (14, C),                             # matches only B, a loser
+            (15, N), (16, N)],                   # internal exact dup
+    }
+
+    @classmethod
+    def _expected(cls, batch_internal, threshold):
+        """Greedy rule in plain python: a doc is dropped when it reaches
+        ``threshold`` against a lower id of its own batch (loser or
+        not) or against any doc committed by an earlier fold."""
+        history, kept = [], {}
+        for b, rows in sorted(cls.BATCHES.items()):
+            sh = {i: _py_shingle_set(t) for i, t in rows}
+
+            def sim(x, y):
+                return len(x & y) / len(x | y)
+            kept[b] = {i for i in sh
+                       if not any(sim(sh[i], h) >= threshold
+                                  for h in history)
+                       and not (batch_internal and any(
+                           j < i and sim(sh[i], sh[j]) >= threshold
+                           for j in sh))}
+            history += [sh[i] for i in kept[b]]
+        return kept
+
+    @staticmethod
+    def _reference_fold(spark, state, out, batch, batch_id, committed,
+                        batch_internal, hash_family, threshold):
+        from caspr_spark.llm.dedup import (append_history_signatures_state,
+                                           build_history_signatures,
+                                           dedup_against_history,
+                                           minhash_lsh_dedup,
+                                           read_history_signatures_state)
+        sigs = build_history_signatures(
+            batch, "doc_id", "text", 64, 3,
+            hash_family).withColumnRenamed("history_id", "doc_id")
+        sigs._caspr_hash_family = hash_family
+        kept = batch
+        if batch_internal:
+            kept = minhash_lsh_dedup(kept, num_hashes=64, bands=16,
+                                     threshold=threshold,
+                                     hash_family=hash_family,
+                                     signatures=sigs)[0]
+        if committed:
+            bs = (sigs.join(kept.select("doc_id"), "doc_id", "left_semi")
+                  if batch_internal else sigs)
+            bs._caspr_hash_family = hash_family
+            kept = dedup_against_history(
+                kept, None, mode="near", num_hashes=64, bands=16,
+                threshold=threshold, hash_family=hash_family,
+                history_signatures=read_history_signatures_state(spark,
+                                                                 state),
+                batch_signatures=bs)[0]
+        path = f"{out}/k{batch_id}"
+        kept.write.mode("overwrite").parquet(path)
+        written = spark.read.parquet(path)
+        append_history_signatures_state(
+            spark, state, batch_id, written, num_hashes=64,
+            shingle_size=3, hash_family=hash_family, signatures=sigs)
+        return {r.doc_id for r in written.collect()}
+
+    @staticmethod
+    def _frames(spark, state):
+        from caspr_spark.state import state_listing, state_path
+        return {(b, k): sorted((r.history_id, tuple(r.shingles),
+                                tuple(r.minhash), r.hash_family)
+                               for r in spark.read.parquet(
+                                   state_path(state, b, k)).collect())
+                for b, k in state_listing(spark, state)}
+
+    @pytest.mark.parametrize("threshold", [0.8, 1.0])
+    @pytest.mark.parametrize("batch_internal", [True, False])
+    @pytest.mark.parametrize("hash_family", ["fast", "portable"])
+    def test_fold_equals_chained_composition(self, spark, tmp_path,
+                                             hash_family, batch_internal,
+                                             threshold):
+        from caspr_spark.streaming import dedup_corpus_sink
+        kw = dict(hash_family=hash_family, threshold=threshold)
+        sink = dedup_corpus_sink(str(tmp_path / "s"), str(tmp_path / "o"),
+                                 mode="near", batch_internal=batch_internal,
+                                 **kw)
+        got, ref = {}, {}
+        for b, rows in sorted(self.BATCHES.items()):
+            batch = spark.createDataFrame(rows, "doc_id long, text string")
+            sink(batch, b)
+            got[b] = {r.doc_id for r in
+                      spark.read.parquet(str(tmp_path / "o" / f"k{b}"))
+                      .collect()}
+            ref[b] = self._reference_fold(
+                spark, str(tmp_path / "rs"), str(tmp_path / "ro"), batch, b,
+                b > 1, batch_internal, **kw)
+        assert got == ref == self._expected(batch_internal, threshold)
+        assert (self._frames(spark, str(tmp_path / "s"))
+                == self._frames(spark, str(tmp_path / "rs")))
+
+    def test_warm_history_fold_job_budget(self, spark, tmp_path):
+        """A warm near fold against history runs one candidate pass:
+        the chained internal-then-history composition planned the
+        internal LSH result twice and ran 43-45 jobs for this fold; the
+        single banded join runs 22-24."""
+        from caspr_spark.streaming import dedup_corpus_sink
+        sink = dedup_corpus_sink(str(tmp_path / "s"), str(tmp_path / "o"),
+                                 mode="near")
+        batches = [
+            spark.createDataFrame(
+                [(b * 100 + i, f"{self.H1} {b} {i % 3}") for i in range(8)]
+                + [(b * 100 + 50, f"{self.N} {b}")],
+                "doc_id long, text string")
+            for b in range(3)]
+        sink(batches[0], 0)
+        sink(batches[1], 1)          # first history fold: state probe
+        sc = spark.sparkContext
+        sc.setJobGroup("near-fold-budget", "warm near fold")
+        try:
+            sink(batches[2], 2)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = sc.statusTracker().getJobIdsForGroup("near-fold-budget")
+        assert 0 < len(jobs) <= 32, len(jobs)

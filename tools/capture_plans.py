@@ -1,11 +1,11 @@
-"""Capture ``.explain("formatted")`` snapshots for the round-15
-optimization evidence trail.
+"""Capture ``.explain("formatted")`` snapshots for an optimization
+evidence trail.
 
 Usage:
-    python tools/capture_plans_r15.py before q1 q2 ...
-    python tools/capture_plans_r15.py after  q1 q2 ...
+    python tools/capture_plans.py ROUND before q1 q2 ...
+    python tools/capture_plans.py ROUND after  q1 q2 ...
 
-Writes ``plans/r15/<query>_<phase>.txt`` with the formatted physical plan
+Writes ``plans/<ROUND>/<query>_<phase>.txt`` with the formatted physical plan
 of each named ``queries()`` entry, built at $PLAN_SF_DIR (default sf0.1 —
 the scale the bench runs at, so the snapshots show the plan the timings
 correspond to). Construction-time fits/collects run; streaming queries
@@ -20,22 +20,22 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("PLAN_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       "plans", "r15")
+PLANS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                         "plans")
 
 
 def main() -> int:
-    phase = sys.argv[1]
-    names = sys.argv[2:]
-    if phase not in ("before", "after") or not names:
+    if len(sys.argv) < 4 or sys.argv[2] not in ("before", "after"):
         print(__doc__)
         return 2
+    round_name, phase, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    out_dir = os.path.join(PLANS_DIR, round_name)
 
     import __spark_entry__ as entrymod
     from caspr_spark import get_spark
     from caspr_spark.cache import cache_scope
 
-    os.makedirs(OUT_DIR, exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan-capture")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
@@ -48,7 +48,7 @@ def main() -> int:
             except Exception as exc:  # streaming/driver-loop queries
                 print(f"SKIP {name}: {exc}")
                 continue
-        path = os.path.join(OUT_DIR, f"{name}_{phase}.txt")
+        path = os.path.join(out_dir, f"{name}_{phase}.txt")
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path} ({plan.count('Exchange')} Exchange, "
