@@ -20,6 +20,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from caspr_spark.sources import local_frame
+
 
 def linear_ablation_importance(df: DataFrame, weights, vec_col: str = "embedding",
                                dims: list[int] | None = None,
@@ -43,7 +45,7 @@ def linear_ablation_importance(df: DataFrame, weights, vec_col: str = "embedding
 
     rows = [(j, round(float(dev[f"d_{j}"]) * col_norms[j], round_digits))
             for j in dims]
-    return df.sparkSession.createDataFrame(rows, "dim int, importance double")
+    return local_frame(df.sparkSession, rows, "dim int, importance double")
 
 
 def ablation_importance(df: DataFrame, model, seq_len: int, n_seq_cat: int,
@@ -83,7 +85,8 @@ def ablation_importance(df: DataFrame, model, seq_len: int, n_seq_cat: int,
             F.lit(0.0), lambda acc, v: acc + v))
         imp = rescored.agg(F.avg(delta)).collect()[0][0]
         rows.append((j, float(imp or 0.0)))
-    return df.sparkSession.createDataFrame(rows, "feature int, importance double")
+    return local_frame(df.sparkSession, rows,
+                       "feature int, importance double")
 
 
 # --------------------------------------------------------------------------

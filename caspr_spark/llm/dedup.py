@@ -535,20 +535,21 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # vote formulation — both hash families verified value-identical,
     # and the portable family's DuckDB twin (which recomputes the ±1
     # sums directly) still matches.
-    lane = F.lit(0x0000000100000001)
-    n_sums = min(32, bits)
-    sums = [F.sum(F.shiftright(F.col("__h"), b).bitwiseAND(lane))
-            .alias(f"__s{b}") for b in range(n_sums)]
-    agg = hashed.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"), *sums)
-    fp = None
-    for b in range(bits):
-        if b < 32:
-            cnt = F.col(f"__s{b}").bitwiseAND(F.lit(0xFFFFFFFF))
-        else:
-            cnt = F.shiftrightunsigned(F.col(f"__s{b - 32}"), 32)
-        term = F.when(cnt * 2 > F.col("__n"),
-                      F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
-        fp = term if fp is None else fp + term
+    #
+    # Both wide expressions are one SQL string each (one parse instead of
+    # one py4j round-trip per term): the lane sums as one array of
+    # aggregates, the fingerprint as one sum of 0/2^b terms.
+    lane = 0x0000000100000001
+    sums = F.expr("array(" + ", ".join(
+        f"sum(shiftright(__h, {b}) & {lane})"
+        for b in range(min(32, bits))) + ")")
+    agg = hashed.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"),
+                                     sums.alias("__s"))
+    cnts = [f"(__s[{b}] & {0xFFFFFFFF})" if b < 32
+            else f"shiftrightunsigned(__s[{b - 32}], 32)" for b in range(bits)]
+    fp = F.expr(" + ".join(
+        f"CASE WHEN {cnt} * 2 > __n THEN CAST({1 << b} AS BIGINT) "
+        "ELSE CAST(0 AS BIGINT) END" for b, cnt in enumerate(cnts)))
     return agg.select(id_col, fp.alias(out_col))
 
 

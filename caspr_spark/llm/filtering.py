@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from caspr_spark.llm.dedup import BROADCAST_GRAM_LIMIT
+from caspr_spark.sources import local_frame
 
 # --------------------------------------------------------------------------
 # repetition signals (Gopher-style)
@@ -379,12 +380,8 @@ def train_quality_classifier(df: DataFrame, label_col: str,
         use_join = n_buckets >= broadcast_weights_from
         for _ in range(iterations):
             if use_join:
-                import numpy as np
-                import pandas as pd
-
-                wdf = spark.createDataFrame(pd.DataFrame(
-                    {"bucket": np.arange(n_buckets, dtype=np.int32),
-                     "__wq": np.asarray(wq, dtype=np.int64)}))
+                wdf = local_frame(spark, list(enumerate(wq)),
+                                  "bucket int, __wq long")
                 s = (t.join(F.broadcast(wdf), "bucket")
                      .groupBy("__id")
                      .agg(F.sum(F.col("cnt") * F.col("__wq"))
@@ -429,5 +426,4 @@ def train_quality_classifier(df: DataFrame, label_col: str,
         t.unpersist()
     rows = [(-1, int(bias_fx))] + [(b, int(wq[b]))
                                    for b in range(n_buckets)]
-    return df.sparkSession.createDataFrame(rows,
-                                           "bucket int, weight_fx long")
+    return local_frame(df.sparkSession, rows, "bucket int, weight_fx long")

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from caspr_spark.sources import local_frame
+
 
 def confusion_counts(df: DataFrame, label_col: str, pred_col: str) -> DataFrame:
     """(tp, fp, tn, fn) one-row DataFrame; labels/preds are 0/1 ints."""
@@ -92,7 +94,7 @@ def roc_auc(df: DataFrame, label_col: str, score_col: str) -> DataFrame:
         P += int(r["__pt"] or 0)
         N += int(r["__nt"] or 0)
     auc = (A / (2.0 * P * N)) if P and N else None
-    return df.sparkSession.createDataFrame([(auc,)], "auc double")
+    return local_frame(df.sparkSession, [(auc,)], "auc double")
 
 
 def _roc_auc_partials(df: DataFrame, label_col: str,
@@ -247,8 +249,7 @@ def drift_psi(base: DataFrame, current: DataFrame, col: str,
         total += contrib
         rows.append((i, round(pb, 9), round(qb, 9), round(contrib, 9)))
     rows.append((-1, None, None, round(total, 9)))
-    return spark.createDataFrame(
-        rows, "bin int, p double, q double, psi double")
+    return local_frame(spark, rows, "bin int, p double, q double, psi double")
 
 
 def expected_calibration_error(df: DataFrame, label_col: str,

@@ -20,7 +20,10 @@ Scale design vs the reference:
   TakeOrdered: each partition keeps its local top-K, the driver merges.
 - The fitted dictionary is capped at 30k rows per column, far below the
   broadcast threshold, so transform is a **broadcast hash join per column**
-  — zero shuffles of the fact table regardless of its size.
+  — zero shuffles of the fact table regardless of its size. Each
+  dictionary is an Arrow ``LocalRelation`` (``sources.local_frame``), not
+  a parallelized Python list, so its broadcast starts no Python-worker
+  tasks; the joined codes replace the values in one projection.
 - The reference's pandas-UDF variant (preprocess.py:293-352) does an O(V)
   ``list.index`` per value; deliberately not reproduced.
 """
@@ -32,8 +35,11 @@ import logging
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from caspr_spark.operators.pivot import quote
+from caspr_spark.sources import local_frame
 
 MAX_CAT_CARDINALITY = 30000
 PRUNED_ITEMS = "pruned_product"
@@ -63,17 +69,11 @@ class CategoricalEncoding:
 
         One broadcast join per column; original column order preserved.
         """
-        spark = df.sparkSession
-        out_cols = list(df.columns)
-        for c in (cols or self.mappings.keys()):
-            m = self.mappings[c]
-            code_col = f"__{c}_code"
-            map_df = spark.createDataFrame(
-                [(v, k) for v, k in m], schema=f"`{c}` {dict(df.dtypes)[c]}, `{code_col}` int")
-            df = (df.join(F.broadcast(map_df), on=c, how="left")
-                    .withColumn(c, F.coalesce(F.col(code_col), F.lit(UNKNOWN_CODE)))
-                    .drop(code_col))
-        return df.select(*out_cols)
+        dtypes = dict(df.dtypes)
+        tables = {c: local_frame(df.sparkSession, self.mappings[c],
+                                 f"{quote(c)} {dtypes[c]}, {quote(f'__{c}_code')} int")
+                  for c in (cols or self.mappings)}
+        return _lookup(df, tables, "code", str(UNKNOWN_CODE))
 
     def decode(self, df: DataFrame, cols: list[str] | None = None,
                unknown_token: str = "UNK") -> DataFrame:
@@ -82,17 +82,12 @@ class CategoricalEncoding:
         Reference: caspr/utils/spark/preprocess.py:355-370 (pandas-UDF map
         lookup there; broadcast join here).
         """
-        spark = df.sparkSession
-        out_cols = list(df.columns)
-        for c in (cols or self.mappings.keys()):
-            val_col = f"__{c}_val"
-            map_df = spark.createDataFrame(
-                [(k, str(v)) for v, k in self.mappings[c]],
-                schema=f"`{c}` int, `{val_col}` string")
-            df = (df.join(F.broadcast(map_df), on=c, how="left")
-                    .withColumn(c, F.coalesce(F.col(val_col), F.lit(unknown_token)))
-                    .drop(val_col))
-        return df.select(*out_cols)
+        tables = {c: local_frame(df.sparkSession,
+                                 [(k, str(v)) for v, k in self.mappings[c]],
+                                 f"{quote(c)} int, {quote(f'__{c}_val')} string")
+                  for c in (cols or self.mappings)}
+        token = unknown_token.replace("\\", "\\\\").replace("'", "\\'")
+        return _lookup(df, tables, "val", f"'{token}'")
 
     def to_json(self) -> str:
         return json.dumps({"mappings": {c: [[v, k] for v, k in m]
@@ -115,6 +110,20 @@ class CategoricalEncoding:
     def load(cls, path: str) -> "CategoricalEncoding":
         with open(path) as f:
             return cls.from_json(f.read())
+
+
+def _lookup(df: DataFrame, tables: dict[str, DataFrame], tag: str,
+            default: str) -> DataFrame:
+    """Broadcast-join each ``(col, __{col}_{tag})`` lookup table on its
+    column, then ONE projection replaces every looked-up column with
+    ``coalesce(__{col}_{tag}, default)`` (``default`` is a SQL literal)
+    in the original column order."""
+    out_cols = list(df.columns)
+    for c, table in tables.items():
+        df = df.join(F.broadcast(table), on=c, how="left")
+    return df.selectExpr(*[
+        f"coalesce({quote(f'__{c}_{tag}')}, {default}) AS {quote(c)}"
+        if c in tables else quote(c) for c in out_cols])
 
 
 def top_k_by_frequency(df: DataFrame, column: str, k: int) -> DataFrame:
@@ -175,8 +184,8 @@ def fit_encoding(df: DataFrame, cols: list[str],
         kept = df
         for c in over_cap:
             keep_vals = {v for v, _ in enc.mappings[c]}
-            kept_df = df.sparkSession.createDataFrame(
-                [(v,) for v in sorted(keep_vals)], schema=f"`{c}` {dict(df.dtypes)[c]}")
+            kept_df = local_frame(df.sparkSession, [(v,) for v in sorted(keep_vals)],
+                                  f"{quote(c)} {dict(df.dtypes)[c]}")
             kept = kept.join(F.broadcast(kept_df), on=c, how="left_semi")
         kept_count = kept.count()
         enc.stats[PRUNED_ITEMS] = sum(pruned_fracs) / len(pruned_fracs)

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from caspr_spark.sources import local_frame
+
 _RULES = ("not_null", "unique", "in_range", "in_set", "matches",
           "row_count_between")
 
@@ -94,9 +96,10 @@ def validate_expectations(df: DataFrame, rules: list[dict]) -> DataFrame:
                int(row[f"c_{i}"]), int(row[f"v_{i}"]),
                int(row[f"v_{i}"]) == 0)
               for i, r in enumerate(rules)]
-    return df.sparkSession.createDataFrame(
-        report, "rule_id int, rule string, column string, "
-                "n_checked bigint, n_violations bigint, passed boolean")
+    return local_frame(
+        df.sparkSession, report,
+        "rule_id int, rule string, column string, "
+        "n_checked bigint, n_violations bigint, passed boolean")
 
 
 def _sq(v) -> str:

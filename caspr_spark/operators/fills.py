@@ -24,7 +24,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from caspr_spark.operators.scale import Summary, normalize_columns, normalize_value
+from caspr_spark.operators.scale import Summary, normalize_value, scaled
 
 _PIVOTED = re.compile(r"(\d+)_(\w+)")
 
@@ -42,37 +42,31 @@ def fill_date_nans(df: DataFrame, date_cols: list[str], history_days: int = 365,
     if not interval and prediction_date not in df.columns:
         raise ValueError(f"{prediction_date!r} not found in the DataFrame")
 
-    if summary_date is None:
-        if interval:
-            return df.fillna(history_days, subset=date_cols)
-        default = F.unix_timestamp(F.date_sub(F.col(prediction_date), history_days))
-        for c in date_cols:
-            # fill nulls only — non-null values and the column dtype are
-            # preserved (the epoch feature is a double in this engine)
-            df = df.withColumn(
-                c, F.coalesce(F.col(c), default.cast(dict(df.dtypes)[c])))
-        return df
-
     if interval:
-        for c in date_cols:
-            df = df.fillna(
-                normalize_value(history_days, _base_name(c), summary_date, scaling),
-                subset=[c])
-        return df
+        # one fillna over every date column: the raw day count, or its
+        # normalized value under each base column's summary
+        if summary_date is None:
+            return df.fillna(history_days, subset=date_cols)
+        return df.fillna({c: float(normalize_value(history_days, _base_name(c),
+                                                   summary_date, scaling))
+                          for c in date_cols})
 
-    # absolute mode with summary: fill with the *normalized* start-of-window
-    # epoch of each base date column (reference preprocess.py:115-134)
-    base_cols = sorted({_base_name(c) for c in date_cols})
-    sow = {b: f"__start_of_window_{b}" for b in base_cols}
-    for b in base_cols:
-        df = df.withColumn(
-            sow[b], F.unix_timestamp(F.date_sub(F.col(prediction_date), history_days))
-                     .cast("double"))
-    sow_summary = {sow[b]: summary_date[b] for b in base_cols}
-    df, _ = normalize_columns(df, list(sow.values()), sow_summary, scaling)
+    # absolute mode: fill nulls only — non-null values and the column
+    # dtype are preserved (the epoch feature is a double in this engine).
+    # With a summary the fill is the *normalized* start-of-window epoch of
+    # each base date column (reference preprocess.py:115-134).
+    start = F.unix_timestamp(F.date_sub(F.col(prediction_date), history_days))
+    dtypes = dict(df.dtypes)
+    fills = {}
     for c in date_cols:
-        df = df.withColumn(c, F.coalesce(F.col(c), F.col(sow[_base_name(c)])))
-    return df.drop(*sow.values())
+        if summary_date is None:
+            fill = start.cast(dtypes[c])
+        else:
+            sow = start.cast("double")
+            fill = scaled(sow, summary_date[_base_name(c)], scaling)
+            fill = sow if fill is None else fill
+        fills[c] = F.coalesce(F.col(c), fill)
+    return df.withColumns(fills) if fills else df
 
 
 def fill_nans(df: DataFrame, cat_cols: list[str] | None = None,
@@ -84,12 +78,12 @@ def fill_nans(df: DataFrame, cat_cols: list[str] | None = None,
     """Date nulls -> start-of-window; categorical/continuous nulls -> 0 (E9).
 
     Reference: ``fill_nans_sp`` (caspr/utils/spark/preprocess.py:138-158).
+    One projection for the date fills and one ``fillna`` for the zeros.
     """
     if date_cols:
         df = fill_date_nans(df, date_cols, history_days, prediction_date,
                             interval, summary_date, scaling)
-    if cont_cols:
-        df = df.fillna(0, subset=cont_cols)
-    if cat_cols:
-        df = df.fillna(0, subset=cat_cols)
+    zeros = list(cont_cols or []) + list(cat_cols or [])
+    if zeros:
+        df = df.fillna(0, subset=zeros)
     return df

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from caspr_spark.cache import checkpoint_leaf, register_cache
+from caspr_spark.sources import local_frame
 
 FP_SCALE = 1_000_000_000_000  # 1e12 fixed-point contribution scale
 
@@ -78,8 +79,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         # a FRESH empty relation, not a projection of the just-released
         # checkpoint (whose truncated lineage cannot recompute)
         spark = edges.sparkSession
-        return spark.createDataFrame(
-            [], schema=nodes.select(F.col("id").alias(id_out)).schema) \
+        return local_frame(
+            spark, [], nodes.select(F.col("id").alias(id_out)).schema) \
             .withColumn(rank_out, F.lit(0.0))
     deg = e.groupBy(F.col("src").alias("id")) \
            .agg(F.count(F.lit(1)).alias("deg"))

@@ -34,6 +34,11 @@ from pyspark.sql import functions as F
 _P6 = re.compile(r"(\d+)_(\w+)")
 
 
+def quote(name: str) -> str:
+    """``name`` as a backquoted SQL identifier (for ``selectExpr``)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def add_pad_shift(df: DataFrame, n: int, left_pad: bool = False,
                   slot_col: str = "rank") -> DataFrame:
     """Compute the padding shift and target slot (P1); needs get_rank columns."""
@@ -111,32 +116,31 @@ def collect_sequences(df: DataFrame, tgt_id: list[str], n: int,
     if "rank_desc" not in df.columns:
         raise ValueError("call get_rank before collect_sequences")
 
-    df = df.filter(F.col("rank_desc") <= n)
-
-    entry = F.struct(F.col("rank_desc").cast("int").alias("slot"),
-                     F.struct(*[F.col(c).alias(c) for c in seq_cols]).alias("vals"))
-    packed = df.groupBy(*tgt_id).agg(
-        F.map_from_entries(F.collect_list(entry)).alias("__slots"),
+    vals = ", ".join(f"{quote(c)} AS {quote(c)}" for c in seq_cols)
+    packed = df.filter(f"rank_desc <= {n}").groupBy(*tgt_id).agg(
+        F.expr("map_from_entries(collect_list(struct(CAST(rank_desc AS INT) "
+               f"AS slot, struct({vals}) AS vals)))").alias("__slots"),
         *(extra_aggs or []))
-    idx = F.sequence(F.lit(1), F.lit(n))
-    # slot i <- rank_desc key; missing keys (the pad region) yield NULL
-    key_base = F.lit(n + 1) if left_pad else F.size("__slots") + 1
-    for c in seq_cols:
-        packed = packed.withColumn(
-            f"{c}{seq_suffix}",
-            F.transform(idx, lambda i: F.element_at(F.col("__slots"),
-                                                    (key_base - i).cast("int"))[c]))
-    return packed.drop("__slots")
+    # slot i <- rank_desc key; missing keys (the pad region) yield NULL.
+    # Every sequence is one SQL higher-order expression, and all of them
+    # are one projection.
+    key_base = str(n + 1) if left_pad else "size(__slots) + 1"
+    seqs = [f"transform(sequence(1, {n}), i -> element_at(__slots, "
+            f"CAST({key_base} - i AS INT)).{quote(c)}) AS {quote(c + seq_suffix)}"
+            for c in seq_cols]
+    return packed.selectExpr(
+        *[quote(c) for c in packed.columns if c != "__slots"], *seqs)
 
 
 def sequences_to_wide(df: DataFrame, seq_cols: list[str], n: int,
                       seq_suffix: str = "_seq", drop_arrays: bool = True) -> DataFrame:
-    """Materialize array-layout sequences into flat ``{slot}_{col}`` columns."""
-    exprs = [F.col(c) for c in df.columns if not (drop_arrays and c.endswith(seq_suffix))]
-    for c in seq_cols:
-        arr = f"{c}{seq_suffix}"
-        exprs += [F.col(arr)[s - 1].alias(f"{s}_{c}") for s in range(1, n + 1)]
-    return df.select(*exprs)
+    """Materialize array-layout sequences into flat ``{slot}_{col}`` columns
+    (one projection)."""
+    exprs = [quote(c) for c in df.columns
+             if not (drop_arrays and c.endswith(seq_suffix))]
+    exprs += [f"{quote(c + seq_suffix)}[{s - 1}] AS {quote(f'{s}_{c}')}"
+              for c in seq_cols for s in range(1, n + 1)]
+    return df.selectExpr(*exprs)
 
 
 def pack_feature_arrays(df: DataFrame, cont_cols: list[str] | None = None,

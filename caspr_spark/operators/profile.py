@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from caspr_spark.cache import register_cache
+from caspr_spark.sources import local_frame
 
 
 def profile_table(df: DataFrame, cols: list[str] | None = None,
@@ -78,8 +79,8 @@ def profile_table(df: DataFrame, cols: list[str] | None = None,
             (c, "min", row[f"mn_{c}"]),
             (c, "max", row[f"mx_{c}"]),
         ]
-    out = spark.createDataFrame(scalar_rows,
-                                "column string, metric string, value string")
+    out = local_frame(spark, scalar_rows,
+                      "column string, metric string, value string")
     if not include_modal:
         return out
     melted = df.select(F.explode(F.array(*[
@@ -150,8 +151,9 @@ def covariance_matrix(df: DataFrame, cols: list[str],
                 corr = cov / (va ** 0.5 * vb ** 0.5) \
                     if va > 0 and vb > 0 else None
             out.append((a, b, cov, corr))
-    return df.sparkSession.createDataFrame(
-        out, "col_a string, col_b string, cov double, corr double")
+    return local_frame(
+        df.sparkSession, out,
+        "col_a string, col_b string, cov double, corr double")
 
 
 def diagnose_skew(df: DataFrame, keys: list[str], top_n: int = 10) -> DataFrame:
@@ -239,7 +241,8 @@ def histogram(df: DataFrame, col: str, bins: int = 20,
     counts = (df.filter(keep).select(idx.alias("bin"))
                 .groupBy("bin").agg(F.count(F.lit(1)).alias("cnt")))
     spark = df.sparkSession
-    edges = spark.createDataFrame(
+    edges = local_frame(
+        spark,
         [(b, lo + b * width, hi if b == bins - 1 else lo + (b + 1) * width)
          for b in range(bins)], "bin int, lo_edge double, hi_edge double")
     return (edges.join(counts, on="bin", how="left")

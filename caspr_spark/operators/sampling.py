@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from caspr_spark.cache import (checkpoint_leaf, register_cache,
                                strict_scope_active)
+from caspr_spark.sources import local_frame
 
 # hex prefix length used for thresholding: 8 nibbles = 32 bits of the
 # md5, plenty of resolution for any practical fraction
@@ -227,7 +228,7 @@ def global_running_sum(df: DataFrame, value_col: str, order_by: list,
         offsets.append((pid, acc))
         acc += totals[pid] or 0
     spark = df.sparkSession
-    off = F.broadcast(spark.createDataFrame(offsets, "__pid int, __off long")) \
+    off = F.broadcast(local_frame(spark, offsets, "__pid int, __off long")) \
         if offsets else None
     w = (Window.partitionBy("__pid").orderBy(*args)
                .rowsBetween(Window.unboundedPreceding, Window.currentRow))

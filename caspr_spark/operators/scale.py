@@ -71,20 +71,29 @@ def normalize_columns(df: DataFrame, cols: list[str], summary: Summary | None = 
     _check_scaling(scaling)
     if summary is None:
         summary = fit_summary(df, cols)
+    exprs = {}
     for c in cols:
-        s = summary[c]
-        if scaling == "min_max":
-            if s["min"] == s["max"]:
-                logger.info("no variance to normalize, consider dropping: %s", c)
-                continue
-            expr = (F.col(c) - F.lit(s["min"])) / F.lit(s["max"] - s["min"])
+        expr = scaled(F.col(c), summary[c], scaling)
+        if expr is None:
+            logger.info("no variance to normalize, consider dropping: %s", c)
         else:
-            if not s["stddev"]:
-                logger.info("no variance to normalize, consider dropping: %s", c)
-                continue
-            expr = (F.col(c) - F.lit(s["mean"])) / F.lit(s["stddev"])
-        df = df.withColumn(c, expr.cast("double"))
-    return df, summary
+            exprs[c] = expr
+    return (df.withColumns(exprs) if exprs else df), summary
+
+
+def scaled(expr, s: dict[str, float], scaling: str = "min_max"):
+    """``expr`` scaled by one column's fitted summary ``s``, as a double;
+    ``None`` on zero variance (the column is left untouched)."""
+    _check_scaling(scaling)
+    if scaling == "min_max":
+        if s["min"] == s["max"]:
+            return None
+        out = (expr - F.lit(s["min"])) / F.lit(s["max"] - s["min"])
+    else:
+        if not s["stddev"]:
+            return None
+        out = (expr - F.lit(s["mean"])) / F.lit(s["stddev"])
+    return out.cast("double")
 
 
 def denormalize_columns(df: DataFrame, cols: list[str], summary: Summary,

@@ -27,6 +27,13 @@ capped at 30k rows); scaling/fills are pure expressions inside
 whole-stage codegen. The reference's mid-pipeline ``repartition``
 (preprocess.py:594-596) is unnecessary here — broadcast joins never skew
 the fact table.
+
+The featurization starts no Python workers: the encode dictionaries are
+Arrow local relations (``sources.local_frame``), not parallelized Python
+lists, and every expression is native. Each stage (encode, scale, fills,
+sequences, layout projection) is one projection, and the per-column and
+per-slot expressions are SQL text, so constructing the plan costs about
+one py4j round-trip per output column rather than several.
 """
 
 from __future__ import annotations
@@ -46,7 +53,8 @@ from caspr_spark.operators.encode import (CategoricalEncoding, fit_encoding,
                                           MAX_CAT_CARDINALITY)
 from caspr_spark.operators.fills import fill_nans
 from caspr_spark.operators.filters import filter_history_window, filter_last_n
-from caspr_spark.operators.pivot import collect_sequences, sequences_to_wide
+from caspr_spark.operators.pivot import (collect_sequences, quote,
+                                         sequences_to_wide)
 from caspr_spark.operators.scale import (Summary, fit_summary, load_summary,
                                          normalize_columns, save_summary)
 
@@ -263,11 +271,11 @@ class SequenceFeaturizerModel:
         else:
             # the reference pivot's slot-major order (tgt_id,
             # {slot}_{col}..., profile) and its null-key drop
-            exprs = [F.col(c) for c in r.tgt_id]
-            exprs += [F.col(f"{c}_seq")[s - 1].alias(f"{s}_{c}")
-                      for s in range(1, p.seq_len + 1) for c in r.seq_cols]
-            exprs += [F.col(c) for c in prof_vals]
-            wide = feat.na.drop(subset=r.tgt_id).select(*exprs)
+            wide = feat.na.drop(subset=r.tgt_id).selectExpr(
+                *map(quote, r.tgt_id),
+                *[f"{quote(c + '_seq')}[{s - 1}] AS {quote(f'{s}_{c}')}"
+                  for s in range(1, p.seq_len + 1) for c in r.seq_cols],
+                *map(quote, prof_vals))
 
         cat_w, cont_w, _, _, date_w = r.wide_lists(p.seq_len, p.left_pad)
         present = set(wide.columns)

@@ -6,8 +6,10 @@ join strategies (a broadcast join silently degrading to sort-merge is the
 classic scale regression), Python-eval nodes in hot paths (row-at-a-time
 Python kills throughput; Arrow-batched ``mapInPandas``/``applyInPandas``
 nodes are counted separately because they are the *intended* slow path
-for custom kernels), and ``WindowGroupLimit`` pushdown (without it a
-top-K window sorts every partition fully).
+for custom kernels), scans of parallelized Python collections
+(``rdd_scans``: their tasks start Python workers), and
+``WindowGroupLimit`` pushdown (without it a top-K window sorts every
+partition fully).
 
 ``tests/plan_snapshots.json`` pins these digests for the headline bench
 queries; ``tools/gen_plan_snapshots.py`` regenerates it after an
@@ -42,6 +44,10 @@ _TRACKED = {
 }
 
 _NODE_RE = re.compile(r"^\s*\(\d+\)\s+([A-Za-z]+)", re.MULTILINE)
+# a scan of a parallelized Python collection (``createDataFrame`` of
+# Python rows): its tasks run in Python workers. ``_NODE_RE`` captures
+# only the first word (``Scan``), so this node has its own match.
+_RDD_SCAN_RE = re.compile(r"^\s*\(\d+\)\s+Scan ExistingRDD\b", re.MULTILINE)
 
 
 def plan_text(df: DataFrame) -> str:
@@ -66,4 +72,5 @@ def plan_digest(df: DataFrame) -> dict[str, int]:
         key = _TRACKED.get(name)
         if key:
             out[key] += 1
+    out["rdd_scans"] = len(_RDD_SCAN_RE.findall(text))
     return out

@@ -91,33 +91,96 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A driver-built table as an Arrow ``LocalRelation``.
+
+    ``spark.createDataFrame(list_of_rows)`` parallelizes a Python RDD
+    (``ParallelCollectionRDD → PythonRDD``): every action over it, a
+    broadcast included, starts Python-worker tasks, and its lineage has
+    no SQL metric. A ``pyarrow.Table`` becomes a ``LocalRelation`` at
+    every size, empty included, so the frame lives in the JVM only.
+    (An empty pandas frame, or one Arrow cannot convert, silently falls
+    back to the Python RDD — hence a table, never pandas.)
+
+    ``rows`` are tuples in ``schema`` field order; ``schema`` is a DDL
+    string or ``StructType``. Timestamps convert exactly as on the row
+    path (``TimestampType.toInternal``: naive values in the driver's
+    local zone).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (StructType, TimestampNTZType,
+                                   TimestampType, _parse_datatype_string)
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    arrays = []
+    for i, (field, typ) in enumerate(zip(schema.fields, arrow.types)):
+        vals = [r[i] for r in rows]
+        if isinstance(field.dataType, (TimestampType, TimestampNTZType)):
+            micros = [field.dataType.toInternal(v) for v in vals]
+            arrays.append(pa.array(micros, pa.int64()).cast(typ))
+        else:
+            arrays.append(pa.array(vals, typ))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow),
+                                 schema)
+
+
 def load_tables(spark: SparkSession, sf_dir: str,
                 names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
     """Read the driver's test tables under ``sf_dir`` into a dict."""
     return {n: read_parquet_table(spark, f"{sf_dir}/{n}.parquet") for n in names}
 
 
-# (canonicalized-plan string, applicationId) -> (n_partitions, sizeInBytes).
+# (canonicalized-plan string, input files, file-split confs,
+#  defaultParallelism, applicationId) -> (n_partitions, sizeInBytes).
 # The partition-count probe below costs ~50 ms of driver-side PHYSICAL
-# PLANNING per fresh DataFrame (r15 "not yet optimized" item; dozens of
-# probes per bench pass, most over identical plans — the same base-table
-# scan probed by every operator that consumes it). Two semantically equal
-# plans in one application yield the same scan partitioning (same files,
-# same session confs), so the probe result is memoizable by the CANONICAL
-# plan text — the full string, not a 32-bit semanticHash, because a hash
-# collision here would silently change a repartition decision and with it
-# the float-summation order of certified queries. The memo changes NO
-# decisions: cache hits return exactly what the probe would have (and did)
-# return. Contract (holds engine-wide): parquet dirs are immutable once
-# written — versioned state frames supersede-then-delete under NEW paths,
-# corpus output dirs are write-once — so a path's file set never changes
-# under one application while a same-plan re-read occurs.
-_NPARTS_CACHE: dict[tuple[str, str], tuple[int, int | None]] = {}
+# PLANNING per fresh DataFrame (dozens of probes per bench pass, most
+# over identical plans — the same base-table scan probed by every
+# operator that consumes it). The memo serves only plans whose every
+# leaf is a file relation: the canonical text prints neither a file
+# relation's paths (``Relation [none#0L] parquet``) nor a local
+# relation's rows (``LocalRelation [none#0L]``), so the key adds the
+# plan's input files and the confs that split them into partitions,
+# and plans rooted in anything else (local relations, RDDs, ranges)
+# always probe. Within that scope two equal keys scan the same files
+# into the same splits, so a hit returns exactly what the probe would
+# (the full canonical string, not a 32-bit semanticHash: a collision
+# here would silently change a repartition decision and with it the
+# float-summation order of certified queries). Files are keyed by path
+# alone: parquet dirs are write-once in this engine (versioned state
+# frames supersede under NEW paths, corpus output dirs are write-once)
+# and Spark names every written file uniquely.
+_NPARTS_CACHE: dict[tuple, tuple[int, int | None]] = {}
 _NPARTS_CACHE_MAX = 1024
+_NPARTS_CONFS = ("spark.sql.files.maxPartitionBytes",
+                 "spark.sql.files.openCostInBytes",
+                 "spark.sql.shuffle.partitions")
 # probe telemetry (driver-side ints, no jobs): calls vs physical-planning
-# probes actually paid — the r16 done-criterion evidence ("probe count in
-# a bench trace drops to ≤ once per source relation")
+# probes actually paid
 _NPARTS_STATS = {"calls": 0, "misses": 0}
+
+
+def _nparts_key(df: DataFrame) -> tuple | None:
+    """``ensure_parallelism``'s memo key, or None unless every leaf of
+    the analyzed plan is a file relation."""
+    plan = df._jdf.queryExecution().analyzed()
+    leaves = plan.collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if (leaf.getClass().getSimpleName() != "LogicalRelation"
+                or leaf.relation().getClass().getSimpleName()
+                != "HadoopFsRelation"):
+            return None
+    spark = df.sparkSession
+    files = (spark._jvm.scala.collection.immutable.ArraySeq
+             .unsafeWrapArray(df._jdf.inputFiles()).mkString("\n"))
+    sc = spark.sparkContext
+    return (plan.canonicalized().toString(), files,
+            tuple(spark.conf.get(k) for k in _NPARTS_CONFS),
+            sc.defaultParallelism, sc.applicationId)
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None,
@@ -138,20 +201,20 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None,
     bytes-per-task heuristic under-parallelizes badly (shingling 5k docs
     is minutes of CPU on single-digit MB of input).
 
-    Probe results are memoized per canonical plan (``_NPARTS_CACHE``):
-    repeat probes of a semantically identical frame skip the physical
-    planning, returning the identical count — the repartition DECISION
-    (and hence certified partition layouts) is unchanged by construction.
+    Probe results of file-rooted plans are memoized (``_NPARTS_CACHE``,
+    keyed by canonical plan, input files and split confs): repeat probes
+    of a semantically identical frame over the same files skip the
+    physical planning, returning the identical count — the repartition
+    DECISION (and hence certified partition layouts) is unchanged by
+    construction.
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     _NPARTS_STATS["calls"] += 1
     key = None
     try:
-        key = (df._jdf.queryExecution().analyzed().canonicalized()
-               .toString(),
-               df.sparkSession.sparkContext.applicationId)
+        key = _nparts_key(df)
     except Exception:
-        pass
+        pass  # e.g. a streaming plan: probe without the memo
     hit = _NPARTS_CACHE.get(key) if key is not None else None
     n = hit[0] if hit is not None else None
     size = hit[1] if hit is not None else None

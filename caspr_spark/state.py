@@ -45,6 +45,8 @@ from __future__ import annotations
 import json
 import uuid
 
+from caspr_spark.sources import local_frame
+
 _KINDS = {"v": "full", "c": "compact", "d": "delta"}
 _PREFIX = {v: k for k, v in _KINDS.items()}
 
@@ -647,6 +649,7 @@ def expect_state(spark, state_dirs: list[str], rules: list[dict],
         for i, rule in enumerate(rules):
             observed, passed = _state_rule_check(desc, rule, now)
             report.append((d, i, rule["rule"], observed, bool(passed)))
-    return spark.createDataFrame(
-        report, "state_dir string, rule_id int, rule string, "
-                "observed string, passed boolean")
+    return local_frame(
+        spark, report,
+        "state_dir string, rule_id int, rule string, "
+        "observed string, passed boolean")

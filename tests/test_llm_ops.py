@@ -217,6 +217,34 @@ class TestSimHash:
                     expect |= 1 << b
             assert fps[doc_id] == expect, doc_id
 
+    @pytest.mark.parametrize("hash_family,bits",
+                             [("fast", 63), ("fast", 20), ("portable", 60)])
+    def test_matches_per_bit_reference(self, spark, dup_docs, hash_family,
+                                       bits):
+        """The two one-expression builds (lane sums, fingerprint) equal a
+        per-bit construction: one ±1 vote-sum aggregate per bit, one
+        ``when`` term per bit — bit for bit, on both families. Null,
+        empty, whitespace-only and one-word texts included."""
+        from caspr_spark.llm.dedup import _md5_60
+        edge = spark.createDataFrame(
+            [(7, None), (8, ""), (9, "   "), (10, "word"),
+             (11, "Two  words")], "doc_id long, text string")
+        docs = dup_docs.unionByName(edge)
+        toks = docs.select("doc_id", F.explode(F.split(
+            F.lower(F.trim("text")), r"\s+")).alias("t"))
+        h = F.xxhash64("t") if hash_family == "fast" else _md5_60(F.col("t"))
+        hashed = toks.select("doc_id", h.alias("h"))
+        votes = hashed.groupBy("doc_id").agg(*[
+            F.sum(F.when(F.shiftright("h", b).bitwiseAND(1) == 1, 1)
+                  .otherwise(-1)).alias(f"v{b}") for b in range(bits)])
+        ref = {r["doc_id"]: sum(1 << b for b in range(bits)
+                                if r[f"v{b}"] > 0)
+               for r in votes.collect()}
+        got = simhash(docs, bits=bits, hash_family=hash_family)
+        assert got.dtypes == [("doc_id", "bigint"), ("simhash", "bigint")]
+        assert {r["doc_id"]: r["simhash"] for r in got.collect()} == ref
+        assert len(ref) == 10   # the null text explodes to no token
+
     def test_portable_bit_and_family_validation(self, dup_docs):
         with pytest.raises(ValueError, match="60 hash bits"):
             simhash(dup_docs, bits=63, hash_family="portable")

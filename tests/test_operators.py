@@ -101,6 +101,15 @@ class TestEncoding:
             assert got[eid] == v
         assert got[40] == "UNK"        # null encoded to 0 -> decodes to UNK
 
+    @pytest.mark.parametrize("token", ["it's", "back\\slash\\'", "ü\n?"])
+    def test_decode_unknown_token_verbatim(self, micro_events, token):
+        """The unknown token reaches the projection as a SQL literal;
+        quotes, backslashes and newlines come back unchanged."""
+        enc = fit_encoding(micro_events, ["cat"])
+        decoded = enc.decode(enc.apply(micro_events), unknown_token=token)
+        got = {r["event_id"]: r["cat"] for r in decoded.collect()}
+        assert got[40] == token
+
     def test_json_roundtrip(self, micro_events):
         enc = fit_encoding(micro_events, ["cat"])
         enc2 = CategoricalEncoding.from_json(enc.to_json())

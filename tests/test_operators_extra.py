@@ -415,6 +415,48 @@ class TestEnsureParallelismCache:
         ensure_parallelism(spark.read.parquet(p).select("id"))
         assert len(_NPARTS_CACHE) == n_cache + 1
 
+    def test_probe_memo_keys_on_input_files(self, spark, tmp_path):
+        """Two parquet dirs with the same schema analyze to the same
+        canonical plan (``Relation [none#0L] parquet`` prints no path),
+        but split into different partition counts: the second probe must
+        not reuse the first's count. A repeat read of either dir still
+        hits the memo."""
+        from caspr_spark.sources import (_NPARTS_CACHE, _NPARTS_STATS,
+                                         ensure_parallelism)
+        one, six = str(tmp_path / "one"), str(tmp_path / "six")
+        spark.range(60).coalesce(1).write.parquet(one)
+        spark.range(60).repartition(6).write.parquet(six)
+        assert spark.read.parquet(one).rdd.getNumPartitions() == 1
+        n = spark.read.parquet(six).rdd.getNumPartitions()
+        assert n > 1
+        _NPARTS_CACHE.clear()
+        a = spark.read.parquet(one)
+        assert ensure_parallelism(a, n) is not a        # 1 < n: widened
+        b = spark.read.parquet(six)
+        assert ensure_parallelism(b, n) is b            # n >= n: as is
+        misses = _NPARTS_STATS["misses"]
+        again = spark.read.parquet(six)
+        assert ensure_parallelism(again, n) is again
+        assert _NPARTS_STATS["misses"] == misses        # memo hit
+        assert len(_NPARTS_CACHE) == 2
+
+    def test_probe_memo_skips_local_relations(self, spark):
+        """Local relations of 1 and many rows print the same canonical
+        plan (``LocalRelation [none#0L]``) but have 1 and
+        ``defaultParallelism`` partitions: each must be probed."""
+        import pyarrow as pa
+
+        from caspr_spark.sources import _NPARTS_CACHE, ensure_parallelism
+        dp = spark.sparkContext.defaultParallelism
+        assert dp > 1
+        small = spark.createDataFrame(pa.table({"a": [1]}), "a long")
+        big = spark.createDataFrame(pa.table({"a": list(range(2 * dp))}),
+                                    "a long")
+        _NPARTS_CACHE.clear()
+        assert ensure_parallelism(small) is not small
+        assert ensure_parallelism(big) is big
+        assert not _NPARTS_CACHE
+
     def test_schema_memo_invalidates_on_rewrite(self, spark, tmp_path):
         """Round-16 schema memo: a repeat read of an unchanged path is
         schema-pinned (cache hit) and identical; overwriting the path

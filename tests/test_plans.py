@@ -225,6 +225,17 @@ class TestPlanSnapshots:
             f"plan drift in {name}: {got} != pinned {self.SNAPSHOTS[name]} "
             "— if intentional, regenerate via tools/gen_plan_snapshots.py")
 
+    def test_featurization_is_jvm_only(self):
+        """No pinned featurization plan scans a parallelized Python
+        collection or evaluates a Python UDF: the whole CASPR pipeline
+        (lookup tables included) starts no Python worker."""
+        pipes = {n: d for n, d in self.SNAPSHOTS.items()
+                 if n.startswith("pipeline_")}
+        assert len(pipes) >= 5
+        for name, d in pipes.items():
+            assert d["rdd_scans"] == 0, name
+            assert d["python_evals"] == 0, name
+
 
 class TestRocAucPlan:
     def test_no_single_task_global_window(self, embeddings):
