@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -66,10 +67,12 @@ def fit_pq(df: DataFrame, vec_col: str = "embedding", dim: int = 64,
     # Spark jobs instead of serializing m iterative KMeans runs (each
     # fit's per-iteration jobs are small, so the scheduler interleaves
     # them across the executor pool; results are seed-deterministic
-    # per subspace regardless of completion order).
+    # per subspace regardless of completion order). The wrapper gives
+    # each pool thread the caller's job group and description.
     from concurrent.futures import ThreadPoolExecutor
+    fit_one = inheritable_thread_target(df.sparkSession)(_fit_one)
     with ThreadPoolExecutor(max_workers=min(m, 8)) as pool:
-        for j, centers in enumerate(pool.map(_fit_one, range(m))):
+        for j, centers in enumerate(pool.map(fit_one, range(m))):
             codebooks[j] = centers
     return codebooks
 

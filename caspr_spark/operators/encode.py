@@ -15,9 +15,11 @@ Semantics (reference: caspr/utils/spark/preprocess.py:237-290
 Scale design vs the reference:
 
 - The reference ranks via a **global unpartitioned window** over the
-  grouped counts (preprocess.py:247) — a single-task sort. We use
-  ``orderBy(...).limit(K)`` instead, which Spark executes as a distributed
-  TakeOrdered: each partition keeps its local top-K, the driver merges.
+  grouped counts (preprocess.py:247) — a single-task sort, a job per
+  column. Here one ``GROUPING SETS ((c1), ..., (cn), ())`` aggregate
+  counts every column (the ``()`` row holds the row total and the
+  featurizer's scaling summary), and a ``row_number`` per set, planned
+  as a partial ``WindowGroupLimit``, keeps the top K before the exchange.
 - The fitted dictionary is capped at 30k rows per column, far below the
   broadcast threshold, so transform is a **broadcast hash join per column**
   — zero shuffles of the fact table regardless of its size. Each
@@ -39,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from caspr_spark.operators.pivot import quote
+from caspr_spark.operators.scale import (Summary, fit_summary, read_summary,
+                                         summary_aggs)
 from caspr_spark.sources import local_frame
 
 MAX_CAT_CARDINALITY = 30000
@@ -143,54 +147,73 @@ def top_k_by_frequency(df: DataFrame, column: str, k: int) -> DataFrame:
 def fit_encoding(df: DataFrame, cols: list[str],
                  max_cardinality: int = MAX_CAT_CARDINALITY) -> CategoricalEncoding:
     """Fit frequency-ranked capped dictionaries for ``cols`` (E1 fit phase)."""
+    return fit_encoding_with_summary(df, cols, [], max_cardinality)[0]
+
+
+def fit_encoding_with_summary(df: DataFrame, cat_cols: list[str],
+                              stat_cols: list[str],
+                              max_cardinality: int = MAX_CAT_CARDINALITY
+                              ) -> tuple[CategoricalEncoding, Summary]:
+    """E1 dictionaries for ``cat_cols`` and the E5 :data:`Summary` of
+    ``stat_cols`` from one aggregate, collected once (module docstring).
+    Filling the cap costs a job for the true distinct counts; exceeding
+    it, one more to count the rows that keep every value."""
+    if max_cardinality < 1:
+        raise ValueError(f"max_cardinality must be >= 1, got {max_cardinality}")
     enc = CategoricalEncoding()
-    if not cols:
-        return enc
+    if not cat_cols:
+        return enc, fit_summary(df, stat_cols)
 
-    # one TakeOrdered job per column, submitted concurrently — Spark's
-    # scheduler interleaves them, so a 3-cat-col fit costs ~1 job latency
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=min(len(cols), 8)) as pool:
-        tops = list(pool.map(
-            lambda c: top_k_by_frequency(df, c, max_cardinality).collect(), cols))
+    # grouping_id(), not a null test, tells a column's own null group
+    # from the nulls that pad the other grouping sets
+    total_gid = (1 << len(cat_cols)) - 1
+    gids = {c: total_gid ^ (1 << i) for i, c in enumerate(reversed(cat_cols))}
+    dtypes = dict(df.dtypes)
+    keep = [f"__gid = {total_gid}"]
+    for c in cat_cols:
+        # the value filter of na.drop: null, and NaN for fractional types
+        nan = f" AND NOT isnan({quote(c)})" if dtypes[c] in ("float", "double") else ""
+        keep.append(f"(__gid = {gids[c]} AND {quote(c)} IS NOT NULL{nan})")
+    order = ", ".join(["__n DESC"] + [quote(c) for c in cat_cols])
+    rows = (df.groupingSets([[c] for c in cat_cols] + [[]], *cat_cols)
+              .agg(F.expr("grouping_id() AS __gid"), F.expr("count(*) AS __n"),
+                   *summary_aggs(stat_cols))
+              .where(" OR ".join(keep))
+              .selectExpr("*", "row_number() OVER (PARTITION BY __gid "
+                               f"ORDER BY {order}) AS __rank")
+              .where(f"__rank <= {max_cardinality}")
+              .collect())
 
-    saturated: list[str] = []
-    for c, top in zip(cols, tops):
-        # rows arrive already ordered by (count desc, value asc)
-        enc.mappings[c] = [(r[c], i + 1) for i, r in enumerate(top)]
-        if len(top) == max_cardinality:
-            saturated.append(c)
+    # an empty input has no () row
+    total_row = next((r for r in rows if r["__gid"] == total_gid), None)
+    ranked = sorted(rows, key=lambda r: r["__rank"])
+    for c in cat_cols:
+        enc.mappings[c] = [(r[c], r["__rank"]) for r in ranked
+                           if r["__gid"] == gids[c]]
 
     # true distinct counts are only needed for columns that filled the cap
     # (vs the reference's unconditional per-column distinct().count(),
     # preprocess.py:261); one agg pass covers them all
-    cardinalities = {c: len(enc.mappings[c]) for c in cols}
+    cardinalities = {c: len(m) for c, m in enc.mappings.items()}
+    saturated = [c for c in cat_cols if cardinalities[c] == max_cardinality]
     if saturated:
         card_row = df.agg(*[F.countDistinct(F.col(c)).alias(c)
                             for c in saturated]).collect()[0]
         cardinalities.update({c: card_row[c] for c in saturated})
 
-    pruned_fracs = []
-    over_cap: list[str] = []
-    for c in cols:
-        if cardinalities[c] > max_cardinality:
-            over_cap.append(c)
-            pruned_fracs.append(1 - max_cardinality / cardinalities[c])
-            logger.info("column %s: pruned %d of %d distinct values",
-                        c, cardinalities[c] - max_cardinality, cardinalities[c])
-
+    over_cap = [c for c in cat_cols if cardinalities[c] > max_cardinality]
     if over_cap:
-        total = df.count()
         kept = df
         for c in over_cap:
-            keep_vals = {v for v, _ in enc.mappings[c]}
-            kept_df = local_frame(df.sparkSession, [(v,) for v in sorted(keep_vals)],
-                                  f"{quote(c)} {dict(df.dtypes)[c]}")
+            logger.info("column %s: pruned %d of %d distinct values",
+                        c, cardinalities[c] - max_cardinality, cardinalities[c])
+            kept_df = local_frame(df.sparkSession, [(v,) for v, _ in enc.mappings[c]],
+                                  f"{quote(c)} {dtypes[c]}")
             kept = kept.join(F.broadcast(kept_df), on=c, how="left_semi")
-        kept_count = kept.count()
-        enc.stats[PRUNED_ITEMS] = sum(pruned_fracs) / len(pruned_fracs)
-        enc.stats[PRUNED_ROWS] = 1 - kept_count / total if total else 0.0
-    return enc
+        enc.stats[PRUNED_ITEMS] = sum(1 - max_cardinality / cardinalities[c]
+                                      for c in over_cap) / len(over_cap)
+        enc.stats[PRUNED_ROWS] = 1 - kept.count() / total_row["__n"]
+    return enc, read_summary(total_row, stat_cols)
 
 
 def fit_encoding_collect(df: DataFrame, cols: list[str],
@@ -231,16 +254,3 @@ def fit_encoding_collect(df: DataFrame, cols: list[str],
     for c in cols:
         enc.mappings[c] = [(v, i + 1) for i, v in enumerate(row[c])]
     return enc
-
-
-def encode_cat_columns(df: DataFrame, cols: list[str],
-                       encoding: CategoricalEncoding | None = None,
-                       max_cardinality: int = MAX_CAT_CARDINALITY):
-    """Fit-or-reapply convenience mirroring the reference call shape.
-
-    Returns ``(encoded_df, encoding, stats)`` like
-    ``encode_cat_columns_sparkrank`` (caspr/utils/spark/preprocess.py:237-290).
-    """
-    if encoding is None:
-        encoding = fit_encoding(df, cols, max_cardinality)
-    return encoding.apply(df, cols), encoding, dict(encoding.stats)

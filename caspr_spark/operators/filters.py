@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from caspr_spark.operators.scale import fit_summary
+
 
 def filter_history_window(df: DataFrame, activity_date: str, prediction_date: str,
                           history_days: int, grace_days: int = 0) -> DataFrame:
@@ -52,12 +54,10 @@ def remove_outliers(df: DataFrame, cols: list[str], k: float = 3.0) -> DataFrame
     column predicates, so it stays in whole-stage codegen and — on raw
     parquet columns — can reach the scan.
     """
-    stats = df.agg(*[f for c in cols
-                     for f in (F.avg(c).alias(f"{c}__mu"),
-                               F.stddev_samp(c).alias(f"{c}__sd"))]).collect()[0]
+    stats = fit_summary(df, cols)
     cond = F.lit(True)
     for c in cols:
-        mu, sd = stats[f"{c}__mu"], stats[f"{c}__sd"]
+        mu, sd = stats[c]["mean"], stats[c]["stddev"]
         if sd is None or sd == 0:
             continue
         cond = cond & (F.abs(F.col(c) - F.lit(mu)) <= F.lit(k) * F.lit(sd))

@@ -20,22 +20,34 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from caspr_spark.operators.pivot import quote
+
 logger = logging.getLogger(__name__)
 
 Summary = dict[str, dict[str, float]]
+
+
+# Summary key -> the SQL aggregate that fits it
+_AGGS = {"min": "min", "max": "max", "mean": "avg", "stddev": "stddev_samp"}
 
 
 def fit_summary(df: DataFrame, cols: list[str]) -> Summary:
     """min/max/mean/stddev per column in a single distributed agg pass (A3)."""
     if not cols:
         return {}
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max"),
-                 F.avg(c).alias(f"{c}__mean"), F.stddev_samp(c).alias(f"{c}__std")]
-    row = df.agg(*aggs).collect()[0]
-    return {c: {"min": _f(row[f"{c}__min"]), "max": _f(row[f"{c}__max"]),
-                "mean": _f(row[f"{c}__mean"]), "stddev": _f(row[f"{c}__std"])}
+    return read_summary(df.agg(*summary_aggs(cols)).collect()[0], cols)
+
+
+def summary_aggs(cols: list[str]) -> list:
+    """The aggregates behind the :data:`Summary` of ``cols``, as SQL text."""
+    return [F.expr(f"{fn}({quote(c)}) AS {quote(f'{c}__{k}')}")
+            for c in cols for k, fn in _AGGS.items()]
+
+
+def read_summary(row, cols: list[str]) -> Summary:
+    """The :data:`Summary` in a row of :func:`summary_aggs`; all None
+    when ``row`` is None (no input rows)."""
+    return {c: {k: None if row is None else _f(row[f"{c}__{k}"]) for k in _AGGS}
             for c in cols}
 
 
@@ -138,12 +150,7 @@ def fit_group_summary(df: DataFrame, cols: list[str],
     """
     if not cols or not group_cols:
         raise ValueError("cols and group_cols must be non-empty")
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"__{c}_min"), F.max(c).alias(f"__{c}_max"),
-                 F.avg(c).alias(f"__{c}_mean"),
-                 F.stddev_samp(c).alias(f"__{c}_std")]
-    return df.groupBy(*group_cols).agg(*aggs)
+    return df.groupBy(*group_cols).agg(*summary_aggs(cols))
 
 
 def normalize_by_group(df: DataFrame, cols: list[str],
@@ -166,8 +173,7 @@ def normalize_by_group(df: DataFrame, cols: list[str],
         stats = fit_group_summary(df, cols, group_cols)
     out = df.join(stats, on=group_cols, how="left")
     for c in cols:
-        mn, mx = F.col(f"__{c}_min"), F.col(f"__{c}_max")
-        mean, std = F.col(f"__{c}_mean"), F.col(f"__{c}_std")
+        mn, mx, mean, std = (F.col(f"{c}__{k}") for k in _AGGS)
         if scaling == "min_max":
             expr = F.when(mx > mn, (F.col(c) - mn) / (mx - mn)) \
                     .otherwise(F.col(c))
@@ -177,5 +183,4 @@ def normalize_by_group(df: DataFrame, cols: list[str],
         # unseen group (null stats) also falls through to the original
         out = out.withColumn(c, F.coalesce(expr.cast("double"),
                                            F.col(c).cast("double")))
-    drop = [f"__{c}_{s}" for c in cols for s in ("min", "max", "mean", "std")]
-    return out.drop(*drop), stats
+    return out.drop(*[f"{c}__{k}" for c in cols for k in _AGGS]), stats

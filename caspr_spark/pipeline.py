@@ -18,7 +18,8 @@ feature space (leakage discipline of ``data_process_all_sp``,
 caspr/utils/spark/preprocess.py:615-632). Stage order matches the
 reference ``pipeline`` (preprocess.py:542-612).
 
-Scale notes: the featurization core is one shuffle — the W1
+Scale notes: one grouping-sets aggregate fits stages 4 and 5 on the
+calling thread. The featurization core is one shuffle — the W1
 ``row_number`` window (a partial ``WindowGroupLimit`` keeps at most
 ``seq_len`` rows per entity before the exchange) feeding one hash
 aggregate on the same entity partitioning; ``layout`` only picks the
@@ -40,16 +41,15 @@ from __future__ import annotations
 
 import json
 import os
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from caspr_spark.cache import register_cache
 from caspr_spark.roles import ColumnRoles
-from caspr_spark.operators.encode import (CategoricalEncoding, fit_encoding,
+from caspr_spark.operators.encode import (CategoricalEncoding,
+                                          fit_encoding_with_summary,
                                           MAX_CAT_CARDINALITY)
 from caspr_spark.operators.fills import fill_nans
 from caspr_spark.operators.filters import filter_history_window, filter_last_n
@@ -82,10 +82,9 @@ class SequenceFeaturizer:
     def fit_transform(self, df: DataFrame, _materialize: bool = True):
         """Fit encoding + summary on ``df`` and featurize it in one pass.
 
-        The fit aggregations (per-column top-K, one stats pass) run on the
-        pre-rank plan — they don't depend on W1, so the fit jobs never
-        execute the entity window. Only the final featurization pays for
-        it, once.
+        The fit is one aggregate over the pre-rank prefix, so it never
+        executes the W1 window; only the final featurization pays for it,
+        once.
         """
         r = self.roles
         r.validate(df)
@@ -102,42 +101,17 @@ class SequenceFeaturizer:
         long_df = long_df.select(*self._consumed_cols(long_df))
         long_df = register_cache(long_df.persist())
 
+        # A column both encoded and scaled (ColumnRoles allows a date
+        # column) is summarized on its codes, after the encoding.
         norm_cols = r.date_cols + r.cont_cols
-        if set(norm_cols) & set(r.cat_cols):
-            # a column both encoded and scaled must see the encoded values
-            # in its summary — keep the sequential order for that (unusual)
-            # role layout
-            encoding = fit_encoding(long_df, r.cat_cols, self.max_cardinality)
-            long_df = encoding.apply(long_df, r.cat_cols)
-            long_df, summary = normalize_columns(long_df, norm_cols, None,
-                                                 self.scaling)
-        else:
-            # The summary aggregation only reads date/cont columns, which
-            # the encoding joins never touch — so the stats pass and the
-            # per-cat-column top-K jobs are independent and can share the
-            # cluster (guide-style concurrent driver actions): the summary
-            # job back-fills executors the TakeOrdered tails leave idle
-            # instead of paying one extra sequential job latency. Values
-            # are identical to the sequential order by construction.
-            #
-            # Spark job groups / descriptions / scheduler pools are JVM
-            # thread-locals: a plain pool thread would submit the summary
-            # job OUTSIDE any job group or label the caller set, so
-            # cancellation scopes and bench/UI labels would silently not
-            # cover it. inheritable_thread_target captures the current
-            # thread's local properties and re-applies them in the worker
-            # (the documented PySpark idiom for driver-side concurrency).
-            @inheritable_thread_target
-            def _summary():
-                return fit_summary(long_df, norm_cols)
-            with ThreadPoolExecutor(max_workers=1) as pool:
-                summary_fut = pool.submit(_summary)
-                encoding = fit_encoding(long_df, r.cat_cols,
-                                        self.max_cardinality)
-                summary = summary_fut.result()
-            long_df = encoding.apply(long_df, r.cat_cols)
-            long_df, _ = normalize_columns(long_df, norm_cols, summary,
-                                           self.scaling)
+        encoded = [c for c in norm_cols if c in r.cat_cols]
+        encoding, summary = fit_encoding_with_summary(
+            long_df, r.cat_cols, [c for c in norm_cols if c not in encoded],
+            self.max_cardinality)
+        long_df = encoding.apply(long_df, r.cat_cols)
+        summary.update(fit_summary(long_df, encoded))
+        long_df, _ = normalize_columns(long_df, norm_cols, summary,
+                                       self.scaling)
 
         model = SequenceFeaturizerModel(self, encoding, summary)
         wide = model._finish(self._rank(long_df)) if _materialize else None

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -15,6 +16,33 @@ def spark():
     s = get_spark("tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture(scope="session")
+def job_group(spark):
+    """``with job_group("name") as rec:`` runs the block under a Spark job
+    group; afterwards ``rec["jobs"]`` lists every job the block started and
+    ``rec["escaped"]`` those that do not carry the group (a job submitted
+    from a thread that did not inherit the caller's local properties)."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    @contextlib.contextmanager
+    def run(group: str):
+        rec = {}
+        jsc.listenerBus().waitUntilEmpty()
+        job0 = jsc.dagScheduler().nextJobId()
+        sc.setJobGroup(group, group)
+        try:
+            yield rec
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            jsc.listenerBus().waitUntilEmpty()
+            rec["jobs"] = list(range(job0, jsc.dagScheduler().nextJobId()))
+            rec["escaped"] = sorted(
+                set(rec["jobs"]) - set(sc.statusTracker().getJobIdsForGroup(group)))
+    return run
 
 
 @pytest.fixture(scope="session")

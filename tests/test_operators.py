@@ -90,6 +90,8 @@ class TestEncoding:
         assert codes[40] == 0          # null -> UNK
         assert codes[10] == 1 and codes[11] == 2
         assert enc.stats["pruned_product"] == pytest.approx(1 - 2 / 3)
+        with pytest.raises(ValueError, match="max_cardinality"):
+            fit_encoding(micro_events, ["cat"], max_cardinality=0)
 
     def test_decode_roundtrip(self, micro_events):
         enc = fit_encoding(micro_events, ["cat"])
@@ -109,6 +111,21 @@ class TestEncoding:
         decoded = enc.decode(enc.apply(micro_events), unknown_token=token)
         got = {r["event_id"]: r["cat"] for r in decoded.collect()}
         assert got[40] == token
+
+    @pytest.mark.parametrize("empty", [False, True])
+    def test_fit_with_summary_equals_separate_fits(self, micro_events, empty):
+        """The one-aggregate fit reads the dictionaries, the prune stats
+        and the summary that the separate fits give; an empty input (no
+        ``()`` row) gives empty dictionaries and an all-null summary."""
+        from caspr_spark.operators.encode import fit_encoding_with_summary
+        df = micro_events.filter("user_id < 0") if empty else micro_events
+        for cap in (2, 10):
+            enc, summary = fit_encoding_with_summary(
+                df, ["cat", "user_id"], ["val", "event_id"], cap)
+            want = fit_encoding(df, ["cat", "user_id"], cap)
+            assert enc.mappings == want.mappings
+            assert enc.stats == want.stats
+            assert summary == fit_summary(df, ["val", "event_id"])
 
     def test_json_roundtrip(self, micro_events):
         enc = fit_encoding(micro_events, ["cat"])

@@ -6,7 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from caspr_spark import ColumnRoles, SequenceFeaturizer
-from caspr_spark.operators import (featurize_sequential, fill_nans, get_rank,
+from caspr_spark.operators import (featurize_sequential, fill_nans,
+                                   fit_encoding, fit_summary, get_rank,
                                    normalize_columns)
 from caspr_spark.pipeline import SequenceFeaturizerModel, data_process_all
 
@@ -149,6 +150,54 @@ class TestPipeline:
         for out in (a, b):
             po = out.orderBy("user_id").toPandas()
             assert po[sorted(po.columns)].equals(pr[sorted(pr.columns)])
+
+
+class TestFit:
+    """The fit is one aggregate on the calling thread: its jobs carry the
+    caller's job group, a fit_transform starts few of them, and a column
+    both encoded and scaled is summarized on its codes."""
+
+    @pytest.mark.parametrize("layout", ["wide", "array"])
+    def test_fit_transform_jobs_in_group(self, events, job_group, layout):
+        r = ColumnRoles(tgt_id=["user_id"], activity_date="ts",
+                        cat_cols=["event_type"], cont_cols=["value"],
+                        seq_cols=["event_type", "value", "ts"],
+                        date_cols=["ts"], order_tiebreak=["event_id"])
+        feat = SequenceFeaturizer(roles=r, history_days=14, seq_len=4,
+                                  interval=True, layout=layout)
+        ev = events.withColumn(
+            "prediction_date", F.to_timestamp(F.lit("2024-02-01 00:00:00")))
+        with job_group(f"fit-{layout}") as rec:
+            feat.fit_transform(ev)
+        assert rec["escaped"] == []
+        assert 0 < len(rec["jobs"]) <= 4, rec["jobs"]
+
+    def test_fit_encoding_jobs_in_group(self, events, job_group):
+        with job_group("fit-encoding") as rec:
+            enc = fit_encoding(events, ["event_type", "user_id"])
+        assert set(enc.mappings) == {"event_type", "user_id"}
+        assert rec["jobs"]
+        assert rec["escaped"] == []
+
+    def test_categorical_date_column(self, micro_events):
+        """The reference order: encode, summarize the encoded frame,
+        normalize, then the shared featurization tail."""
+        r = roles()
+        r.cat_cols = ["cat", "ts"]
+        feat = SequenceFeaturizer(roles=r, history_days=7, seq_len=3,
+                                  interval=True)
+        wide, model = feat.fit_transform(micro_events)
+        long_df = feat._prefix(micro_events)
+        enc = fit_encoding(long_df, r.cat_cols)
+        summary = fit_summary(enc.apply(long_df, r.cat_cols),
+                              r.date_cols + r.cont_cols)
+        assert model.encoding.mappings == enc.mappings
+        assert model.summary == summary
+        ref = _pivot_reference(SequenceFeaturizerModel(feat, enc, summary),
+                               micro_events)
+        a = wide.orderBy("user_id").toPandas()
+        b = ref.orderBy("user_id").toPandas()
+        assert a[sorted(a.columns)].equals(b[sorted(b.columns)])
 
 
 def _pivot_reference(model, df):

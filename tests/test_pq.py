@@ -52,6 +52,14 @@ class TestFitEncode:
             return d.agg(F.sum("se")).first()[0]
         assert err(cb) < err(rand_cb) * 0.2
 
+    def test_fit_jobs_carry_job_group(self, spark, emb, job_group):
+        """The concurrent subspace fits run on pool threads; each job
+        they start carries the caller's job group."""
+        with job_group("pq-fit") as rec:
+            fit_pq(emb, dim=8, m=2, k=4)
+        assert rec["jobs"]
+        assert rec["escaped"] == []
+
     def test_validation(self, spark, emb):
         with pytest.raises(ValueError, match="divide"):
             fit_pq(emb, dim=8, m=3, k=4)

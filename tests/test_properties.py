@@ -12,6 +12,7 @@ from caspr_spark.operators import (
     get_rank, featurize_sequential, collect_sequences,
     normalize_columns, denormalize_columns,
 )
+from caspr_spark.operators.encode import PRUNED_ITEMS, PRUNED_ROWS
 
 # derandomize: the sweeps must be reproducible in CI/driver runs — a
 # fresh random seed finding a novel counterexample mid-gate would read as
@@ -134,6 +135,41 @@ class TestEncodeProperties:
         kept = set(sorted(counts, key=lambda v: (-counts[v], v))[:cap])
         n_unknown = sum(1 for v in vals if v not in kept)
         assert (coded == 0).sum() == n_unknown
+
+    @given(rows=st.lists(
+        st.tuples(st.sampled_from([None, None, None, "a", "b", "c", "d"]),
+                  st.sampled_from([None, None, None, 1, 2, 3, 4, 5])),
+        max_size=40),
+        cap=st.integers(1, 4))
+    @settings(**SETTINGS)
+    def test_two_column_fit_matches_reference(self, spark, rows, cap):
+        """A string and an int column with frequent nulls: the mappings
+        and both prune stats equal a pure-Python fit. Nulls are never
+        ranked (a ranked null group would often take code 1 and shift
+        every other code) and a null row is never counted as kept."""
+        from collections import Counter
+        from caspr_spark.operators import fit_encoding
+        cols = ["s", "i"]
+        df = spark.createDataFrame(rows, "s string, i int")
+        enc = fit_encoding(df, cols, max_cardinality=cap)
+
+        mappings, keep, fracs = {}, {}, []
+        for j, c in enumerate(cols):
+            counts = Counter(r[j] for r in rows if r[j] is not None)
+            order = sorted(counts, key=lambda v: (-counts[v], v))
+            mappings[c] = [(v, k + 1) for k, v in enumerate(order[:cap])]
+            if len(counts) > cap:
+                keep[j] = set(order[:cap])
+                fracs.append(1 - cap / len(counts))
+        assert enc.mappings == mappings
+        if fracs:
+            kept = sum(all(r[j] in vals for j, vals in keep.items())
+                       for r in rows)
+            want = {PRUNED_ITEMS: sum(fracs) / len(fracs),
+                    PRUNED_ROWS: 1 - kept / len(rows)}
+        else:
+            want = {PRUNED_ITEMS: 0.0, PRUNED_ROWS: 0.0}
+        assert enc.stats == want
 
 
 class TestAsofProperties:
