@@ -1070,16 +1070,10 @@ def q_train_linear_ae_ddp(spark, sf_dir):
     # the DDP and local fits are independent (one distributed Gram job
     # each, then driver-only GD loops) — overlap them (guide §2.6),
     # same discipline as _train_ddp_parity_row below
-    try:
-        from pyspark import inheritable_thread_target
-        _loc_job = inheritable_thread_target(
-            lambda: fit_linear_autoencoder(wide, cols, hidden_dim=2,
-                                           epochs=60, lr=0.001,
-                                           patience=10))
-    except Exception:
-        def _loc_job():
-            return fit_linear_autoencoder(wide, cols, hidden_dim=2,
-                                          epochs=60, lr=0.001, patience=10)
+    from pyspark import inheritable_thread_target
+    _loc_job = inheritable_thread_target(spark)(
+        lambda: fit_linear_autoencoder(wide, cols, hidden_dim=2, epochs=60,
+                                       lr=0.001, patience=10))
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=1) as pool:
         loc_fut = pool.submit(_loc_job)
@@ -1157,11 +1151,8 @@ def _train_ddp_parity_row(spark, sf_dir, arch, epochs, **kw):
             return fit_deep_autoencoder_ddp(
                 wide, roles, SEQ_N, arch=arch, hidden_dim=8,
                 world_size=ws, epochs=epochs, lr=3e-3, seed=7, **kw)
-        try:
-            from pyspark import inheritable_thread_target
-            _w1_job = inheritable_thread_target(lambda: _fit(1))
-        except Exception:
-            _w1_job = lambda: _fit(1)
+        from pyspark import inheritable_thread_target
+        _w1_job = inheritable_thread_target(spark)(lambda: _fit(1))
         from concurrent.futures import ThreadPoolExecutor
         with ThreadPoolExecutor(max_workers=1) as pool:
             w1_fut = pool.submit(_w1_job)

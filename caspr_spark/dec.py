@@ -25,6 +25,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from caspr_spark.train_distributed import (_bundles, _fold_partitions,
+                                           _rebuild, _shard_by_ids)
+
 
 # --------------------------------------------------------------------------
 # Spark-side closed-form scoring
@@ -328,20 +331,6 @@ def fit_dec_joint(model, bundle, k: int, alpha: float = 1.0,
     return model, centers, history
 
 
-def _shard_by_ids(df: DataFrame, ids, world_size: int) -> DataFrame:
-    """Hash-shard a relation on the entity id into exactly
-    ``world_size`` partitions — the fixed world every per-shard-partial
-    trainer folds over (one model-sized blob per SHARD on the driver,
-    never one per input partition)."""
-    from pyspark.sql import functions as SF
-    # repartition on the RAW 64-bit hash: pre-modding to 0..world-1 and
-    # letting repartition Murmur3 that tiny key domain again collapses
-    # shards (measured: world=2 landed every row in ONE partition,
-    # world=8 filled only 4) — the single mod inside repartition over
-    # the full hash domain fills every partition
-    return df.repartition(world_size, SF.xxhash64(*ids))
-
-
 def fit_dec_joint_distributed(model, wide_df: DataFrame, roles,
                               seq_len: int, k: int, alpha: float = 1.0,
                               epochs: int = 40, lr_centers: float = 0.5,
@@ -403,22 +392,67 @@ def fit_dec_joint_distributed(model, wide_df: DataFrame, roles,
     :func:`fit_dec_distributed`), or pass ``init_centers``.
     Returns ``(model, centers, history)``.
     """
-    import pickle
-
-    from pyspark.sql import functions as SF
-
     from caspr_spark.models.autoencoder import Adam
 
     if world_size < 1:
         raise ValueError(f"world_size must be >= 1, got {world_size}")
-    cls = type(model)
-    ctor_kwargs = model.ctor_kwargs
-    ids = [SF.col(c).cast("string") for c in roles.tgt_id]
+    ids = [F.col(c).cast("string") for c in roles.tgt_id]
 
-    def _params_blob():
-        return pickle.dumps({kk: np.asarray(v)
-                             for kk, v in model.params.items()})
+    def _snapshot():
+        return {kk: v.copy() for kk, v in model.params.items()}
 
+    def _freq_part(batches, m, C_):
+        f = np.zeros(len(C_))
+        for bb in _bundles(batches, roles, seq_len):
+            Z = m.encode(bb.seq_cat, bb.seq_cont, bb.non_seq_cat,
+                         bb.non_seq_cont)
+            f += _soft_np(Z, C_, alpha).sum(axis=0)
+        return f
+
+    def _joint_part(batches, m, st):
+        C_, (pa, Ca, fa), fresh_, prev_ = st
+        # anchor state differs from current only off refresh epochs
+        ma = None if fresh_ else _rebuild(type(m), m.ctor_kwargs, pa)
+        mp = (None if prev_ is None
+              else _rebuild(type(m), m.ctor_kwargs, prev_[0]))
+        kk, d = C_.shape
+        g_c = np.zeros((kk, d))
+        g_enc = None
+        loss_sum = 0.0
+        changed = 0
+        for bb in _bundles(batches, roles, seq_len):
+            args = (bb.seq_cat, bb.seq_cont, bb.non_seq_cat, bb.non_seq_cont)
+            Z = m.encode(*args)
+            diff = Z[:, None, :] - C_[None, :, :]
+            nsq = (diff ** 2).sum(axis=2)
+            inv = 1.0 / (1.0 + nsq / alpha)
+            q = _soft_np(Z, C_, alpha)
+            # the row's PINNED target: q under the anchor state (the last
+            # refresh epoch), normalized by the anchor frequencies —
+            # identical to the p-matrix row fit_dec_joint froze then
+            qa = q if fresh_ else _soft_np(ma.encode(*args), Ca, alpha)
+            w = qa * qa / fa
+            p = w / w.sum(axis=1, keepdims=True)
+            loss_sum += float((p * np.log(p / q)).sum())
+            # UNNORMALIZED per-row coefficients — the driver divides the
+            # folded sums by the global N, which is unknown shard-side
+            coef = ((alpha + 1.0) / alpha) * inv * (p - q)
+            g_c += -(coef[:, :, None] * diff).sum(axis=0)
+            dZ = (coef[:, :, None] * diff).sum(axis=1)
+            _, gb = m.encode_and_grads(*args, dh=dZ)
+            if g_enc is None:
+                g_enc = gb
+            else:
+                for kk2 in g_enc:
+                    g_enc[kk2] += gb[kk2]
+            if mp is not None:
+                lab = q.argmax(axis=1)
+                labp = _soft_np(mp.encode(*args), prev_[1],
+                                alpha).argmax(axis=1)
+                changed += int((lab != labp).sum())
+        return loss_sum, g_c, g_enc, changed
+
+    who = "fit_dec_joint_distributed"
     # one gradient partial per SHARD, not per input partition: hash-
     # sharded on the entity id so the driver fold is O(world_size x |θ|)
     wide = _shard_by_ids(wide_df, ids, world_size).persist()
@@ -429,7 +463,7 @@ def fit_dec_joint_distributed(model, wide_df: DataFrame, roles,
             centers = np.asarray(init_centers, dtype=np.float64)
         else:
             from caspr_spark.data.tensorize import transform_and_load
-            sample = (wide.orderBy(SF.md5(SF.concat_ws("|", *ids)))
+            sample = (wide.orderBy(F.md5(F.concat_ws("|", *ids)))
                       .limit(init_sample).toPandas())
             b = transform_and_load(sample, roles, seq_len, keep_ids=False)
             Z0 = model.encode(b.seq_cat, b.seq_cont, b.non_seq_cat,
@@ -438,105 +472,18 @@ def fit_dec_joint_distributed(model, wide_df: DataFrame, roles,
             centers = centers.astype(np.float64)
 
         def _freq_pass(C):
-            blob = pickle.dumps((_params_blob(), C))
-
-            def kernel(batches):
-                import pandas as pd
-
-                from caspr_spark.data.tensorize import transform_and_load
-                pb, C_ = pickle.loads(blob)
-                m = cls(**ctor_kwargs)
-                m.load_state(pickle.loads(pb))
-                f = np.zeros(len(C_))
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    bb = transform_and_load(pdf, roles, seq_len,
-                                            keep_ids=False)
-                    Z = m.encode(bb.seq_cat, bb.seq_cont, bb.non_seq_cat,
-                                 bb.non_seq_cont)
-                    f += _soft_np(Z, C_, alpha).sum(axis=0)
-                yield pd.DataFrame({"part": [pickle.dumps(f)]})
-            rows = wide.mapInPandas(kernel, schema="part binary").collect()
-            return sum(pickle.loads(bytes(r.part)) for r in rows)
+            parts = _fold_partitions(wide, _freq_part, C, model, who=who)
+            return sum(f for _, f in parts)
 
         def _joint_pass(C, anchor, fresh, prev):
-            blob = pickle.dumps((_params_blob(), C, anchor, fresh, prev))
-
-            def kernel(batches):
-                import pandas as pd
-
-                from caspr_spark.data.tensorize import transform_and_load
-                pb, C_, (pa, Ca, fa), fresh_, prev_ = pickle.loads(blob)
-                m = cls(**ctor_kwargs)
-                m.load_state(pickle.loads(pb))
-                ma = None
-                if not fresh_:          # anchor state differs from current
-                    ma = cls(**ctor_kwargs)
-                    ma.load_state(pickle.loads(pa))
-                mp = None
-                if prev_ is not None:
-                    mp = cls(**ctor_kwargs)
-                    mp.load_state(pickle.loads(prev_[0]))
-                kk, d = C_.shape
-                g_c = np.zeros((kk, d))
-                g_enc = None
-                loss_sum = 0.0
-                changed = 0
-                n = 0
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    bb = transform_and_load(pdf, roles, seq_len,
-                                            keep_ids=False)
-                    args = (bb.seq_cat, bb.seq_cont, bb.non_seq_cat,
-                            bb.non_seq_cont)
-                    Z = m.encode(*args)
-                    diff = Z[:, None, :] - C_[None, :, :]
-                    nsq = (diff ** 2).sum(axis=2)
-                    inv = 1.0 / (1.0 + nsq / alpha)
-                    q = _soft_np(Z, C_, alpha)
-                    # the row's PINNED target: q under the anchor state
-                    # (the last refresh epoch), normalized by the anchor
-                    # frequencies — identical to the p-matrix row
-                    # fit_dec_joint froze at that epoch
-                    qa = q if fresh_ else _soft_np(ma.encode(*args), Ca,
-                                                   alpha)
-                    w = qa * qa / fa
-                    p = w / w.sum(axis=1, keepdims=True)
-                    loss_sum += float((p * np.log(p / q)).sum())
-                    # UNNORMALIZED per-row coefficients — the driver
-                    # divides the folded sums by the global N, which is
-                    # unknown shard-side
-                    coef = ((alpha + 1.0) / alpha) * inv * (p - q)
-                    g_c += -(coef[:, :, None] * diff).sum(axis=0)
-                    dZ = (coef[:, :, None] * diff).sum(axis=1)
-                    _, gb = m.encode_and_grads(*args, dh=dZ)
-                    if g_enc is None:
-                        g_enc = gb
-                    else:
-                        for kk2 in g_enc:
-                            g_enc[kk2] += gb[kk2]
-                    if mp is not None:
-                        Zp = mp.encode(*args)
-                        lab = q.argmax(axis=1)
-                        labp = _soft_np(Zp, prev_[1], alpha).argmax(axis=1)
-                        changed += int((lab != labp).sum())
-                    n += len(Z)
-                yield pd.DataFrame({"part": [pickle.dumps(
-                    (n, loss_sum, g_c, g_enc, changed))]})
-            rows = wide.mapInPandas(kernel, schema="part binary").collect()
-            parts = [p_ for p_ in
-                     (pickle.loads(bytes(r.part)) for r in rows)
-                     if p_[0] > 0]
-            if not parts:
-                raise ValueError("fit_dec_joint_distributed: empty input")
-            n = sum(p_[0] for p_ in parts)
-            loss = sum(p_[1] for p_ in parts) / n
-            g_c = sum(p_[2] for p_ in parts) / n
-            g_enc = {kk: sum(p_[3][kk] for p_ in parts) / n
-                     for kk in parts[0][3]}
-            changed = sum(p_[4] for p_ in parts) / n
+            parts = _fold_partitions(wide, _joint_part,
+                                     (C, anchor, fresh, prev), model, who=who)
+            n = sum(n_ for n_, _ in parts)
+            loss = sum(p_[0] for _, p_ in parts) / n
+            g_c = sum(p_[1] for _, p_ in parts) / n
+            g_enc = {kk: sum(p_[2][kk] for _, p_ in parts) / n
+                     for kk in parts[0][1][2]}
+            changed = sum(p_[3] for _, p_ in parts) / n
             return loss, g_c, g_enc, changed
 
         opt = Adam(model.params, lr=lr_encoder)
@@ -546,7 +493,7 @@ def fit_dec_joint_distributed(model, wide_df: DataFrame, roles,
         prev = None
         for epoch in range(epochs):
             if epoch % max(target_refresh, 1) == 0:
-                anchor = (_params_blob(), centers, _freq_pass(centers))
+                anchor = (_snapshot(), centers, _freq_pass(centers))
                 anchor_epoch = epoch
             loss, g_c, g_enc, changed = _joint_pass(
                 centers, anchor, anchor_epoch == epoch, prev)
@@ -554,7 +501,7 @@ def fit_dec_joint_distributed(model, wide_df: DataFrame, roles,
             if tol > 0 and epoch > 0 and changed < tol:
                 break
             if tol > 0:
-                prev = (_params_blob(), centers)
+                prev = (_snapshot(), centers)
             if epoch == epochs - 1:
                 break   # budget exhausted: state still matches history[-1]
             opt.step(model.params, g_enc, lr_encoder)
@@ -586,8 +533,9 @@ def fit_dec_distributed(df: DataFrame, vec_col: str = "embedding",
        BOTH center sets are recomputed map-side in the same pass, so no
        per-row label state is ever stored or joined.
 
-    Both passes stream partitions through a vectorized numpy kernel
-    inside ``mapInPandas`` and emit one pickled partial per partition;
+    Both passes stream partitions through a vectorized numpy kernel in
+    a Python worker (the shared fold of ``train_distributed``) and emit
+    one pickled partial per partition;
     the driver folds them and takes the GD step — it holds ``k·d``
     doubles, never rows. KMeans init runs on a BOUNDED deterministic
     sample (``init_sample`` rows, md5-ordered by ``id_col`` — the same
@@ -610,8 +558,6 @@ def fit_dec_distributed(df: DataFrame, vec_col: str = "embedding",
 
     Returns ``(centers, history)``.
     """
-    import pickle
-
     if init_centers is not None:
         centers = np.asarray(init_centers, dtype=np.float64)
     else:
@@ -622,67 +568,58 @@ def fit_dec_distributed(df: DataFrame, vec_col: str = "embedding",
         centers, _ = kmeans_np(Zs, k, seed=seed)
         centers = centers.astype(np.float64)
 
+    def _vectors(batches):
+        for pdf in batches:
+            yield np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+
+    def _freq_part(batches, _, C_):
+        f = np.zeros(len(C_))
+        for Z in _vectors(batches):
+            f += _soft_np(Z, C_, alpha).sum(axis=0)
+        return f
+
+    def _grad_part(batches, _, st):
+        C_, Cp_, (Ca_, fa_), fresh_ = st
+        kk, d = C_.shape
+        g = np.zeros((kk, d))
+        loss_sum = 0.0
+        changed = 0
+        for Z in _vectors(batches):
+            diff = Z[:, None, :] - C_[None, :, :]
+            nsq = (diff ** 2).sum(axis=2)
+            inv = 1.0 / (1.0 + nsq / alpha)
+            q = _soft_np(Z, C_, alpha)
+            # the row's PINNED target: q under the anchor centers
+            # (identical to the full-p matrix fit_dec froze at the
+            # refresh epoch — Z is immutable here, so the anchored
+            # recomputation is exact)
+            qa = q if fresh_ else _soft_np(Z, Ca_, alpha)
+            w = qa * qa / fa_
+            p = w / w.sum(axis=1, keepdims=True)
+            loss_sum += float((p * np.log(p / q)).sum())
+            coef = ((alpha + 1.0) / alpha) * inv * (p - q)
+            g += -(coef[:, :, None] * diff).sum(axis=0)
+            lab = q.argmax(axis=1)
+            prev_lab = _soft_np(Z, Cp_, alpha).argmax(axis=1)
+            changed += int((lab != prev_lab).sum())
+        return g, loss_sum, changed
+
+    who = "fit_dec_distributed"
     vecs = df.select(vec_col).persist()
     try:
         vecs.count()
 
         def _freq_pass(C):
-            blob = pickle.dumps(C)
-
-            def kernel(batches):
-                import pandas as pd
-                C_ = pickle.loads(blob)
-                f = np.zeros(len(C_))
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    Z = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                    f += _soft_np(Z, C_, alpha).sum(axis=0)
-                yield pd.DataFrame({"part": [pickle.dumps(f)]})
-            rows = vecs.mapInPandas(kernel, schema="part binary").collect()
-            return sum(pickle.loads(bytes(r.part)) for r in rows)
+            return sum(f for _, f in
+                       _fold_partitions(vecs, _freq_part, C, who=who))
 
         def _grad_pass(C, C_prev, anchor, fresh):
-            blob = pickle.dumps((C, C_prev, anchor, fresh))
-
-            def kernel(batches):
-                import pandas as pd
-                C_, Cp_, (Ca_, fa_), fresh_ = pickle.loads(blob)
-                kk, d = C_.shape
-                g = np.zeros((kk, d))
-                loss_sum = 0.0
-                changed = 0
-                n = 0
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    Z = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                    diff = Z[:, None, :] - C_[None, :, :]
-                    nsq = (diff ** 2).sum(axis=2)
-                    inv = 1.0 / (1.0 + nsq / alpha)
-                    q = _soft_np(Z, C_, alpha)
-                    # the row's PINNED target: q under the anchor centers
-                    # (identical to the full-p matrix fit_dec froze at
-                    # the refresh epoch — Z is immutable here, so the
-                    # anchored recomputation is exact)
-                    qa = q if fresh_ else _soft_np(Z, Ca_, alpha)
-                    w = qa * qa / fa_
-                    p = w / w.sum(axis=1, keepdims=True)
-                    loss_sum += float((p * np.log(p / q)).sum())
-                    coef = ((alpha + 1.0) / alpha) * inv * (p - q)
-                    g += -(coef[:, :, None] * diff).sum(axis=0)
-                    lab = q.argmax(axis=1)
-                    prev_lab = _soft_np(Z, Cp_, alpha).argmax(axis=1)
-                    changed += int((lab != prev_lab).sum())
-                    n += len(Z)
-                yield pd.DataFrame(
-                    {"part": [pickle.dumps((g, loss_sum, changed, n))]})
-            rows = vecs.mapInPandas(kernel, schema="part binary").collect()
-            parts = [pickle.loads(bytes(r.part)) for r in rows]
-            g = sum(p_[0] for p_ in parts)
-            loss_sum = sum(p_[1] for p_ in parts)
-            changed = sum(p_[2] for p_ in parts)
-            n = sum(p_[3] for p_ in parts)
+            parts = _fold_partitions(vecs, _grad_part,
+                                     (C, C_prev, anchor, fresh), who=who)
+            g = sum(p_[0] for _, p_ in parts)
+            loss_sum = sum(p_[1] for _, p_ in parts)
+            changed = sum(p_[2] for _, p_ in parts)
+            n = sum(n_ for n_, _ in parts)
             return g / n, loss_sum / n, changed / n
 
         history: list[float] = []

@@ -25,8 +25,8 @@ attributions computable directly:
 
 Scale note: attribution is per-row and embarrassingly parallel — the
 driver-side entry points here take a local ``TensorBundle``; at 100 TB
-run the same numpy kernel per Arrow batch inside ``mapInPandas`` exactly
-as ``caspr_spark.score`` distributes the forward pass.
+run the same numpy kernel per Arrow batch in a Python worker, as
+:func:`attribution_summary_distributed` does.
 """
 
 from __future__ import annotations
@@ -238,62 +238,36 @@ def attribution_summary_distributed(model, wide_df, roles, seq_len: int,
     Returns ``(names, mean_gxi, mean_ig, mean_dl, max_ig_resid,
     max_dl_resid, n)`` with arrays aligned to ``names``.
     """
-    import pickle
+    from caspr_spark.train_distributed import _bundles, _fold_partitions, \
+        _role_split
 
-    cls = type(model)
-    kwargs = model.ctor_kwargs
-    blob = pickle.dumps({k: np.asarray(v)
-                         for k, v in model.state_dict().items()})
-
-    def kernel(batches):
-        import pandas as pd
-
-        from caspr_spark.data.tensorize import transform_and_load
-
-        m = cls(**kwargs)
-        m.load_state(pickle.loads(blob))
+    def part(batches, m, _):
         acc = None
-        n = 0
         ig_resid = 0.0
         dl_resid = 0.0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            b = transform_and_load(pdf, roles, seq_len, keep_ids=False)
+        for b in _bundles(batches, roles, seq_len):
             gxi = gradient_x_input(m, b, target_dim)
             ig, delta = integrated_gradients(m, b, target_dim, steps=steps)
             dl, dl_delta = deeplift(m, b, target_dim)
-            part = (np.abs(gxi).sum(axis=0), np.abs(ig).sum(axis=0),
-                    np.abs(dl).sum(axis=0))
-            acc = part if acc is None else tuple(a + p for a, p
-                                                 in zip(acc, part))
-            n += len(pdf)
+            p = (np.abs(gxi).sum(axis=0), np.abs(ig).sum(axis=0),
+                 np.abs(dl).sum(axis=0))
+            acc = p if acc is None else tuple(a + q for a, q in zip(acc, p))
             ig_resid = max(ig_resid,
                            float(np.abs(ig.sum(axis=1) - delta).max()))
             dl_resid = max(dl_resid,
                            float(np.abs(dl.sum(axis=1) - dl_delta).max()))
-        yield pd.DataFrame({"n": [n],
-                            "part": [pickle.dumps((acc, ig_resid,
-                                                   dl_resid))]})
+        return acc, ig_resid, dl_resid
 
-    rows = wide_df.mapInPandas(kernel, schema="n long, part binary").collect()
-    parts = [(pickle.loads(bytes(r.part)), int(r.n))
-             for r in rows if r.n > 0]
-    if not parts:
-        raise ValueError("attribution_summary_distributed: empty input")
-    n_tot = sum(n for _, n in parts)
-    sums = [sum(p[0][i] for p, _ in parts) for i in range(3)]
-    max_ig = max(p[1] for p, _ in parts)
-    max_dl = max(p[2] for p, _ in parts)
+    parts = _fold_partitions(wide_df, part, model=model,
+                             who="attribution_summary_distributed")
+    n_tot = sum(n for n, _ in parts)
+    sums = [sum(p[0][i] for _, p in parts) for i in range(3)]
+    max_ig = max(p[1] for _, p in parts)
+    max_dl = max(p[2] for _, p in parts)
 
     # names need only the model config + column roles, not data: build
     # them from a zero-row bundle carrying the role-ordered column lists
-    seq_cat = [c for c in roles.seq_cols if c in roles.cat_cols]
-    seq_cont = [c for c in roles.seq_cols
-                if c in roles.cont_cols or c in roles.date_cols]
-    non_seq_cat = [c for c in roles.non_seq_cols if c in roles.cat_cols]
-    non_seq_cont = [c for c in roles.non_seq_cols
-                    if c in roles.cont_cols or c in roles.date_cols]
+    seq_cat, seq_cont, non_seq_cat, non_seq_cont = _role_split(roles, seq_len)
     shell = TensorBundle(
         seq_cat=np.zeros((0, seq_len, len(seq_cat)), np.int64),
         seq_cont=np.zeros((0, seq_len, len(seq_cont)), np.float32),

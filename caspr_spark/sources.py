@@ -238,10 +238,11 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None,
             n = df._jdf.queryExecution().toRdd().getNumPartitions()
         except Exception:
             n = df.rdd.getNumPartitions()
-        if key is not None:
-            if len(_NPARTS_CACHE) >= _NPARTS_CACHE_MAX:
-                _NPARTS_CACHE.clear()
-            _NPARTS_CACHE[key] = (n, size)
+    if key is not None and hit != (n, size):
+        # a miss, or a size estimated on a hit that was stored without one
+        if len(_NPARTS_CACHE) >= _NPARTS_CACHE_MAX:
+            _NPARTS_CACHE.clear()
+        _NPARTS_CACHE[key] = (n, size)
     if n < target:
         return df.repartition(target)
     return df

@@ -170,9 +170,80 @@ def fit_linear_autoencoder_ddp(df: DataFrame, cols: list[str],
 # rule followed by the world-size gradient mean cancels, the same
 # cancellation the linear DDP fit documents.
 #
+# Every Python-worker pass — the DDP gradient and local-SGD rounds, the
+# loss and embedding-variance probes, the distributed attribution summary
+# and DEC's frequency and gradient passes — goes through ONE wire format,
+# :func:`_fold_partitions`: state and model pickled once into the kernel,
+# the model rebuilt per task, one pickled partial per partition, partials
+# of empty partitions dropped. A pass supplies its per-batch arithmetic
+# and folds the partials on the driver.
+#
 # The driver never holds data — only parameters (tens of KB) and one
 # (n, loss, gradient) triple per shard per epoch. At 100 TB the per-epoch
 # cost is one scan of the persisted featurized table; nothing else grows.
+
+
+def _fold_partitions(df: DataFrame, part, state=None, model=None, *,
+                     who: str) -> list:
+    """Run ``part(batches, model, state)`` once per partition of ``df`` in
+    a Python worker and return ``[(rows, partial)]`` for the partitions
+    that saw rows, in partition order.
+
+    ``batches`` yields the partition's non-empty pandas batches;
+    ``model`` is rebuilt from ``(type(model), ctor_kwargs, state_dict)``
+    when one is shipped (else None); ``state`` is any picklable value.
+    Both are pickled once, into the kernel's closure. ``part``'s return
+    value is the partition's partial. Raises ``ValueError`` naming
+    ``who`` when no partition saw a row.
+    """
+    import pickle
+
+    recipe = None if model is None else (
+        type(model), model.ctor_kwargs,
+        {k: np.asarray(v) for k, v in model.state_dict().items()})
+    blob = pickle.dumps((state, recipe))
+
+    def kernel(batches):
+        import pandas as pd
+
+        st, rec = pickle.loads(blob)
+        m = None if rec is None else _rebuild(*rec)
+        n = 0
+
+        def rows():
+            nonlocal n
+            for pdf in batches:
+                if len(pdf):
+                    n += len(pdf)
+                    yield pdf
+
+        out = part(rows(), m, st)
+        yield pd.DataFrame({"n": [n],
+                            "part": [pickle.dumps(out) if n else b""]})
+
+    parts = [(int(r.n), pickle.loads(bytes(r.part))) for r in
+             df.mapInPandas(kernel, "n long, part binary").collect()
+             if r.n > 0]
+    if not parts:
+        raise ValueError(f"{who}: empty input")
+    return parts
+
+
+def _rebuild(cls, ctor_kwargs, state):
+    """A model of class ``cls`` built from ``ctor_kwargs`` with ``state``
+    loaded — how executors receive the driver's parameters."""
+    m = cls(**ctor_kwargs)
+    m.load_state(state)
+    m.ctor_kwargs = ctor_kwargs
+    return m
+
+
+def _bundles(batches, roles, seq_len: int):
+    """Tensorize each pandas batch of the wide layout."""
+    from caspr_spark.data.tensorize import transform_and_load
+
+    for pdf in batches:
+        yield transform_and_load(pdf, roles, seq_len, keep_ids=False)
 
 
 def _role_split(roles, seq_len: int):
@@ -186,12 +257,12 @@ def _role_split(roles, seq_len: int):
     return seq_cat, seq_cont, non_seq_cat, non_seq_cont
 
 
-def _wide_vocab(df: DataFrame, roles, seq_len: int):
-    """Global per-column vocab sizes (max code + 1, floor 2) from the wide
-    layout in ONE aggregation — the distributed twin of the local fits'
-    ``bundle.seq_cat[..., i].max() + 1``."""
+def _vocab_aggs(roles, seq_len: int) -> list:
+    """The aggregates behind the global per-column vocab sizes of the wide
+    layout (max code over every slot), plus the row count so the list is
+    never empty."""
     seq_cat, _, non_seq_cat, _ = _role_split(roles, seq_len)
-    aggs = []
+    aggs = [F.count(F.lit(1)).alias("__n")]
     for c in seq_cat:
         slots = [F.coalesce(F.col(f"{s}_{c}"), F.lit(0)).cast("long")
                  for s in range(1, seq_len + 1)]
@@ -200,13 +271,16 @@ def _wide_vocab(df: DataFrame, roles, seq_len: int):
     for c in non_seq_cat:
         aggs.append(F.max(F.coalesce(F.col(c), F.lit(0)).cast("long"))
                     .alias(f"__nv_{c}"))
-    if not aggs:
-        return [], []
-    row = df.agg(*aggs).collect()[0]
-    seq_vocab = [max(int(row[f"__sv_{c}"] or 0) + 1, 2) for c in seq_cat]
-    non_seq_vocab = [max(int(row[f"__nv_{c}"] or 0) + 1, 2)
-                     for c in non_seq_cat]
-    return seq_vocab, non_seq_vocab
+    return aggs
+
+
+def _read_vocab(row, roles, seq_len: int):
+    """``(seq_vocab, non_seq_vocab)`` — max code + 1, floor 2 — from a row
+    of :func:`_vocab_aggs`: the distributed twin of the local fits'
+    ``bundle.seq_cat[..., i].max() + 1``."""
+    seq_cat, _, non_seq_cat, _ = _role_split(roles, seq_len)
+    return ([max(int(row[f"__sv_{c}"] or 0) + 1, 2) for c in seq_cat],
+            [max(int(row[f"__nv_{c}"] or 0) + 1, 2) for c in non_seq_cat])
 
 
 def _build_deep_model(arch: str, seq_vocab, n_seq_cont, non_seq_vocab,
@@ -242,45 +316,37 @@ def _build_deep_model(arch: str, seq_vocab, n_seq_cont, non_seq_vocab,
     if arch_kwargs:
         raise ValueError(f"unknown arch kwargs {sorted(arch_kwargs)}")
     model = cls(**kwargs)
-    model.ctor_kwargs = kwargs          # reused by encode_variance
-    return model, cls, kwargs
+    model.ctor_kwargs = kwargs          # executors rebuild from it
+    return model
 
 
-def _shard_grad_kernel(cls, ctor_kwargs, params_blob, roles, seq_len):
-    """mapInPandas kernel: this shard's (row count, Σ n·loss, Σ n·grad).
+def _sharded_model(sharded: DataFrame, roles, seq_len: int, arch: str,
+                   hidden_dim: int, seed: int, **arch_kwargs):
+    """The model for a sharded fit. Its vocab aggregate is the first
+    query over the persisted ``sharded``, so it also fills the cache the
+    epochs rescan."""
+    seq_vocab, non_seq_vocab = _read_vocab(
+        sharded.agg(*_vocab_aggs(roles, seq_len)).collect()[0],
+        roles, seq_len)
+    _, seq_cont, _, non_seq_cont = _role_split(roles, seq_len)
+    return _build_deep_model(arch, seq_vocab, len(seq_cont), non_seq_vocab,
+                             len(non_seq_cont), seq_len, hidden_dim, seed,
+                             **arch_kwargs)
 
-    Gradients are computed per Arrow batch and weighted-summed, so the
-    worker's memory is bounded by the Arrow batch size, not the shard —
-    the shard IS streamed, exactly what a 100 TB shard requires."""
-    def kernel(batches):
-        import pickle
 
-        import pandas as pd
-
-        from caspr_spark.data.tensorize import transform_and_load
-
-        model = cls(**ctor_kwargs)
-        model.load_state(pickle.loads(params_blob))
-        acc = None
-        n_tot = 0
-        loss_sum = 0.0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            b = transform_and_load(pdf, roles, seq_len, keep_ids=False)
-            loss, g = model.loss_and_grads(b.seq_cat, b.seq_cont,
-                                           b.non_seq_cat, b.non_seq_cont)
-            nb = len(pdf)
-            n_tot += nb
-            loss_sum += loss * nb
-            if acc is None:
-                acc = {k: v * nb for k, v in g.items()}
-            else:
-                for k in acc:
-                    acc[k] += g[k] * nb
-        yield pd.DataFrame({"n": [n_tot], "loss": [loss_sum],
-                            "grads": [pickle.dumps(acc)]})
-    return kernel
+def _bundle_model(bundle, arch: str, hidden_dim: int, seed: int,
+                  **arch_kwargs):
+    """The model for a local fit over an in-memory bundle, with the vocab
+    sizes (max code + 1, floor 2) read off the bundle."""
+    seq_vocab = [max(int(bundle.seq_cat[..., i].max()) + 1, 2)
+                 for i in range(bundle.seq_cat.shape[-1])]
+    non_seq_vocab = [max(int(bundle.non_seq_cat[:, j].max()) + 1, 2)
+                     for j in range(bundle.non_seq_cat.shape[-1])]
+    seq_len = bundle.seq_cat.shape[1] or bundle.seq_cont.shape[1]
+    return _build_deep_model(
+        arch, seq_vocab, bundle.seq_cont.shape[-1], non_seq_vocab,
+        bundle.non_seq_cont.shape[-1], seq_len, hidden_dim, seed,
+        **arch_kwargs)
 
 
 def _consensus_adam_loop(model, grad_fn, epochs: int, lr: float,
@@ -330,40 +396,41 @@ def fit_deep_autoencoder_ddp(wide_df: DataFrame, roles, seq_len: int,
 
     Per epoch: parameters ship to the ``world_size`` shards (closure
     capture — tens of KB), each shard streams its Arrow batches through
-    tensorize + numpy backprop and emits ONE (n, Σ n·loss, Σ n·grad)
-    row, the driver weighted-allreduces and takes one Adam step. The
-    featurized input is persisted once up front so epochs rescan the
-    cached relation, not the upstream pipeline. Returns
-    ``(model, loss_history)``; for any ``world_size`` the trajectory
-    equals the single-process full-batch fit up to float summation
-    order (the parity tests and the ``train_*_ddp`` queries assert it).
+    tensorize + numpy backprop and emits ONE (Σ n·loss, Σ n·grad)
+    partial, the driver weighted-allreduces and takes one Adam step. The
+    input is round-robin sharded and persisted once up front; the vocab
+    aggregate fills that cache, so epochs rescan the cached relation,
+    not the upstream pipeline. Returns ``(model, loss_history)``; for
+    any ``world_size`` the trajectory equals the single-process
+    full-batch fit up to float summation order (the parity tests and
+    the ``train_*_ddp`` queries assert it).
     """
-    import pickle
-
-    seq_cat, seq_cont, non_seq_cat, non_seq_cont = _role_split(roles, seq_len)
-    seq_vocab, non_seq_vocab = _wide_vocab(wide_df, roles, seq_len)
-    model, cls, kwargs = _build_deep_model(
-        arch, seq_vocab, len(seq_cont), non_seq_vocab, len(non_seq_cont),
-        seq_len, hidden_dim, seed, **arch_kwargs)
+    def part(batches, m, _):
+        acc, loss_sum = None, 0.0
+        for b in _bundles(batches, roles, seq_len):
+            loss, g = m.loss_and_grads(b.seq_cat, b.seq_cont,
+                                       b.non_seq_cat, b.non_seq_cont)
+            nb = len(b)
+            loss_sum += loss * nb
+            if acc is None:
+                acc = {k: v * nb for k, v in g.items()}
+            else:
+                for k in acc:
+                    acc[k] += g[k] * nb
+        return loss_sum, acc
 
     sharded = wide_df.repartition(world_size).persist()
     try:
-        sharded.count()    # materialize the cache once, before epoch 1
+        model = _sharded_model(sharded, roles, seq_len, arch, hidden_dim,
+                               seed, **arch_kwargs)
 
         def grad_fn(params):
-            blob = pickle.dumps({k: np.asarray(v)
-                                 for k, v in params.items()})
-            rows = sharded.mapInPandas(
-                _shard_grad_kernel(cls, kwargs, blob, roles, seq_len),
-                schema="n long, loss double, grads binary").collect()
-            parts = [(pickle.loads(bytes(r.grads)), int(r.n), float(r.loss))
-                     for r in rows if r.n > 0]
-            if not parts:
-                raise ValueError("fit_deep_autoencoder_ddp: empty input")
-            n_tot = sum(n for _, n, _ in parts)
-            loss = sum(l for _, _, l in parts) / n_tot
-            grads = {k: sum(p[k] for p, _, _ in parts) / n_tot
-                     for k in parts[0][0]}
+            parts = _fold_partitions(sharded, part, model=model,
+                                     who="fit_deep_autoencoder_ddp")
+            n_tot = sum(n for n, _ in parts)
+            loss = sum(l for _, (l, _) in parts) / n_tot
+            grads = {k: sum(g[k] for _, (_, g) in parts) / n_tot
+                     for k in parts[0][1][1]}
             return loss, grads
 
         history = _consensus_adam_loop(model, grad_fn, epochs, lr,
@@ -374,66 +441,17 @@ def fit_deep_autoencoder_ddp(wide_df: DataFrame, roles, seq_len: int,
     return model, history
 
 
-def _shard_sgd_kernel(cls, ctor_kwargs, params_blob, roles, seq_len,
-                      batch_size: int, lr: float):
-    """mapInPandas kernel for ONE local-SGD round over this shard.
-
-    The shard's Arrow batches are re-chunked into minibatches of exactly
-    ``batch_size`` rows (the last chunk may be short) and each minibatch
-    takes one LOCAL Adam step — many optimizer steps per table scan, the
-    reference's BATCH_SIZE=32768 stochastic path
-    (caspr/utils/spark/large/train.py:35,152-183; caspr/utils/
-    train.py:30-130 iterates batches). Memory stays bounded by
-    ``max(batch_size, arrow batch)`` rows; the optimizer state is
-    shard-local and lives only for the round. Emits ONE row:
-    ``(n, Σ n_b · loss_b`` over pre-step minibatch losses``, params)``.
-    """
-    def kernel(batches):
-        import pickle
-
-        import pandas as pd
-
-        from caspr_spark.data.tensorize import transform_and_load
-        from caspr_spark.models.autoencoder import Adam
-
-        model = cls(**ctor_kwargs)
-        model.load_state(pickle.loads(params_blob))
-        opt = Adam(model.params, lr=lr)
-        n_tot = 0
-        loss_sum = 0.0
-
-        def step(pdf):
-            nonlocal n_tot, loss_sum
-            b = transform_and_load(pdf, roles, seq_len, keep_ids=False)
-            loss, g = model.loss_and_grads(b.seq_cat, b.seq_cont,
-                                           b.non_seq_cat, b.non_seq_cont)
-            opt.step(model.params, g, lr)
-            n_tot += len(pdf)
-            loss_sum += loss * len(pdf)
-
-        # one concat per incoming Arrow batch, then a cursor over
-        # sequential batch_size windows — re-concatenating the residual
-        # on every pop would copy O(B²/batch_size) rows per Arrow batch
-        carry = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            chunk = (pdf if carry is None
-                     else pd.concat([carry, pdf], ignore_index=True))
-            pos = 0
-            while len(chunk) - pos >= batch_size:
-                step(chunk.iloc[pos:pos + batch_size]
-                     .reset_index(drop=True))
-                pos += batch_size
-            carry = chunk.iloc[pos:] if pos < len(chunk) else None
-        if carry is not None and len(carry):
-            step(carry.reset_index(drop=True))
-        blob = (pickle.dumps({k: np.asarray(v)
-                              for k, v in model.params.items()})
-                if n_tot else b"")
-        yield pd.DataFrame({"n": [n_tot], "loss": [loss_sum],
-                            "params": [blob]})
-    return kernel
+def _shard_by_ids(df: DataFrame, ids, world_size: int) -> DataFrame:
+    """Hash-shard a relation on the entity id into exactly
+    ``world_size`` partitions — the fixed world every per-shard-partial
+    trainer folds over (one model-sized blob per SHARD on the driver,
+    never one per input partition)."""
+    # repartition on the RAW 64-bit hash: pre-modding to 0..world-1 and
+    # letting repartition Murmur3 that tiny key domain again collapses
+    # shards (measured: world=2 landed every row in ONE partition,
+    # world=8 filled only 4) — the single mod inside repartition over
+    # the full hash domain fills every partition
+    return df.repartition(world_size, F.xxhash64(*ids))
 
 
 def fit_deep_autoencoder_sgd(wide_df: DataFrame, roles, seq_len: int,
@@ -460,6 +478,12 @@ def fit_deep_autoencoder_sgd(wide_df: DataFrame, roles, seq_len: int,
     driver round-trip per minibatch, which is exactly the latency a
     100 TB scan cannot afford).
 
+    Per round, each shard's Arrow batches are re-chunked into
+    minibatches of exactly ``batch_size`` rows (the last chunk may be
+    short); memory stays bounded by ``max(batch_size, arrow batch)``
+    rows, and the optimizer state is shard-local and lives only for the
+    round.
+
     Determinism: shards are hash-assigned on the entity id and each
     shard is sorted by ``md5(id)``, so the minibatch sequence — hence
     the result — is a pure function of (data, seed, world_size,
@@ -473,48 +497,61 @@ def fit_deep_autoencoder_sgd(wide_df: DataFrame, roles, seq_len: int,
     (each minibatch evaluated before its step, weighted by rows);
     consensus early stop runs on it. Returns ``(model, history)``.
     """
-    import pickle
-
     if batch_size < 1:
         raise ValueError(f"batch_size must be >= 1, got {batch_size}")
-    seq_cat, seq_cont, non_seq_cat, non_seq_cont = _role_split(roles, seq_len)
-    seq_vocab, non_seq_vocab = _wide_vocab(wide_df, roles, seq_len)
-    model, cls, kwargs = _build_deep_model(
-        arch, seq_vocab, len(seq_cont), non_seq_vocab, len(non_seq_cont),
-        seq_len, hidden_dim, seed, **arch_kwargs)
+
+    def part(batches, m, eff_lr):
+        import pandas as pd
+
+        from caspr_spark.data.tensorize import transform_and_load
+        from caspr_spark.models.autoencoder import Adam
+
+        opt = Adam(m.params, lr=eff_lr)
+        loss_sum = 0.0
+
+        def step(pdf):
+            nonlocal loss_sum
+            b = transform_and_load(pdf, roles, seq_len, keep_ids=False)
+            loss, g = m.loss_and_grads(b.seq_cat, b.seq_cont,
+                                       b.non_seq_cat, b.non_seq_cont)
+            opt.step(m.params, g, eff_lr)
+            loss_sum += loss * len(pdf)
+
+        # one concat per incoming Arrow batch, then a cursor over
+        # sequential batch_size windows — re-concatenating the residual
+        # on every pop would copy O(B²/batch_size) rows per Arrow batch
+        carry = None
+        for pdf in batches:
+            chunk = (pdf if carry is None
+                     else pd.concat([carry, pdf], ignore_index=True))
+            pos = 0
+            while len(chunk) - pos >= batch_size:
+                step(chunk.iloc[pos:pos + batch_size]
+                     .reset_index(drop=True))
+                pos += batch_size
+            carry = chunk.iloc[pos:] if pos < len(chunk) else None
+        if carry is not None and len(carry):
+            step(carry.reset_index(drop=True))
+        return loss_sum, {k: np.asarray(v) for k, v in m.params.items()}
 
     ids = [F.col(c).cast("string") for c in roles.tgt_id]
-    # repartition on the RAW 64-bit hash: pre-modding to 0..world-1 and
-    # letting repartition Murmur3 the tiny key domain again collapses
-    # shards (world=2 put every row in one partition) — the single mod
-    # inside repartition over the full hash fills every shard
-    order_key = F.md5(F.concat_ws("|", *ids))
-    sharded = (wide_df
-               .repartition(world_size, F.xxhash64(*ids))
-               .sortWithinPartitions(order_key)
+    sharded = (_shard_by_ids(wide_df, ids, world_size)
+               .sortWithinPartitions(F.md5(F.concat_ws("|", *ids)))
                .persist())
     try:
-        sharded.count()    # materialize once; epochs rescan the cache
-
+        model = _sharded_model(sharded, roles, seq_len, arch, hidden_dim,
+                               seed, **arch_kwargs)
         stopper = DistributedEarlyStopping(patience=patience,
                                            min_delta=min_delta)
         history: list[float] = []
         for epoch in range(epochs):
-            blob = pickle.dumps({k: np.asarray(v)
-                                 for k, v in model.params.items()})
-            eff_lr = warmup_lr(lr, epoch, warmup_epochs)
-            rows = sharded.mapInPandas(
-                _shard_sgd_kernel(cls, kwargs, blob, roles, seq_len,
-                                  batch_size, eff_lr),
-                schema="n long, loss double, params binary").collect()
-            parts = [(pickle.loads(bytes(r.params)), int(r.n), float(r.loss))
-                     for r in rows if r.n > 0]
-            if not parts:
-                raise ValueError("fit_deep_autoencoder_sgd: empty input")
-            n_tot = sum(n for _, n, _ in parts)
-            loss = sum(l for _, _, l in parts) / n_tot
+            parts = _fold_partitions(
+                sharded, part, warmup_lr(lr, epoch, warmup_epochs), model,
+                who="fit_deep_autoencoder_sgd")
+            n_tot = sum(n for n, _ in parts)
+            loss = sum(l for _, (l, _) in parts) / n_tot
             for k in model.params:
-                model.params[k] = sum(p[k] * n for p, n, _ in parts) / n_tot
+                model.params[k] = sum(p[k] * n for n, (_, p) in parts) / n_tot
             history.append(loss)
             if stopper.step_all(loss, epoch,
                                 [model.params[k]
@@ -542,15 +579,7 @@ def fit_deep_autoencoder_sgd_local(bundle, arch: str = "mlp",
     the shard-local optimizer whose state lives only for the round."""
     from caspr_spark.models.autoencoder import Adam
 
-    seq_vocab = [max(int(bundle.seq_cat[..., i].max()) + 1, 2)
-                 for i in range(bundle.seq_cat.shape[-1])]
-    non_seq_vocab = [max(int(bundle.non_seq_cat[:, j].max()) + 1, 2)
-                     for j in range(bundle.non_seq_cat.shape[-1])]
-    seq_len = bundle.seq_cat.shape[1] or bundle.seq_cont.shape[1]
-    model, _, _ = _build_deep_model(
-        arch, seq_vocab, bundle.seq_cont.shape[-1], non_seq_vocab,
-        bundle.non_seq_cont.shape[-1], seq_len, hidden_dim, seed,
-        **arch_kwargs)
+    model = _bundle_model(bundle, arch, hidden_dim, seed, **arch_kwargs)
     n = bundle.seq_cat.shape[0]
     stopper = DistributedEarlyStopping(patience=patience,
                                        min_delta=min_delta)
@@ -578,39 +607,18 @@ def fit_deep_autoencoder_sgd_local(bundle, arch: str = "mlp",
 
 def evaluate_loss(model, wide_df: DataFrame, roles, seq_len: int) -> float:
     """Full-data mean loss of ``model`` computed DISTRIBUTED — one
-    mapInPandas pass emitting (n, Σ n·loss) per partition; the driver
+    Python-worker pass emitting Σ n·loss per partition; the driver
     folds. The shared yardstick the SGD-vs-full-batch queries use so
     both training modes are scored on the identical objective."""
-    import pickle
-
-    cls = type(model)
-    kwargs = model.ctor_kwargs
-    blob = pickle.dumps({k: np.asarray(v)
-                         for k, v in model.state_dict().items()})
-
-    def kernel(batches):
-        import pandas as pd
-
-        from caspr_spark.data.tensorize import transform_and_load
-
-        m = cls(**kwargs)
-        m.load_state(pickle.loads(blob))
-        n = 0
+    def part(batches, m, _):
         s = 0.0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            b = transform_and_load(pdf, roles, seq_len, keep_ids=False)
-            loss = m.loss(b)          # forward only — no backward pass
-            n += len(pdf)
-            s += loss * len(pdf)
-        yield pd.DataFrame({"n": [n], "loss": [s]})
+        for b in _bundles(batches, roles, seq_len):
+            s += m.loss(b) * len(b)   # forward only — no backward pass
+        return s
 
-    rows = wide_df.mapInPandas(kernel, schema="n long, loss double").collect()
-    n_tot = sum(int(r.n) for r in rows)
-    if not n_tot:
-        raise ValueError("evaluate_loss: empty input")
-    return float(sum(float(r.loss) for r in rows) / n_tot)
+    parts = _fold_partitions(wide_df, part, model=model,
+                             who="evaluate_loss")
+    return float(sum(s for _, s in parts) / sum(n for n, _ in parts))
 
 
 def fit_deep_autoencoder_local(bundle, arch: str = "mlp",
@@ -622,15 +630,7 @@ def fit_deep_autoencoder_local(bundle, arch: str = "mlp",
     over an in-memory :class:`TensorBundle` — same model construction,
     same loop, same schedule, ``world_size=1`` — the parity reference
     the DDP trajectory is asserted against in tests."""
-    seq_vocab = [max(int(bundle.seq_cat[..., i].max()) + 1, 2)
-                 for i in range(bundle.seq_cat.shape[-1])]
-    non_seq_vocab = [max(int(bundle.non_seq_cat[:, j].max()) + 1, 2)
-                     for j in range(bundle.non_seq_cat.shape[-1])]
-    seq_len = bundle.seq_cat.shape[1] or bundle.seq_cont.shape[1]
-    model, _, _ = _build_deep_model(
-        arch, seq_vocab, bundle.seq_cont.shape[-1], non_seq_vocab,
-        bundle.non_seq_cont.shape[-1], seq_len, hidden_dim, seed,
-        **arch_kwargs)
+    model = _bundle_model(bundle, arch, hidden_dim, seed, **arch_kwargs)
 
     def grad_fn(params):
         return model.loss_and_grads(bundle.seq_cat, bundle.seq_cont,
@@ -645,47 +645,27 @@ def fit_deep_autoencoder_local(bundle, arch: str = "mlp",
 def encode_variance(model, wide_df: DataFrame, roles, seq_len: int) -> float:
     """Mean-over-dims variance of the model embedding across the WHOLE
     DataFrame, computed distributed: each partition streams its batches
-    through ``model.encode`` and emits (n, Σe, Σe²); the driver folds
+    through ``model.encode`` and emits (Σe, Σe²); the driver folds
     the moment sums. Replaces the ``emb.var()`` the driver-local train
     queries used to compute on a collected bundle."""
-    import pickle
-
-    cls = type(model)
-    kwargs = model.ctor_kwargs
-    blob = pickle.dumps({k: np.asarray(v)
-                         for k, v in model.state_dict().items()})
-
-    def kernel(batches):
-        import pandas as pd
-
-        from caspr_spark.data.tensorize import transform_and_load
-
-        m = cls(**kwargs)
-        m.load_state(pickle.loads(blob))
-        n = 0
-        s = None
-        s2 = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            b = transform_and_load(pdf, roles, seq_len, keep_ids=False)
+    def part(batches, m, _):
+        s = s2 = None
+        for b in _bundles(batches, roles, seq_len):
             e = m.encode(b.seq_cat, b.seq_cont, b.non_seq_cat,
                          b.non_seq_cont)
-            n += e.shape[0]
             if s is None:
                 s = e.sum(axis=0)
                 s2 = (e * e).sum(axis=0)
             else:
                 s += e.sum(axis=0)
                 s2 += (e * e).sum(axis=0)
-        yield pd.DataFrame({"n": [n],
-                            "mom": [pickle.dumps((s, s2))]})
+        return s, s2
 
-    rows = wide_df.mapInPandas(kernel, schema="n long, mom binary").collect()
-    parts = [(pickle.loads(bytes(r.mom)), int(r.n)) for r in rows if r.n > 0]
-    n_tot = sum(n for _, n in parts)
-    s = sum(p[0] for p, _ in parts)
-    s2 = sum(p[1] for p, _ in parts)
+    parts = _fold_partitions(wide_df, part, model=model,
+                             who="encode_variance")
+    n_tot = sum(n for n, _ in parts)
+    s = sum(p[0] for _, p in parts)
+    s2 = sum(p[1] for _, p in parts)
     var = s2 / n_tot - (s / n_tot) ** 2
     return float(np.maximum(var, 0.0).mean())
 

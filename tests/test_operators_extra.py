@@ -415,6 +415,22 @@ class TestEnsureParallelismCache:
         ensure_parallelism(spark.read.parquet(p).select("id"))
         assert len(_NPARTS_CACHE) == n_cache + 1
 
+    def test_cpu_light_hit_stores_size(self, spark, tmp_path):
+        """A plain probe stores no size estimate; a later ``cpu_light``
+        probe of the same frame computes it and writes it back, so the
+        next ``cpu_light`` hit skips the optimizer's estimate."""
+        from caspr_spark.sources import (_NPARTS_CACHE, _nparts_key,
+                                         ensure_parallelism)
+        p = str(tmp_path / "s.parquet")
+        spark.range(100).coalesce(1).write.parquet(p)
+        _NPARTS_CACHE.clear()
+        ensure_parallelism(spark.read.parquet(p))
+        key = _nparts_key(spark.read.parquet(p))
+        assert _NPARTS_CACHE[key][1] is None
+        ensure_parallelism(spark.read.parquet(p), cpu_light=True)
+        n, size = _NPARTS_CACHE[key]
+        assert n == 1 and size is not None and size > 0
+
     def test_probe_memo_keys_on_input_files(self, spark, tmp_path):
         """Two parquet dirs with the same schema analyze to the same
         canonical plan (``Relation [none#0L] parquet`` prints no path),

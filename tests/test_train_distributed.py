@@ -107,9 +107,10 @@ class TestEncodeVariance:
 
 class TestVocabFromWide:
     def test_global_vocab_matches_bundle(self, spark):
-        from caspr_spark.train_distributed import _wide_vocab
+        from caspr_spark.train_distributed import _read_vocab, _vocab_aggs
         pdf = _wide_pdf()
-        sv, nv = _wide_vocab(spark.createDataFrame(pdf), ROLES, 4)
+        row = spark.createDataFrame(pdf).agg(*_vocab_aggs(ROLES, 4)).collect()[0]
+        sv, nv = _read_vocab(row, ROLES, 4)
         bundle = transform_and_load(pdf, ROLES, 4)
         want = [max(int(bundle.seq_cat[..., i].max()) + 1, 2)
                 for i in range(bundle.seq_cat.shape[-1])]
@@ -240,3 +241,57 @@ class TestEvaluateLoss:
         got = evaluate_loss(model, wide, ROLES, 4)
         bundle = transform_and_load(pdf, ROLES, 4)
         assert got == pytest.approx(model.loss(bundle), rel=1e-9)
+
+
+class TestShardedFitJobs:
+    """The sharded fits persist their shards and fill that cache with the
+    vocab aggregate: no separate vocab query over the input, no separate
+    ``count()``. A 3-epoch fit of the test frame starts 7 jobs: 3 epochs
+    plus 4 for the aggregate that builds the shards (9 when the vocab
+    query and the cache fill were separate)."""
+
+    @pytest.mark.parametrize("mode,jobs", [("ddp", 7), ("sgd", 7)])
+    def test_three_epoch_fit_jobs(self, spark, job_group, mode, jobs):
+        from caspr_spark.train_distributed import fit_deep_autoencoder_sgd
+        wide = spark.createDataFrame(_wide_pdf(n=60))
+        fit = (fit_deep_autoencoder_ddp if mode == "ddp"
+               else fit_deep_autoencoder_sgd)
+        with job_group(f"fit-{mode}") as rec:
+            _, hist = fit(wide, ROLES, 4, arch="mlp", hidden_dim=4,
+                          world_size=2, epochs=3, lr=3e-3, seed=9)
+        assert len(hist) == 3
+        assert len(rec["jobs"]) == jobs, rec
+        assert not rec["escaped"]
+
+
+def test_one_map_in_pandas_call():
+    """Every Python-worker pass of training, attribution and DEC goes
+    through ``train_distributed._fold_partitions``."""
+    import pathlib
+    import re
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "caspr_spark"
+    hits = []
+    for rel in ("train_distributed.py", "dec.py", "models/attribution.py"):
+        for i, line in enumerate((pkg / rel).read_text().splitlines(), 1):
+            if re.search(r"\bmapInPandas\(", line):
+                hits.append(f"{rel}:{i}")
+    assert len(hits) == 1 and hits[0].startswith("train_distributed.py:"), hits
+
+
+class TestEntryPoolSession:
+    """The parity queries overlap two fits on a pool thread; the wrapper
+    is given the session, so the thread inherits the caller's tags and
+    PySpark does not warn that they are lost."""
+
+    @pytest.mark.parametrize("name", ["train_linear_ae_ddp", "train_ae_ddp"])
+    def test_no_session_warning(self, spark, name):
+        import warnings
+
+        import __spark_entry__ as entry
+        from conftest import SF_DIR
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            entry.queries()[name](spark, SF_DIR).collect()
+        lost = [w for w in caught
+                if "Spark session is not provided" in str(w.message)]
+        assert not lost

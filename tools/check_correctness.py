@@ -10,7 +10,9 @@ Usage: python tools/check_correctness.py [--json PATH] [query_name ...]
 ``--json PATH`` additionally writes the per-round machine-readable record
 (same shape as the driver's CORRECTNESS_r{N}.json: totals plus per-query
 status / rows / sec / hash) so rotated-out operators keep a fresh local
-certification trail each round.
+certification trail each round. Rows-only queries (no oracle) carry the
+hash of their Spark output too, so diffing two records shows Spark-output
+drift for every query.
 """
 
 from __future__ import annotations
@@ -89,10 +91,13 @@ def main(names: list[str]) -> int:
             failures += 1
             continue
         if name not in oracles:
-            print(f"OK?   {name}: rows={len(sdf)} (no oracle, rows-only) "
-                  f"[{time.time()-t0:.1f}s]")
+            # no oracle to compare with, but the hash still lets two
+            # --json records be diffed for Spark-output drift
+            print(f"OK?   {name}: rows={len(sdf)} hash={value_hash(sdf)} "
+                  f"(no oracle, rows-only) [{time.time()-t0:.1f}s]")
             records[name] = {"status": "rows_only", "rows": len(sdf),
-                             "sec": round(time.time() - t0, 1)}
+                             "sec": round(time.time() - t0, 1),
+                             "hash": value_hash(sdf)}
             continue
         try:
             odf = con.sql(oracles[name]).df()
