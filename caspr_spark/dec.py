@@ -455,10 +455,10 @@ def fit_dec_joint_distributed(model, wide_df: DataFrame, roles,
     who = "fit_dec_joint_distributed"
     # one gradient partial per SHARD, not per input partition: hash-
     # sharded on the entity id so the driver fold is O(world_size x |θ|)
+    # the init sample (or the first frequency pass) scans every shard,
+    # which fills the cache
     wide = _shard_by_ids(wide_df, ids, world_size).persist()
     try:
-        wide.count()
-
         if init_centers is not None:
             centers = np.asarray(init_centers, dtype=np.float64)
         else:
@@ -605,10 +605,8 @@ def fit_dec_distributed(df: DataFrame, vec_col: str = "embedding",
         return g, loss_sum, changed
 
     who = "fit_dec_distributed"
-    vecs = df.select(vec_col).persist()
+    vecs = df.select(vec_col).persist()   # filled by the first _freq_pass
     try:
-        vecs.count()
-
         def _freq_pass(C):
             return sum(f for _, f in
                        _fold_partitions(vecs, _freq_part, C, who=who))

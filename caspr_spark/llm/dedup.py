@@ -1807,11 +1807,10 @@ def append_history_signatures_state(spark, state_dir: str, batch_id: int,
                          f"got {hash_family!r}")
     if check_state:
         # ``check_state=False`` is for a caller that ALREADY verified
-        # family+width against this dir in this process (the streaming
-        # sink runs check_signature_state pre-write on its first
-        # history fold, and every later frame in the dir was committed
-        # by that same sink instance at the same parameters) — the
-        # probe is one limit(1) Spark job per fold, pure latency on a
+        # family+width against this dir (the streaming sink runs
+        # check_signature_state pre-write in the same fold, or in an
+        # earlier fold under the stream's writer lease) — the probe is
+        # one limit(1) Spark job per fold, pure latency on a
         # micro-batch. Batch callers keep the default: the guard is
         # what makes a mismatched pre-existing state refuse loudly.
         check_signature_state(spark, state_dir, hash_family, num_hashes)

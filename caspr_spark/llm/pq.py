@@ -237,10 +237,10 @@ def append_pq_state(spark, state_dir: str, batch_id: int,
     fp = _codebook_fingerprint(codebooks)
     if check_state:
         # ``check_state=False``: caller already verified the codebook
-        # fingerprint against this dir in this process (the streaming
-        # sink probes on its first fold; later frames were committed by
-        # the same instance under the same pinned codebooks —
-        # single-writer lease). Batch callers keep the default probe.
+        # fingerprint against this dir (the streaming sink probes on its
+        # first fold under the stream's writer lease; later frames were
+        # committed by that writer under the same pinned codebooks).
+        # Batch callers keep the default probe.
         probe = probe_newest_nonempty(spark, state_dir,
                                       [F.col("codebook_fp")])
         if probe is not None and probe[0] != fp:

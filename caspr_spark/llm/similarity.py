@@ -585,9 +585,9 @@ def append_ivf_state(spark, state_dir: str, batch_id: int,
     (O(batch)); every ``compact_every``-th commit unions the live
     frames (:func:`_merge_ivf_frames` — disjoint ids by contract).
     Shares the :mod:`caspr_spark.state` commit protocol: ``_SUCCESS``
-    markers, replayed batch ids skip, out-of-order folds refuse,
-    single-writer lease via :func:`caspr_spark.state.claim_writer` if
-    the caller arms one. ``batch_id`` must be caller-supplied and
+    markers, replayed batch ids skip, out-of-order folds refuse; under
+    a stream, :func:`caspr_spark.streaming.ann_ingest_sink` holds the
+    single-writer lease (:func:`caspr_spark.state.claim_writer`). ``batch_id`` must be caller-supplied and
     strictly increasing across ingests (the day number).
 
     The quantizer is enforced against the COMMITTED state: every frame
@@ -627,11 +627,11 @@ def append_ivf_state(spark, state_dir: str, batch_id: int,
     fp = _centroid_fingerprint(centroids)
     if check_state:
         # ``check_state=False`` is for a caller that ALREADY verified
-        # the quantizer fingerprint against this dir in this process
-        # (the streaming sink probes on its first fold; every later
-        # frame was committed by that same instance under the same
-        # pinned centroids — single-writer lease), so the per-fold
-        # ``limit(1)`` probe job is pure micro-batch latency there.
+        # the quantizer fingerprint against this dir (the streaming
+        # sink probes on its first fold under the stream's writer
+        # lease; every later frame was committed by that writer under
+        # the same pinned centroids), so the per-fold ``limit(1)``
+        # probe job is pure micro-batch latency there.
         # Batch callers keep the default: the probe is what makes a
         # mismatched pre-existing state refuse loudly.
         probe = probe_newest_nonempty(spark, state_dir,

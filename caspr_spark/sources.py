@@ -134,55 +134,6 @@ def load_tables(spark: SparkSession, sf_dir: str,
     return {n: read_parquet_table(spark, f"{sf_dir}/{n}.parquet") for n in names}
 
 
-# (canonicalized-plan string, input files, file-split confs,
-#  defaultParallelism, applicationId) -> (n_partitions, sizeInBytes).
-# The partition-count probe below costs ~50 ms of driver-side PHYSICAL
-# PLANNING per fresh DataFrame (dozens of probes per bench pass, most
-# over identical plans — the same base-table scan probed by every
-# operator that consumes it). The memo serves only plans whose every
-# leaf is a file relation: the canonical text prints neither a file
-# relation's paths (``Relation [none#0L] parquet``) nor a local
-# relation's rows (``LocalRelation [none#0L]``), so the key adds the
-# plan's input files and the confs that split them into partitions,
-# and plans rooted in anything else (local relations, RDDs, ranges)
-# always probe. Within that scope two equal keys scan the same files
-# into the same splits, so a hit returns exactly what the probe would
-# (the full canonical string, not a 32-bit semanticHash: a collision
-# here would silently change a repartition decision and with it the
-# float-summation order of certified queries). Files are keyed by path
-# alone: parquet dirs are write-once in this engine (versioned state
-# frames supersede under NEW paths, corpus output dirs are write-once)
-# and Spark names every written file uniquely.
-_NPARTS_CACHE: dict[tuple, tuple[int, int | None]] = {}
-_NPARTS_CACHE_MAX = 1024
-_NPARTS_CONFS = ("spark.sql.files.maxPartitionBytes",
-                 "spark.sql.files.openCostInBytes",
-                 "spark.sql.shuffle.partitions")
-# probe telemetry (driver-side ints, no jobs): calls vs physical-planning
-# probes actually paid
-_NPARTS_STATS = {"calls": 0, "misses": 0}
-
-
-def _nparts_key(df: DataFrame) -> tuple | None:
-    """``ensure_parallelism``'s memo key, or None unless every leaf of
-    the analyzed plan is a file relation."""
-    plan = df._jdf.queryExecution().analyzed()
-    leaves = plan.collectLeaves().iterator()
-    while leaves.hasNext():
-        leaf = leaves.next()
-        if (leaf.getClass().getSimpleName() != "LogicalRelation"
-                or leaf.relation().getClass().getSimpleName()
-                != "HadoopFsRelation"):
-            return None
-    spark = df.sparkSession
-    files = (spark._jvm.scala.collection.immutable.ArraySeq
-             .unsafeWrapArray(df._jdf.inputFiles()).mkString("\n"))
-    sc = spark.sparkContext
-    return (plan.canonicalized().toString(), files,
-            tuple(spark.conf.get(k) for k in _NPARTS_CONFS),
-            sc.defaultParallelism, sc.applicationId)
-
-
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None,
                        cpu_light: bool = False) -> DataFrame:
     """Repartition up if the plan has fewer partitions than cores.
@@ -200,49 +151,24 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None,
     kernels (the default) always get the full core count — for them the
     bytes-per-task heuristic under-parallelizes badly (shingling 5k docs
     is minutes of CPU on single-digit MB of input).
-
-    Probe results of file-rooted plans are memoized (``_NPARTS_CACHE``,
-    keyed by canonical plan, input files and split confs): repeat probes
-    of a semantically identical frame over the same files skip the
-    physical planning, returning the identical count — the repartition
-    DECISION (and hence certified partition layouts) is unchanged by
-    construction.
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    _NPARTS_STATS["calls"] += 1
-    key = None
-    try:
-        key = _nparts_key(df)
-    except Exception:
-        pass  # e.g. a streaming plan: probe without the memo
-    hit = _NPARTS_CACHE.get(key) if key is not None else None
-    n = hit[0] if hit is not None else None
-    size = hit[1] if hit is not None else None
     if min_partitions is None and cpu_light:
-        if size is None:
-            try:
-                size = int(df._jdf.queryExecution().optimizedPlan()
-                           .stats().sizeInBytes())
-            except Exception:
-                pass  # stats unavailable (e.g. streaming plan): keep cores
-        if size is not None:
-            target = max(4, min(target, size // (2 << 20) + 1))
-    if n is None:
-        _NPARTS_STATS["misses"] += 1
         try:
-            # Same physical-plan RDD ``df.rdd`` wraps, minus the Python-
-            # serialization stages that wrapper prepends — identical
-            # partition count by construction, ~25 ms less driver work per
-            # probe (this fires on every fresh DataFrame handed to a
-            # shingling/hash path).
-            n = df._jdf.queryExecution().toRdd().getNumPartitions()
+            size = int(df._jdf.queryExecution().optimizedPlan()
+                       .stats().sizeInBytes())
+            target = max(4, min(target, size // (2 << 20) + 1))
         except Exception:
-            n = df.rdd.getNumPartitions()
-    if key is not None and hit != (n, size):
-        # a miss, or a size estimated on a hit that was stored without one
-        if len(_NPARTS_CACHE) >= _NPARTS_CACHE_MAX:
-            _NPARTS_CACHE.clear()
-        _NPARTS_CACHE[key] = (n, size)
+            pass  # stats unavailable (e.g. streaming plan): keep cores
+    try:
+        # Same physical-plan RDD ``df.rdd`` wraps, minus the Python-
+        # serialization stages that wrapper prepends — identical
+        # partition count by construction, ~25 ms less driver work per
+        # probe (this fires on every fresh DataFrame handed to a
+        # shingling/hash path).
+        n = df._jdf.queryExecution().toRdd().getNumPartitions()
+    except Exception:
+        n = df.rdd.getNumPartitions()
     if n < target:
         return df.repartition(target)
     return df

@@ -33,8 +33,12 @@ Commit rules shared by every writer:
   ids and each see the other's commits as replays to skip. The
   out-of-order refusal catches most interleavings after the fact;
   :func:`claim_writer` is the up-front tripwire — a ``_writer`` lease
-  carrying the writer's identity (its checkpoint dir), refused on
-  mismatch at the first fold instead of corrupting quietly.
+  carrying the writer's identity, refused on mismatch at the first
+  fold instead of corrupting quietly. The streaming sinks always arm
+  it with the stream's query id, which Structured Streaming keeps in
+  the checkpoint: a restart from the same checkpoint re-claims, a
+  stream under another checkpoint refuses. Direct (non-stream) folds
+  take no lease and run every state probe instead.
 
 Everything goes through the Hadoop FileSystem API, not ``os`` — state
 dirs are ``hdfs://``/``s3a://`` in production, local only in tests.
@@ -172,7 +176,10 @@ def live_frames(listing: list,
 def claim_writer(spark, state_dir: str, writer_id: str) -> None:
     """Single-writer tripwire (see the module docstring's contract):
     claim ``state_dir`` for ``writer_id`` — the stable identity of the
-    logical writer, e.g. its streaming checkpoint dir. The first claim
+    logical writer: the streaming sinks pass the stream's query id
+    (the ``sql.streaming.queryId`` local property of a
+    ``foreachBatch`` thread, kept in the checkpoint, so the same after
+    a restart and different under another checkpoint). The first claim
     writes a ``_writer`` lease (JSON, staged to a per-attempt temp file
     then renamed into place — the rename is the claim, so a crash
     mid-write can never leave a zero-byte/partial lease — and EVERY

@@ -408,6 +408,51 @@ from caspr_spark.state import (check_layout, live_frames, prune_state,
                                state_listing, state_path)
 
 
+def _leased(state_dir: str, fold):
+    """The ``foreachBatch`` callable of a state sink: runs
+    ``fold(batch_df, batch_id, trusted)`` under the single-writer lease
+    on ``state_dir``.
+
+    On a stream's thread the writer is the stream's query id (the
+    ``sql.streaming.queryId`` local property: the same after a restart
+    from one checkpoint, different under another checkpoint). The
+    first fold under each id claims the dir for it
+    (:func:`caspr_spark.state.claim_writer`), so a second stream
+    pointed at the same state dir fails at its first fold instead of
+    interleaving batch ids. ``trusted`` is True only while that lease
+    is held and an earlier fold under it completed: that fold ran the
+    sink's state probe, and every frame since was committed by this
+    writer, so the sink may skip the probe. A direct caller has no
+    query id: it takes no lease, ``trusted`` stays False and every
+    fold probes, as the batch APIs do."""
+    from caspr_spark.state import claim_writer
+
+    held = {}          # query id -> an earlier fold under its lease completed
+
+    def _run(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        qid = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+        if qid is not None and qid not in held:
+            claim_writer(spark, state_dir, qid)
+            held[qid] = False
+        fold(batch_df, batch_id, held.get(qid, False))
+        if qid is not None:
+            held[qid] = True
+
+    return _run
+
+
+def _drain(writer, what: str, timeout_sec: int) -> None:
+    """Start ``writer`` with an ``availableNow`` trigger and wait until
+    it has processed everything in its source. On timeout the query is
+    stopped first, so it cannot keep mutating the sink, then this
+    raises instead of leaving a partial result."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(f"{what} did not drain within {timeout_sec}s")
+
+
 def _census_state_listing(spark, state_dir: str) -> list[tuple[int, str]]:
     """Committed census state dirs as sorted ``(batch_id, kind)``
     pairs (see :mod:`caspr_spark.state` for the shared dir protocol:
@@ -448,8 +493,7 @@ def read_gram_census_state(spark, state_dir: str, n: int):
 def gram_census_sink(state_dir: str, id_col: str = "doc_id",
                      text_col: str = "text", n: int = 8,
                      track_first: bool = False,
-                     layout: str = "rebuild", compact_every: int = 8,
-                     writer_id: str | None = None):
+                     layout: str = "rebuild", compact_every: int = 8):
     """The PRODUCTION sink for the streaming census — the
     ``foreachBatch`` + census-fold composition
     :func:`streaming_gram_census`'s docstring prescribes, as a ready
@@ -493,12 +537,10 @@ def gram_census_sink(state_dir: str, id_col: str = "doc_id",
     :func:`~caspr_spark.llm.dedup.trim_duplicated_spans_incremental`
     consumes.
 
-    ``writer_id`` (pass the stream's CHECKPOINT DIR) arms the
-    single-writer tripwire: the first fold claims the state dir via
-    :func:`caspr_spark.state.claim_writer`, so a second stream
-    misconfigured onto the same state dir with a different checkpoint
-    fails loudly at its first fold instead of interleaving batch ids
-    (each stream numbers batches from its own checkpoint — the commit
+    On a stream, the first fold claims the state dir for the stream's
+    query id (:func:`_leased`): a second stream with another checkpoint
+    fails at its first fold instead of interleaving batch ids (each
+    stream numbers batches from its own checkpoint, and the commit
     protocol cannot tell their ids apart after the fact).
     """
     if layout not in ("rebuild", "delta"):
@@ -508,14 +550,9 @@ def gram_census_sink(state_dir: str, id_col: str = "doc_id",
         raise ValueError(f"compact_every must be >= 2, got {compact_every}")
     from caspr_spark.llm.dedup import (build_gram_census,
                                        merge_gram_censuses)
-    from caspr_spark.state import claim_writer, fold_commit
+    from caspr_spark.state import fold_commit
 
-    claimed = []
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        if writer_id is not None and not claimed:
-            claim_writer(batch_df.sparkSession, state_dir, writer_id)
-            claimed.append(True)
+    def _fold(batch_df: DataFrame, batch_id: int, _trusted: bool) -> None:
         fold_commit(
             batch_df.sparkSession, state_dir, batch_id, layout,
             compact_every,
@@ -523,7 +560,7 @@ def gram_census_sink(state_dir: str, id_col: str = "doc_id",
                               track_first=track_first),
             lambda frames: merge_gram_censuses(frames, n))
 
-    return _fold
+    return _leased(state_dir, _fold)
 
 
 def prune_census_state(spark, state_dir: str, keep_last: int = 2) -> list[int]:
@@ -563,22 +600,13 @@ def run_gram_census_to_state(stream: DataFrame, state_dir: str,
     a long-lived query). The checkpoint dir is what makes restarts
     resume at the next batch id instead of refolding from scratch —
     reuse it across invocations, and keep ``layout`` stable per state
-    dir (the sink refuses a mismatch). The checkpoint dir doubles as
-    the sink's ``writer_id``: a second stream pointed at this state
-    dir under a DIFFERENT checkpoint refuses at its first fold
-    (:func:`caspr_spark.state.claim_writer`)."""
-    q = (stream.writeStream
-         .foreachBatch(gram_census_sink(state_dir, id_col, text_col, n,
-                                        track_first, layout,
-                                        compact_every,
-                                        writer_id=checkpoint_dir))
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True).start())
-    finished = q.awaitTermination(timeout_sec)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"gram census stream did not drain within {timeout_sec}s")
+    dir (the sink refuses a mismatch)."""
+    _drain(stream.writeStream
+           .foreachBatch(gram_census_sink(state_dir, id_col, text_col, n,
+                                          track_first, layout,
+                                          compact_every))
+           .option("checkpointLocation", checkpoint_dir),
+           "gram census stream", timeout_sec)
     return read_gram_census_state(stream.sparkSession, state_dir, n)
 
 
@@ -589,8 +617,7 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
                       shingle_size: int = 3, threshold: float = 0.8,
                       hash_family: str = "fast",
                       compact_every: int = 8,
-                      batch_internal: bool = True,
-                      writer_id: str | None = None):
+                      batch_internal: bool = True):
     """EXACTLY-ONCE streaming corpus dedup — the continuous-crawl
     composition of the incremental-dedup state layer, as a ready
     ``foreachBatch`` callable. Per micro-batch ``b``:
@@ -645,8 +672,7 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
     history candidates come from the same banded join over batch ∪
     history band keys, so the fold plans one candidate pass, not two
     chained ones (each of which AQE would stage and broadcast on its
-    own). ``writer_id`` (pass the checkpoint dir) arms the
-    single-writer lease on the state dir. Kept docs are re-read from
+    own). Kept docs are re-read from
     the just-written parquet for the fold, so output and state are
     derived from the same bytes and the batch plan runs once;
     per-batch caches are released by a ``cache_scope`` around each
@@ -663,20 +689,23 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
                                        dedup_against_history, exact_dedup,
                                        read_history_keys_state,
                                        read_history_signatures_state)
-    from caspr_spark.state import (claim_writer, output_committed,
-                                   state_listing)
+    from caspr_spark.state import output_committed, state_listing
 
-    claimed = []
-    family_verified = []
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
+    def _fold(batch_df: DataFrame, batch_id: int, trusted: bool) -> None:
         from caspr_spark.cache import cache_scope
 
         spark = batch_df.sparkSession
-        if writer_id is not None and not claimed:
-            claim_writer(spark, state_dir, writer_id)
-            claimed.append(True)
         committed = [b for b, _ in state_listing(spark, state_dir)]
+        if mode == "near" and committed and not trusted:
+            # PRE-WRITE guard, ahead of the replay skip as in the IVF
+            # and PQ sinks: verify BOTH the hash family AND the
+            # signature width against the committed state before any
+            # output bytes are written. A mismatched state would
+            # otherwise mis-band the history join silently and commit
+            # an under-deduped output dir that a corrected replay then
+            # skips and folds permanently.
+            check_signature_state(spark, state_dir, hash_family,
+                                  num_hashes)
         if batch_id in committed:
             return               # replay of a committed batch — no-op
         if any(b >= batch_id for b in committed):
@@ -717,22 +746,6 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
             batch_sigs._caspr_hash_family = hash_family
             history = None
             if committed:
-                if not family_verified:
-                    # PRE-WRITE guard (r14 ADVICE): the FIRST history
-                    # fold of this sink instance verifies BOTH the
-                    # hash family AND the signature width against the
-                    # committed state — before any output bytes are
-                    # written. A width-mismatched pre-existing state
-                    # would otherwise mis-band the history join
-                    # silently, commit an under-deduped output dir,
-                    # and only the post-write fold guard would raise;
-                    # the corrected replay then skips the marked dir
-                    # and folds the stale bytes permanently. Every
-                    # later frame passed the fold-side guard against
-                    # the same family/width, so one probe suffices.
-                    check_signature_state(spark, state_dir,
-                                          hash_family, num_hashes)
-                    family_verified.append(True)
                 history = _signature_side(
                     read_history_signatures_state(spark, state_dir),
                     "history_id")
@@ -768,28 +781,21 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
             # (kept_written ids) but reuses the batch's already-computed
             # signature values instead of a second full shingle+minhash
             # pass — deterministic build, so the committed state bytes
-            # are identical (regression-tested in test_streaming)
-            # check_state=False: the fold-side family/width probe is one
-            # limit(1) Spark job per micro-batch, and this sink already
-            # enforces the same contract pre-write — the first history
-            # fold of the instance runs check_signature_state before any
-            # output bytes, and every later frame under state_dir was
-            # committed by this same instance at these same parameters
-            # (single-writer lease), so the probe could only re-confirm
-            # what this process just wrote
+            # are identical (regression-tested in test_streaming); the
+            # family/width probe already ran pre-write, in this fold or
+            # in an earlier one under the held lease
             append_history_signatures_state(
                 spark, state_dir, batch_id, kept_written, id_col,
                 text_col, num_hashes, shingle_size, hash_family,
                 compact_every, signatures=batch_sigs, check_state=False)
 
-    return _fold
+    return _leased(state_dir, _fold)
 
 
 def ann_ingest_sink(state_dir: str, centroids: list,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     compact_every: int = 8,
-                    partition_by_cell: bool = False,
-                    writer_id: str | None = None):
+                    partition_by_cell: bool = False):
     """EXACTLY-ONCE streaming embedding ingest into the versioned IVF
     index — the Structured-Streaming composition of
     :func:`caspr_spark.llm.similarity.append_ivf_state`, as a ready
@@ -803,38 +809,21 @@ def ann_ingest_sink(state_dir: str, centroids: list,
     ``batch_id + 1`` so the first micro-batch commits as 1 (state ids
     must be positive and strictly increasing; the +1 is stable across
     restarts because the checkpoint replays ids, never renumbers).
-    ``writer_id`` (pass the checkpoint dir) arms the single-writer
-    lease; ``partition_by_cell`` writes frames hive-partitioned on
+    ``partition_by_cell`` writes frames hive-partitioned on
     ``ivf_cell`` so probe searches get dynamic partition pruning (see
     :func:`~caspr_spark.llm.similarity.append_ivf_state`). Search the
     accumulated index any time with
     :func:`caspr_spark.llm.similarity.cosine_topk_ivf_state`; prune
     superseded frames with :func:`caspr_spark.state.prune_state`."""
     from caspr_spark.llm.similarity import append_ivf_state
-    from caspr_spark.state import claim_writer
 
-    claimed = []
-    fp_verified = []
+    def _fold(batch_df: DataFrame, batch_id: int, trusted: bool) -> None:
+        append_ivf_state(batch_df.sparkSession, state_dir, batch_id + 1,
+                         batch_df, centroids, id_col, vec_col,
+                         compact_every, partition_by_cell=partition_by_cell,
+                         check_state=not trusted)
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if writer_id is not None and not claimed:
-            claim_writer(spark, state_dir, writer_id)
-            claimed.append(True)
-        # fingerprint probe once per sink instance (round 16): the
-        # FIRST fold verifies the committed state's quantizer (the
-        # probe runs before the replay skip, so a replayed first batch
-        # still verifies); every later frame under state_dir was
-        # committed by this same instance under the same pinned
-        # centroids (single-writer lease), so the per-fold limit(1)
-        # probe job would only re-confirm what this process just wrote
-        append_ivf_state(spark, state_dir, batch_id + 1, batch_df,
-                         centroids, id_col, vec_col, compact_every,
-                         partition_by_cell=partition_by_cell,
-                         check_state=not fp_verified)
-        fp_verified.append(True)
-
-    return _fold
+    return _leased(state_dir, _fold)
 
 
 def run_ann_ingest_to_state(stream: DataFrame, state_dir: str,
@@ -846,28 +835,20 @@ def run_ann_ingest_to_state(stream: DataFrame, state_dir: str,
     (:func:`~caspr_spark.llm.similarity.read_ivf_state`).
     ``availableNow`` trigger — the batch-job-shaped invocation; reuse
     the checkpoint dir across invocations to resume at the next batch
-    id. The checkpoint dir doubles as the single-writer ``writer_id``
-    on the state dir."""
+    id."""
     from caspr_spark.llm.similarity import read_ivf_state
 
-    q = (stream.writeStream
-         .foreachBatch(ann_ingest_sink(state_dir, centroids,
-                                       writer_id=checkpoint_dir,
-                                       **sink_kwargs))
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True).start())
-    finished = q.awaitTermination(timeout_sec)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"ANN ingest stream did not drain within {timeout_sec}s")
+    _drain(stream.writeStream
+           .foreachBatch(ann_ingest_sink(state_dir, centroids,
+                                         **sink_kwargs))
+           .option("checkpointLocation", checkpoint_dir),
+           "ANN ingest stream", timeout_sec)
     return read_ivf_state(stream.sparkSession, state_dir)
 
 
 def pq_ingest_sink(state_dir: str, codebooks,
                    id_col: str = "vec_id", vec_col: str = "embedding",
-                   compact_every: int = 8,
-                   writer_id: str | None = None):
+                   compact_every: int = 8):
     """EXACTLY-ONCE streaming embedding ingest into the versioned PQ
     code table — :func:`ann_ingest_sink`'s sibling for
     :func:`caspr_spark.llm.pq.append_pq_state`, as a ready
@@ -878,29 +859,16 @@ def pq_ingest_sink(state_dir: str, codebooks,
     mismatched codebook refuses via the fingerprint guard. Same
     ``batch_id + 1`` offset as the other sinks (state ids are
     positive; stable across restarts because the checkpoint replays
-    ids). ``writer_id`` (pass the checkpoint dir) arms the
-    single-writer lease. Search the accumulated table any time with
+    ids). Search the accumulated table any time with
     :func:`caspr_spark.llm.pq.adc_topk_pq_state`."""
     from caspr_spark.llm.pq import append_pq_state
-    from caspr_spark.state import claim_writer
 
-    claimed = []
-    fp_verified = []
+    def _fold(batch_df: DataFrame, batch_id: int, trusted: bool) -> None:
+        append_pq_state(batch_df.sparkSession, state_dir, batch_id + 1,
+                        batch_df, codebooks, id_col, vec_col,
+                        compact_every, check_state=not trusted)
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if writer_id is not None and not claimed:
-            claim_writer(spark, state_dir, writer_id)
-            claimed.append(True)
-        # codebook probe once per sink instance — same rationale as
-        # ann_ingest_sink's centroid probe skip (single-writer lease;
-        # the first fold's probe runs before the replay skip)
-        append_pq_state(spark, state_dir, batch_id + 1, batch_df,
-                        codebooks, id_col, vec_col, compact_every,
-                        check_state=not fp_verified)
-        fp_verified.append(True)
-
-    return _fold
+    return _leased(state_dir, _fold)
 
 
 def read_dedup_corpus(spark, out_dir: str) -> DataFrame:
@@ -1004,19 +972,12 @@ def run_dedup_corpus_to_state(stream: DataFrame, state_dir: str,
     return the deduplicated corpus so far (:func:`read_dedup_corpus`).
     ``availableNow`` trigger — the batch-job-shaped invocation; reuse
     the checkpoint dir across invocations to resume at the next batch
-    id. The checkpoint dir doubles as the single-writer ``writer_id``
-    on the state dir."""
-    q = (stream.writeStream
-         .foreachBatch(dedup_corpus_sink(state_dir, out_dir,
-                                         writer_id=checkpoint_dir,
-                                         **sink_kwargs))
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True).start())
-    finished = q.awaitTermination(timeout_sec)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"dedup corpus stream did not drain within {timeout_sec}s")
+    id."""
+    _drain(stream.writeStream
+           .foreachBatch(dedup_corpus_sink(state_dir, out_dir,
+                                           **sink_kwargs))
+           .option("checkpointLocation", checkpoint_dir),
+           "dedup corpus stream", timeout_sec)
     return read_dedup_corpus(stream.sparkSession, out_dir)
 
 
@@ -1025,15 +986,10 @@ def run_to_memory(streaming_df: DataFrame, name: str,
                   timeout_sec: int = 120) -> DataFrame:
     """Drain a finite stream into an in-memory table and return it.
 
-    Raises on timeout instead of returning a partial table (the query is
-    stopped first so it can't keep mutating the sink)."""
-    q = (streaming_df.writeStream.format("memory").queryName(name)
-         .outputMode(output_mode).trigger(availableNow=True).start())
-    finished = q.awaitTermination(timeout_sec)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"stream {name!r} did not drain within {timeout_sec}s")
+    Raises on timeout instead of returning a partial table
+    (:func:`_drain`)."""
+    _drain(streaming_df.writeStream.format("memory").queryName(name)
+           .outputMode(output_mode), f"stream {name!r}", timeout_sec)
     return streaming_df.sparkSession.table(name)
 
 

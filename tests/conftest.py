@@ -45,6 +45,19 @@ def job_group(spark):
     return run
 
 
+@contextlib.contextmanager
+def as_stream(spark, query_id):
+    """Run the block as a ``foreachBatch`` thread of the stream
+    ``query_id`` would: the state sinks take the writer's identity from
+    the ``sql.streaming.queryId`` local property of the calling thread."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("sql.streaming.queryId", query_id)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("sql.streaming.queryId", None)
+
+
 @pytest.fixture(scope="session")
 def events(spark):
     from caspr_spark.sources import read_parquet_table

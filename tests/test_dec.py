@@ -505,3 +505,38 @@ class TestShardBalance:
                        .collect()}
             assert len(counts) == w, counts          # every shard used
             assert min(counts.values()) > 0
+
+
+class TestDecFitJobs:
+    """The distributed DEC fits persist their input and let the first
+    full pass fill that cache (the md5-ordered init sample, or the first
+    frequency pass): no separate ``count()`` job. A 3-epoch fit on the
+    test frames starts 2 jobs per epoch, plus the init sample's and, for
+    the joint fit, the sharding aggregate's."""
+
+    @pytest.mark.parametrize("init,jobs", [("given", 6), ("sampled", 9)])
+    def test_centroid_fit_jobs(self, spark, job_group, init, jobs):
+        from caspr_spark.dec import fit_dec_distributed, kmeans_np
+        df, Z = TestDistributedFit()._df_and_Z(spark)
+        c0 = kmeans_np(Z, 3, seed=11)[0] if init == "given" else None
+        with job_group(f"dec-{init}") as rec:
+            _, h = fit_dec_distributed(df, "embedding", k=3, lr=0.3,
+                                       epochs=3, tol=0.0, init_centers=c0)
+        assert len(h) == 3
+        assert len(rec["jobs"]) == jobs, rec
+        assert not rec["escaped"]
+
+    @pytest.mark.parametrize("init,jobs", [("given", 8), ("sampled", 9)])
+    def test_joint_fit_jobs(self, spark, job_group, init, jobs):
+        from caspr_spark.dec import fit_dec_joint_distributed
+        _, wide, roles, model = TestJointDecDistributed()._wide_and_model(
+            spark, n=60)
+        c0 = (np.zeros((3, 6)) + np.arange(3)[:, None] if init == "given"
+              else None)
+        with job_group(f"dec-joint-{init}") as rec:
+            _, _, h = fit_dec_joint_distributed(
+                model, wide, roles, 4, 3, lr_centers=0.3, lr_encoder=3e-3,
+                epochs=3, init_centers=c0, tol=0.0)
+        assert len(h) == 3
+        assert len(rec["jobs"]) == jobs, rec
+        assert not rec["escaped"]

@@ -53,3 +53,17 @@ class TestEntryContract:
         computed = compute_window(for_round=16)
         in_code = list(entry.queries())[:WINDOW_SIZE]
         assert computed == in_code
+
+    def test_certification_table_from_any_directory(self, tmp_path,
+                                                    monkeypatch, capsys):
+        """The certification table reads the same records as the window
+        tool, anchored at the repo root, whatever the working
+        directory."""
+        import runpy
+        from pathlib import Path
+        tool = Path(__file__).parent.parent / "tools" / \
+            "gen_certification_table.py"
+        monkeypatch.chdir(tmp_path)
+        runpy.run_path(str(tool), run_name="__main__")
+        last = capsys.readouterr().out.strip().splitlines()[-1]
+        assert " 0 driver-certified" not in last, last

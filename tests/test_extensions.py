@@ -703,23 +703,27 @@ class TestPQState:
     def test_sink_callable_replays(self, embeddings, tmp_path):
         """pq_ingest_sink: the foreachBatch callable folds at
         batch_id+1, a post-crash re-delivery of the same micro-batch
-        is a protocol no-op, and a second writer refuses the lease."""
+        is a protocol no-op, and a second stream refuses the lease."""
+        from conftest import as_stream
+
         from caspr_spark.llm.pq import read_pq_state
         from caspr_spark.streaming import pq_ingest_sink
         spark = embeddings.sparkSession
         cb, _q = self._cb()
         state = str(tmp_path / "pq")
-        sink = pq_ingest_sink(state, cb, writer_id="ckpt-A")
+        sink = pq_ingest_sink(state, cb)
         b0 = embeddings.filter(F.col("vec_id") % 2 == 0)
         b1 = embeddings.filter(F.col("vec_id") % 2 == 1)
-        sink(b0, 0)
-        sink(b1, 1)
-        n = read_pq_state(spark, state).count()
-        assert n == embeddings.count()
-        sink(b1, 1)                        # re-delivered micro-batch
-        assert read_pq_state(spark, state).count() == n
-        other = pq_ingest_sink(state, cb, writer_id="ckpt-B")
-        with pytest.raises(RuntimeError, match="claimed by writer"):
+        with as_stream(spark, "query-A"):
+            sink(b0, 0)
+            sink(b1, 1)
+            n = read_pq_state(spark, state).count()
+            assert n == embeddings.count()
+            sink(b1, 1)                    # re-delivered micro-batch
+            assert read_pq_state(spark, state).count() == n
+        other = pq_ingest_sink(state, cb)
+        with as_stream(spark, "query-B"), \
+                pytest.raises(RuntimeError, match="claimed by writer"):
             other(b0, 2)
 
 

@@ -394,85 +394,59 @@ class TestTopkPerGroup:
             topk_per_group(df, [], ["v"], k=1)
 
 
-class TestEnsureParallelismCache:
-    def test_probe_memo_same_decision(self, spark, tmp_path):
-        """Round-16: the partition-count probe memo must return the
-        identical count (and hence identical repartition decision) for
-        a semantically identical fresh frame, and must MISS for a
-        different plan."""
-        from caspr_spark.sources import _NPARTS_CACHE, ensure_parallelism
-        p = str(tmp_path / "t.parquet")
-        spark.range(100).selectExpr("id", "id * 2 as v") \
-             .coalesce(1).write.parquet(p)
-        _NPARTS_CACHE.clear()
-        a = ensure_parallelism(spark.read.parquet(p))
-        n_cache = len(_NPARTS_CACHE)
-        assert n_cache == 1
-        b = ensure_parallelism(spark.read.parquet(p))
-        assert len(_NPARTS_CACHE) == n_cache          # hit, no new entry
-        assert a.rdd.getNumPartitions() == b.rdd.getNumPartitions()
-        # a different plan (projection) is a different key
-        ensure_parallelism(spark.read.parquet(p).select("id"))
-        assert len(_NPARTS_CACHE) == n_cache + 1
-
-    def test_cpu_light_hit_stores_size(self, spark, tmp_path):
-        """A plain probe stores no size estimate; a later ``cpu_light``
-        probe of the same frame computes it and writes it back, so the
-        next ``cpu_light`` hit skips the optimizer's estimate."""
-        from caspr_spark.sources import (_NPARTS_CACHE, _nparts_key,
-                                         ensure_parallelism)
-        p = str(tmp_path / "s.parquet")
-        spark.range(100).coalesce(1).write.parquet(p)
-        _NPARTS_CACHE.clear()
-        ensure_parallelism(spark.read.parquet(p))
-        key = _nparts_key(spark.read.parquet(p))
-        assert _NPARTS_CACHE[key][1] is None
-        ensure_parallelism(spark.read.parquet(p), cpu_light=True)
-        n, size = _NPARTS_CACHE[key]
-        assert n == 1 and size is not None and size > 0
-
-    def test_probe_memo_keys_on_input_files(self, spark, tmp_path):
-        """Two parquet dirs with the same schema analyze to the same
-        canonical plan (``Relation [none#0L] parquet`` prints no path),
-        but split into different partition counts: the second probe must
-        not reuse the first's count. A repeat read of either dir still
-        hits the memo."""
-        from caspr_spark.sources import (_NPARTS_CACHE, _NPARTS_STATS,
-                                         ensure_parallelism)
+class TestEnsureParallelism:
+    def test_parquet_dirs_by_partition_count(self, spark, tmp_path):
+        """Two parquet dirs with the same schema split into different
+        partition counts: the narrow one is widened, the wide one is
+        returned as is, and a repeat read decides the same."""
+        from caspr_spark.sources import ensure_parallelism
         one, six = str(tmp_path / "one"), str(tmp_path / "six")
         spark.range(60).coalesce(1).write.parquet(one)
         spark.range(60).repartition(6).write.parquet(six)
         assert spark.read.parquet(one).rdd.getNumPartitions() == 1
         n = spark.read.parquet(six).rdd.getNumPartitions()
         assert n > 1
-        _NPARTS_CACHE.clear()
         a = spark.read.parquet(one)
         assert ensure_parallelism(a, n) is not a        # 1 < n: widened
         b = spark.read.parquet(six)
         assert ensure_parallelism(b, n) is b            # n >= n: as is
-        misses = _NPARTS_STATS["misses"]
         again = spark.read.parquet(six)
         assert ensure_parallelism(again, n) is again
-        assert _NPARTS_STATS["misses"] == misses        # memo hit
-        assert len(_NPARTS_CACHE) == 2
 
-    def test_probe_memo_skips_local_relations(self, spark):
-        """Local relations of 1 and many rows print the same canonical
-        plan (``LocalRelation [none#0L]``) but have 1 and
-        ``defaultParallelism`` partitions: each must be probed."""
+    def test_local_frames_by_partition_count(self, spark):
+        """Local relations of 1 and many rows have 1 and
+        ``defaultParallelism`` partitions: only the first is widened."""
         import pyarrow as pa
 
-        from caspr_spark.sources import _NPARTS_CACHE, ensure_parallelism
+        from caspr_spark.sources import ensure_parallelism
         dp = spark.sparkContext.defaultParallelism
         assert dp > 1
         small = spark.createDataFrame(pa.table({"a": [1]}), "a long")
         big = spark.createDataFrame(pa.table({"a": list(range(2 * dp))}),
                                     "a long")
-        _NPARTS_CACHE.clear()
         assert ensure_parallelism(small) is not small
         assert ensure_parallelism(big) is big
-        assert not _NPARTS_CACHE
 
+    def test_cpu_light_size_cap(self, spark, tmp_path, monkeypatch):
+        """``cpu_light`` caps the target by the optimizer's size estimate
+        (~2 MB per task, floor 4): a tiny one-file frame gets 4
+        partitions, not one per core (16 cores here, whatever the host
+        has)."""
+        from pyspark import SparkContext
+
+        from caspr_spark.sources import ensure_parallelism
+        dp = 16
+        monkeypatch.setattr(SparkContext, "defaultParallelism",
+                            property(lambda self: dp))
+        p = str(tmp_path / "s.parquet")
+        spark.range(100).coalesce(1).write.parquet(p)
+        light = ensure_parallelism(spark.read.parquet(p), cpu_light=True)
+        assert light.rdd.getNumPartitions() == 4
+        heavy = ensure_parallelism(spark.read.parquet(p))
+        assert heavy.rdd.getNumPartitions() == dp
+
+
+class TestEnsureParallelismCache:
     def test_schema_memo_invalidates_on_rewrite(self, spark, tmp_path):
         """Round-16 schema memo: a repeat read of an unchanged path is
         schema-pinned (cache hit) and identical; overwriting the path

@@ -396,3 +396,59 @@ class TestStateProtocolProperties:
         want = {hashlib.md5(t.encode()).hexdigest() for _, t in docs}
         assert len(keys) == len(set(keys)) == len(want)
         assert set(keys) == want
+
+    @given(plan=st.lists(st.sampled_from(["A", "B"]), min_size=3,
+                         max_size=5))
+    @settings(max_examples=3, deadline=None, derandomize=True,
+              suppress_health_check=[HealthCheck.function_scoped_fixture])
+    def test_corpus_sink_two_writers_any_interleaving(self, spark, plan):
+        """Two streams misconfigured onto one state dir, their folds
+        interleaved at random, each numbering batches from 0: the
+        stream that folds first holds the lease, every fold of the
+        other refuses before writing anything, and the committed corpus
+        and key state equal the first stream's folds alone (the
+        first-seen-wins exact dedup of its batches)."""
+        import hashlib
+        import os
+        import tempfile
+
+        from conftest import as_stream
+
+        from caspr_spark.llm.dedup import read_history_keys_state
+        from caspr_spark.streaming import (dedup_corpus_sink,
+                                           read_dedup_corpus)
+
+        def files(*dirs):
+            return sorted(os.path.join(root, f) for d in dirs
+                          for root, _, fs in os.walk(d) for f in fs)
+
+        state = tempfile.mkdtemp(prefix="prop_lease_s_")
+        out = tempfile.mkdtemp(prefix="prop_lease_o_")
+        sinks = {w: dedup_corpus_sink(state, out) for w in "AB"}
+        next_id = {"A": 0, "B": 0}
+        owner, kept = plan[0], {}          # text -> first-seen doc id
+        for w in plan:
+            b = next_id[w]
+            next_id[w] += 1
+            base = 100 * b + (0 if w == "A" else 1000)
+            rows = [(base + i, f"shared text {(b + i) % 4}")
+                    for i in range(3)]
+            batch = spark.createDataFrame(rows, "doc_id long, text string")
+            with as_stream(spark, f"query-{w}"):
+                if w == owner:
+                    sinks[w](batch, b)
+                    for i, t in sorted(rows):
+                        kept.setdefault(t, i)
+                    continue
+                before = files(state, out)
+                with pytest.raises(RuntimeError, match="claimed by writer"):
+                    sinks[w](batch, b)
+                assert files(state, out) == before, f"{plan}: {w} wrote"
+
+        got = {(r.doc_id, r.text)
+               for r in read_dedup_corpus(spark, out).collect()}
+        assert got == {(i, t) for t, i in kept.items()}, plan
+        keys = {(r.content_key, r.history_id)
+                for r in read_history_keys_state(spark, state).collect()}
+        assert keys == {(hashlib.md5(t.encode()).hexdigest(), i)
+                        for t, i in kept.items()}, plan

@@ -11,35 +11,19 @@ output over the table in COVERAGE.md (or pipe:
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-
-def certified(rec: dict) -> bool:
-    if rec.get("err"):
-        return False
-    checks = [rec.get("rows_match"), rec.get("schema_match"),
-              rec.get("hash_match")]
-    present = [c for c in checks if c is not None]
-    return bool(present) and all(present)
+from gen_window import certified, load_rounds  # noqa: E402
 
 
 def main() -> None:
     import __spark_entry__ as entrymod
 
-    rounds: dict[int, dict] = {}
-    # NOT "r0*.json": a literal-'0' glob never matches r10+ files
-    for path in sorted(glob.glob("CORRECTNESS_r*.json")):
-        m = re.match(r"CORRECTNESS_r0*(\d+)\.json$", os.path.basename(path))
-        if m:
-            with open(path) as fh:
-                rounds[int(m.group(1))] = json.load(fh)
-
+    rounds = load_rounds()
     names = list(entrymod.queries())
     oracles = set(entrymod.oracle_sql())
     print("| # | query | oracle | driver-certified rounds |")

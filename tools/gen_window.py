@@ -56,9 +56,9 @@ def certified(rec: dict) -> bool:
     return bool(present) and all(present)
 
 
-def compute_window(for_round: int | None = None) -> list[str]:
-    import __spark_entry__ as entrymod
-
+def load_rounds(for_round: int | None = None) -> dict[int, dict]:
+    """The driver's ``CORRECTNESS_r*.json`` records at the repo root,
+    keyed by round; with ``for_round``, only rounds older than it."""
     rounds: dict[int, dict] = {}
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     # NOT "r0*.json": a literal-'0' glob never matches r10+ (it silently
@@ -71,7 +71,13 @@ def compute_window(for_round: int | None = None) -> list[str]:
                 continue
             with open(path) as fh:
                 rounds[rnd] = json.load(fh)
+    return rounds
 
+
+def compute_window(for_round: int | None = None) -> list[str]:
+    import __spark_entry__ as entrymod
+
+    rounds = load_rounds(for_round)
     names = list(entrymod.queries())
     oracles = set(entrymod.oracle_sql())
     last_cert = {}
