@@ -19,162 +19,9 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-BENCH_QUERIES = [
-    "pipeline_events",
-    "pipeline_events_array",
-    "pipeline_orders_profile",
-    "pipeline_lineitem",
-    "asof_join",
-    "w1_rank",
-    "f1_history_window",
-    "e1_encode_capped",
-    "e5_normalize_minmax",
-    "p3_pivot_last5",
-    "x3_sliding_union",
-    "a9_label_multihot",
-    "e8_date_fill_pivoted",
-    "w5_sessionize",
-    "llm_curate",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "text_token_counts",
-    "text_quality",
-    "text_langid",
-    "simsearch_topk",
-    "simsearch_topk_lsh",
-    # round-6: the auto-sized production LSH plan replaced the pinned
-    # sf0.01-constant emb_near_dup here (r5 verdict item 2): the pinned
-    # plan exists only so its hyperplanes reproduce in DuckDB, and at sf1
-    # it alone was 64% of the headline total while the plan a user
-    # actually runs (emb_near_dup_auto) does the same job ~17x faster.
-    # Baseline comparability: BASELINE.md restates the r1 total minus the
-    # pinned query (71.469 s); the pinned plan still times under
-    # queries_extended with its oracle untouched.
-    "emb_near_dup_auto",
-    "multimodal_features",
-    "score_linear",
-    "score_lstm",
-    "metrics_roc_auc",
-    "segment_kmeans",
-    "train_linear_ae",
-    "stream_windowed_stats",
-    "stream_last3_state",
-]
-
-# Round-4 additions, timed but NOT in the headline totals: the headline
-# query set is frozen so `value`/`value_warm` stay comparable with the
-# r1 baseline and earlier rounds; these report under `queries_extended`.
-EXTENDED_QUERIES = [
-    "clean_paragraph_dedup",
-    "clean_boilerplate",
-    "quality_hashed_bow",
-    "token_budget_select",
-    "merge_upsert_orders",
-    "hybrid_search_rrf",
-    "heavy_hitters",
-    "zorder_layout",
-    "weighted_sample",
-    "diff_snapshots",
-    "profile_table",
-    "llm_curate_v2",
-    "stream_sessions",
-    # round-6: demoted from the headline set (see the swap note there) —
-    # the pinned-constant oracle-compat LSH plan, kept timed for the
-    # record but no longer inflating the number anyone quotes
-    "emb_near_dup",
-    # round-5 operators + the capped fuzzy join (its sf1 pathology fix
-    # is now the operator default; timing it keeps that provable)
-    "fuzzy_join_parts",
-    "scd2_orders",
-    "text_normalize",
-    "attribution_last_touch",
-    "bpe_tokenize",
-    "pagerank_docs",
-    "expectations_events",
-    "resample_daily",
-    "simsearch_topk_pq",
-    "skew_report",
-    "shards_roundtrip",
-    "stream_topk",
-    "histogram_values",
-    "topk_per_group",
-    "attribution_multitouch",
-    "rolling_features",
-    "quantile_rollup",
-    "normalize_by_group",
-    "dedup_incremental",
-    "transition_matrix",
-    # round-6 operators: streaming incremental dedup, oracle-exact
-    # LR training, wedge-closure triangles, LPA communities, the
-    # distributed deep-AE fit + DEC (rows-only upstream, timed here)
-    "stream_dedup_history",
-    "quality_train_classifier",
-    "triangle_docs",
-    "lpa_docs",
-    "train_ae_ddp",
-    "segment_dec_fit",
-    "interval_overlap",
-    "ewma_events",
-    "cohort_retention",
-    "rfm_scores",
-    "sorted_neighborhood",
-    "cm_frequency_rollup",
-    # round-11 (r10 verdict item 7): the round-10 span-family additions
-    # enter the extended lane — the shared-gram composition and the two
-    # incremental census/trim operators (headline stays frozen for
-    # baseline comparability; first recorded round-over-round delta is
-    # vs their SCALING_r10.md timings)
-    "span_shared_grams",
-    "span_census_incremental",
-    "span_trim_incremental",
-    # round-11 additions, timed from birth
-    "stream_gram_census",
-    "dsir_shared_grams",
-    "dedup_minhash_portable",
-    "dedup_simhash_portable",
-    "simsearch_pq_fixed",
-    "simsearch_ivf_fixed",
-    # round-12 additions, timed from birth (emb_near_dup_auto is
-    # already a headline query; the two census state sinks include
-    # stream startups + a restart boundary by design)
-    "stream_gram_census_state",
-    "stream_gram_census_delta",
-    "dedup_incremental_portable",
-    "dedup_incremental_state",
-    "segment_kmeans_fixed",
-    # round-13 additions, timed from birth (the two state rows include
-    # their daily folds / stream startups + restart by design; the BPE
-    # row is the pinned-merges apply over the full corpus)
-    "dedup_signature_state",
-    "bpe_tokenize_fixed",
-    "stream_dedup_corpus",
-    # round-14 additions, timed from birth (near-mode corpus sink:
-    # signature state folds + two stream startups across a restart
-    # boundary included by design, same envelope as the exact row;
-    # IVF ingest: three state folds crossing a compaction + a replay
-    # + the probe search)
-    "stream_dedup_corpus_near",
-    "simsearch_ivf_state",
-    "stream_ann_index",
-    "decontaminate_state",
-    "stream_dedup_corpus_compact",
-    # round-15 additions, timed from birth (tombstone lifecycle: three
-    # ingest folds + a replayed delete fold + forced vacuum compact +
-    # prune + the search over the vacuumed state; the PQ row encodes
-    # under pinned codebooks, so its state is codes-only)
-    "simsearch_ivf_deleted",
-    "simsearch_pq_state",
-    # round-16 addition, timed from birth (r15 verdict item 7): the
-    # ``signatures=`` fast-path fold under a batch caller — the
-    # optimized per-micro-batch fold path's own timed+certified row
-    "dedup_signature_state_fold",
-]
-
-
 def main() -> None:
-    import __spark_entry__ as entrymod
     from caspr_spark import get_spark
+    from contract.registry import REGISTRY
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -300,78 +147,50 @@ def main() -> None:
 
     from caspr_spark.cache import cache_scope
 
-    qs = entrymod.queries()
-    timings: dict[str, float] = {}
-    warm: dict[str, float] = {}
-    # cache_scope per query PAIR (round-10 ADVICE fix): operator-persisted
-    # intermediates (quantile_scores, global_running_sum, LSH, tf-idf)
-    # release when the pair finishes instead of pinning for the whole
-    # session; scoping the pair (not each run) keeps the warm run's
-    # CacheManager plan-matching reuse of the cold run's relations, so the
-    # warm series stays comparable with earlier rounds
-    io_cold: dict[str, dict] = {}
-    io_warm: dict[str, dict] = {}
-    for name in BENCH_QUERIES:
-        with cache_scope():
-            snap0 = _io_snapshot() if io_enabled else None
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            df.count()
-            timings[name] = round(time.time() - t0, 3)
-            snap1 = _io_snapshot() if io_enabled else None
-            # warm second run: session/codegen/python-worker warm-up
-            # amortized — the steady-state per-query cost a long-lived
-            # cluster would see
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            df.count()
-            warm[name] = round(time.time() - t0, 3)
-            snap2 = _io_snapshot() if io_enabled else None
-            if io_enabled:
-                d = _io_delta(snap0, snap1)
+    def run_lane(lane: str):
+        """Cold and warm seconds and io deltas of the lane's queries,
+        in registry order."""
+        cold, warm, io_cold, io_warm = {}, {}, {}, {}
+        for spec in REGISTRY:
+            if spec.lane != lane:
+                continue
+            # cache_scope per query PAIR: operator-persisted
+            # intermediates (quantile_scores, global_running_sum, LSH,
+            # tf-idf) release when the pair finishes instead of pinning
+            # for the whole session; scoping the pair (not each run)
+            # keeps the warm run's CacheManager plan-matching reuse of
+            # the cold run's relations
+            with cache_scope():
+                snap0 = _io_snapshot() if io_enabled else None
+                t0 = time.time()
+                spec.build(spark, sf_dir).count()
+                cold[spec.name] = round(time.time() - t0, 3)
+                snap1 = _io_snapshot() if io_enabled else None
+                # warm second run: session/codegen/python-worker warm-up
+                # amortized — the steady-state per-query cost a
+                # long-lived cluster would see, and the stable series
+                # single cold runs in a shared session are not
+                t0 = time.time()
+                spec.build(spark, sf_dir).count()
+                warm[spec.name] = round(time.time() - t0, 3)
+                snap2 = _io_snapshot() if io_enabled else None
+            for io, a, b in ((io_cold, snap0, snap1),
+                             (io_warm, snap1, snap2)):
+                d = _io_delta(a, b)
                 if d is not None:
-                    io_cold[name] = d
-                d = _io_delta(snap1, snap2)
-                if d is not None:
-                    io_warm[name] = d
+                    io[spec.name] = d
+        return cold, warm, io_cold, io_warm
 
-    extended: dict[str, float] = {}
-    extended_warm: dict[str, float] = {}
-    io_ext_cold: dict[str, dict] = {}
-    io_ext_warm: dict[str, dict] = {}
-    for name in EXTENDED_QUERIES:
-        with cache_scope():
-            snap0 = _io_snapshot() if io_enabled else None
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            df.count()
-            extended[name] = round(time.time() - t0, 3)
-            snap1 = _io_snapshot() if io_enabled else None
-            # warm second run (round 8): the r7 record's cold-only
-            # extended numbers swung up to 4.5x on single cold runs in a
-            # shared session — the warm twin separates plan-compile/JIT
-            # noise from real regressions without touching the headline
-            # totals
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            df.count()
-            extended_warm[name] = round(time.time() - t0, 3)
-            snap2 = _io_snapshot() if io_enabled else None
-            if io_enabled:
-                d = _io_delta(snap0, snap1)
-                if d is not None:
-                    io_ext_cold[name] = d
-                d = _io_delta(snap1, snap2)
-                if d is not None:
-                    io_ext_warm[name] = d
+    timings, warm, io_cold, io_warm = run_lane("headline")
+    extended, extended_warm, io_ext_cold, io_ext_warm = run_lane("extended")
 
     total = round(sum(timings.values()), 3)
     # FIELD ORDER IS LOAD-BEARING (r14 verdict item 3): the driver's
     # per-round record preserves only the LAST ~2000 chars of bench
-    # output (BENCH_r13/r14 both show the tail = the END of this JSON
-    # line), so the big per-query maps and the long notes print FIRST
-    # and the headline value/value_warm/calibration/normalized units
-    # print LAST — a truncated record then loses per-query detail,
+    # output (the ``tail`` of BENCH_r13.json and BENCH_r14.json is
+    # 2000 chars, the END of this JSON line), so the big per-query maps
+    # and the long notes print FIRST and the headline
+    # value/value_warm/calibration/normalized units print LAST — a truncated record then loses per-query detail,
     # never the headline. The line stays one valid JSON object either
     # way.
     print(json.dumps({
@@ -380,7 +199,9 @@ def main() -> None:
                  "warm = immediate second run (steady-state plan cost a "
                  "long-lived cluster sees). At sf0.1 the LSH suite's data "
                  "is ~1 MB, so cold times there are plan-compile-bound, "
-                 "not data-bound; see SCALING_r04.md for sf1 behavior. "
+                 "not data-bound; see SCALING_r04.md for sf1 behavior "
+                 "(the pinned emb_near_dup plan runs 11.6x its sf0.1 "
+                 "time there). "
                  "calibration = fixed synthetic workloads (code-"
                  "independent) for cross-round host-speed normalization; "
                  "r1-r3 benches predate the field and ran on hosts "

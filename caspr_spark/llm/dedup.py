@@ -189,7 +189,8 @@ def minhash_lsh_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     HASH and string band keys are ~5x the bytes of a hashed long
     through the banding shuffle, but the pipeline is shingle- and
     verify-bound end-to-end, so the measured premium is single-digit
-    (+7-9%, SCALING_r11.md addendum) — pay it when dedup DECISIONS
+    (+7-9%, SCALING_r11.md addendum: minhash pairs 2.02 -> 2.16 s at
+    sf0.1, 4.50 -> 4.92 s at sf1) — pay it when dedup DECISIONS
     must be re-derivable outside Spark (compliance audits,
     cross-engine pipeline parity); the default stays the cheap
     family.

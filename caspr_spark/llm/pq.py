@@ -334,7 +334,7 @@ def adc_topk_pq_state(spark, state_dir: str, query, codebooks,
     :func:`pq_search` scoring — byte-identical arithmetic to a
     one-shot ``pq_encode`` + ``pq_search`` over the union of the
     ingested batches minus deletions (the certified invariant:
-    ``simsearch_pq_state`` in ``__spark_entry__``)."""
+    ``simsearch_pq_state`` in ``contract.streaming``)."""
     from caspr_spark.state import probe_newest_nonempty
 
     fp = _codebook_fingerprint(codebooks)

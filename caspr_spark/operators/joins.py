@@ -427,7 +427,8 @@ def fuzzy_join(left: DataFrame, right: DataFrame, left_col: str,
     the cap, with a warning naming how many blocks were skipped — the
     same stated-recall hot-key cap as ``winnow_pairs``' ``max_df``. The
     sf1 scale sweep measured the uncapped pathology at ~100x
-    (SCALING_r04.md), so the cap is ON BY DEFAULT (1e6 pairs per block);
+    (SCALING_r04.md: 481 s uncapped, 99.7x its sf0.1 time; 6.4 s with
+    a 1e6 cap), so the cap is ON BY DEFAULT (1e6 pairs per block);
     pass ``max_block_pairs=None`` to opt out when full recall inside hot
     blocks matters more than bounded work.
 

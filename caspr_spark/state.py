@@ -38,7 +38,10 @@ Commit rules shared by every writer:
   it with the stream's query id, which Structured Streaming keeps in
   the checkpoint: a restart from the same checkpoint re-claims, a
   stream under another checkpoint refuses. Direct (non-stream) folds
-  take no lease and run every state probe instead.
+  take no lease and run every state probe instead; and since a leased
+  stream skips those probes, :func:`fold_commit` refuses any new
+  commit onto a claimed dir from a writer other than its lease holder
+  (direct callers included).
 
 Everything goes through the Hadoop FileSystem API, not ``os`` — state
 dirs are ``hdfs://``/``s3a://`` in production, local only in tests.
@@ -222,27 +225,47 @@ def claim_writer(spark, state_dir: str, writer_id: str) -> None:
         # actually survived the race and raises on a mismatch.
         if not fs.rename(tmp, lease):
             fs.delete(tmp, False)   # lost the first-claim race — compare
+    stored = _read_lease(jvm, fs, lease, state_dir)
+    if stored != writer_id:
+        raise _claimed(state_dir, stored, writer_id)
+
+
+def _lease_holder(spark, state_dir: str) -> str | None:
+    """The writer id the ``_writer`` lease of ``state_dir`` names, or
+    ``None`` when the dir is unclaimed."""
+    jvm, fs, jpath = _fs(spark, state_dir)
+    lease = jvm.org.apache.hadoop.fs.Path(jpath, "_writer")
+    if not fs.exists(lease):
+        return None
+    return _read_lease(jvm, fs, lease, state_dir)
+
+
+def _read_lease(jvm, fs, lease, state_dir: str) -> str:
+    """The writer id in the ``lease`` file. An unreadable/corrupt
+    lease raises rather than reporting itself as a JSON traceback."""
     stream = fs.open(lease)
     try:
         raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
     finally:
         stream.close()
     try:
-        stored = json.loads(raw).get("writer_id")
+        return json.loads(raw).get("writer_id")
     except ValueError as exc:
         raise RuntimeError(
             f"the _writer lease under {state_dir} is unreadable "
             f"({exc}) — likely a partial write from a pre-rename-era "
             "crash or an external editor; delete the _writer file to "
             "re-claim the dir") from exc
-    if stored != writer_id:
-        raise RuntimeError(
-            f"state dir {state_dir} is claimed by writer "
-            f"{stored!r} but this writer is {writer_id!r} — one state "
-            "dir takes ONE writer (interleaved batch ids from separate "
-            "checkpoints corrupt the fold order); point this stream at "
-            "its own state dir, or delete the _writer lease to hand "
-            "over ownership")
+
+
+def _claimed(state_dir: str, stored, writer_id) -> RuntimeError:
+    return RuntimeError(
+        f"state dir {state_dir} is claimed by writer "
+        f"{stored!r} but this writer is {writer_id!r} — one state "
+        "dir takes ONE writer (interleaved batch ids from separate "
+        "checkpoints corrupt the fold order); point this stream at "
+        "its own state dir, or delete the _writer lease to hand "
+        "over ownership")
 
 
 def fold_commit(spark, state_dir: str, batch_id: int, layout: str,
@@ -260,7 +283,9 @@ def fold_commit(spark, state_dir: str, batch_id: int, layout: str,
     id at or below the committed frontier raises — read-side merging
     orders frames by batch id, so a late fold would either be silently
     excluded (below a compact) or rewrite history, never something to
-    do quietly.
+    do quietly. A new commit onto a dir whose ``_writer`` lease names
+    another writer than the calling thread's stream (a direct caller
+    has none) raises too, before anything is written.
 
     ``partition_by`` writes each frame hive-partitioned on the given
     columns, so readers that filter or join on them get partition
@@ -314,6 +339,13 @@ def fold_commit(spark, state_dir: str, batch_id: int, layout: str,
                 "to evolve the schema")
     if batch_id in {b for b, _ in listing}:
         return                           # committed replay — skip
+    # a new commit onto a claimed dir must come from the lease holder:
+    # the holder's stream skips the state probes that would catch an
+    # incommensurable frame (direct callers have no query id)
+    writer_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+    stored = _lease_holder(spark, state_dir)
+    if stored is not None and stored != writer_id:
+        raise _claimed(state_dir, stored, writer_id)
     if any(b >= batch_id for b, _ in listing):
         raise ValueError(
             f"batch_id {batch_id} is not newer than the committed "
@@ -401,18 +433,10 @@ def describe_state(spark, state_dir: str) -> dict:
                            for b, k in live_frames(listing)]
         except RuntimeError:
             pass                      # mixed layout — live set undefined
-    lease = jvm.org.apache.hadoop.fs.Path(jpath, "_writer")
-    if fs.exists(lease):
-        stream = fs.open(lease)
-        try:
-            raw = jvm.org.apache.commons.io.IOUtils.toString(stream,
-                                                             "UTF-8")
-        finally:
-            stream.close()
-        try:
-            out["writer"] = json.loads(raw).get("writer_id")
-        except ValueError:
-            out["writer"] = "<corrupt>"
+    try:
+        out["writer"] = _lease_holder(spark, state_dir)
+    except RuntimeError:
+        out["writer"] = "<corrupt>"
     return out
 
 

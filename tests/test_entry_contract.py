@@ -67,3 +67,60 @@ class TestEntryContract:
         runpy.run_path(str(tool), run_name="__main__")
         last = capsys.readouterr().out.strip().splitlines()[-1]
         assert " 0 driver-certified" not in last, last
+
+    def test_contract_digest(self):
+        """Order, oracle text and bench lanes of every query, pinned:
+        a reorder, an oracle edit or a lane move changes the digest
+        (re-pin it only for an intentional contract change)."""
+        import hashlib
+        import json
+
+        from contract.registry import REGISTRY
+        oracles = entry.oracle_sql()
+        lanes = {lane: sorted(s.name for s in REGISTRY if s.lane == lane)
+                 for lane in ("headline", "extended")}
+        assert {s.lane for s in REGISTRY} <= {"headline", "extended", None}
+        assert (len(lanes["headline"]), len(lanes["extended"])) == (32, 71)
+        blob = json.dumps({"order": [[n, oracles.get(n)]
+                                     for n in entry.queries()], **lanes})
+        assert hashlib.sha256(blob.encode()).hexdigest() == \
+            "0af916b1301735a7640e368535880dd828324dbf2538e92e8bfeb73cd3fdccff"
+
+    def test_no_query_name_lists_outside_the_registry(self):
+        """Which queries exist, in what order and lane, is declared in
+        contract/registry.py only: the entry module, the bench and the
+        tools hold no literal collection of query names."""
+        import ast
+        from pathlib import Path
+        root = Path(__file__).parent.parent
+        names = set(entry.queries())
+        files = [root / "__spark_entry__.py", root / "bench.py",
+                 *sorted((root / "tools").glob("*.py"))]
+        found = []
+        for path in files:
+            for node in ast.walk(ast.parse(path.read_text())):
+                if isinstance(node, (ast.List, ast.Tuple, ast.Set)):
+                    elts = node.elts
+                elif isinstance(node, ast.Dict):
+                    elts = node.keys
+                else:
+                    continue
+                hits = [e.value for e in elts if isinstance(e, ast.Constant)
+                        and e.value in names]
+                if len(hits) >= 2:
+                    found.append(f"{path.name}:{node.lineno} {hits[:3]}")
+        assert not found, found
+
+    def test_coverage_ledger_is_the_tool_output(self, capsys):
+        """COVERAGE.md's certification table is exactly what
+        tools/gen_certification_table.py prints (regenerate it with
+        the tool, never by hand)."""
+        import runpy
+        from pathlib import Path
+        root = Path(__file__).parent.parent
+        runpy.run_path(str(root / "tools" / "gen_certification_table.py"),
+                       run_name="__main__")
+        text = (root / "COVERAGE.md").read_text()
+        block = text.split("<!-- BEGIN CERT TABLE -->\n", 1)[1] \
+            .split("<!-- END CERT TABLE -->", 1)[0]
+        assert block == capsys.readouterr().out

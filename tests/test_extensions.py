@@ -32,7 +32,7 @@ class TestIVF:
         """centroids= pins the coarse quantizer; probing every cell
         must still reproduce brute-force top-k exactly (assignment
         only prunes, never reorders)."""
-        from __spark_entry__ import _ivf_fixed_centroids
+        from contract.common import _ivf_fixed_centroids
         cents = _ivf_fixed_centroids(n_cells=4, dim=64)
         q = embeddings.filter(F.col("vec_id") < 3)
         exact = cosine_topk(embeddings, q, k=5).toPandas()
@@ -49,7 +49,7 @@ class TestIVF:
         against the same literals — third-engine parity for the
         portable half of the IVF certificate."""
         from caspr_spark.llm.similarity import _cell_distance_structs
-        from __spark_entry__ import _ivf_fixed_centroids
+        from contract.common import _ivf_fixed_centroids
         cents = np.asarray(_ivf_fixed_centroids(n_cells=4, dim=64))
         assign = F.element_at(
             F.array_sort(_cell_distance_structs("embedding", cents)),
@@ -78,7 +78,7 @@ class TestIVF:
 
 class TestIVFState:
     def _cents(self, n_cells=4):
-        from __spark_entry__ import _ivf_fixed_centroids
+        from contract.common import _ivf_fixed_centroids
         return _ivf_fixed_centroids(n_cells=n_cells, dim=64)
 
     def test_state_search_equals_one_shot(self, embeddings, tmp_path):
@@ -262,7 +262,7 @@ class TestIVFState:
 
 class TestIVFDeletes:
     def _cents(self, n_cells=4):
-        from __spark_entry__ import _ivf_fixed_centroids
+        from contract.common import _ivf_fixed_centroids
         return _ivf_fixed_centroids(n_cells=n_cells, dim=64)
 
     def test_tombstones_mask_read_and_search(self, embeddings, tmp_path):
@@ -516,7 +516,7 @@ class TestLshAutoPlanSqlParity:
     def test_plan_exprs_match_lsh_plan(self):
         import duckdb
         from caspr_spark.llm.similarity import lsh_plan
-        from __spark_entry__ import _lsh_auto_plan_exprs
+        from contract.llm import _lsh_auto_plan_exprs
         thr, rec, p_max = 0.45, 0.5, 8
         np_expr, nt_expr = _lsh_auto_plan_exprs(thr, rec, p_max)
         # every power-of-two boundary ±1 (the only places a float-log2
@@ -551,7 +551,7 @@ class TestLshAutoPlanSqlParity:
 
 class TestArrowAssignment:
     def _cents(self, n_cells=8):
-        from __spark_entry__ import _ivf_fixed_centroids
+        from contract.common import _ivf_fixed_centroids
         return _ivf_fixed_centroids(n_cells=n_cells, dim=64)
 
     def test_arrow_election_parity(self, embeddings):
@@ -607,7 +607,7 @@ class TestArrowAssignment:
 
 class TestPQState:
     def _cb(self):
-        from __spark_entry__ import _pq_fixed_cb
+        from contract.common import _pq_fixed_cb
         return _pq_fixed_cb()
 
     def test_state_search_equals_one_shot(self, embeddings, tmp_path):
@@ -738,7 +738,7 @@ class TestSinkProbeOnce:
         from caspr_spark.llm.similarity import (append_ivf_state,
                                                 read_ivf_state)
         from caspr_spark.streaming import ann_ingest_sink
-        from __spark_entry__ import _ivf_fixed_centroids
+        from contract.common import _ivf_fixed_centroids
         spark = embeddings.sparkSession
         cents = _ivf_fixed_centroids()
         other = [[c + 1.0 for c in row] for row in cents]

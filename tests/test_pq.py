@@ -98,7 +98,7 @@ class TestFixedCodebookCertificate:
     def test_encode_matches_python_argmin(self, spark, emb):
         # conftest.py puts the repo root on sys.path — import directly,
         # like test_extensions.py (no hardcoded checkout path)
-        from __spark_entry__ import _pq_fixed_cb
+        from contract.common import _pq_fixed_cb
         cb, _ = _pq_fixed_cb(m=4, k=4, dsub=2)
         got = {r.vec_id: list(r.pq_codes)
                for r in pq_encode(emb, cb).collect()}
@@ -113,7 +113,7 @@ class TestFixedCodebookCertificate:
         """pq_search's d += loop accumulates the table entries in
         subspace order; the SQL twin relies on that order being
         left-associative — pin it against an explicit left fold."""
-        from __spark_entry__ import _pq_fixed_cb
+        from contract.common import _pq_fixed_cb
         cb, _ = _pq_fixed_cb(m=4, k=4, dsub=2)
         q = np.arange(8, dtype=np.float64) / 7.0
         table = np.stack([((cb[j] - q[2 * j:2 * j + 2]) ** 2).sum(axis=1)

@@ -34,7 +34,7 @@ def _near_sinks(spark, tmp_path, embeddings):
 
 
 def _ann_sinks(spark, tmp_path, embeddings):
-    from __spark_entry__ import _ivf_fixed_centroids
+    from contract.common import _ivf_fixed_centroids
 
     from caspr_spark.streaming import ann_ingest_sink
     state = str(tmp_path / "state")
@@ -45,7 +45,7 @@ def _ann_sinks(spark, tmp_path, embeddings):
 
 
 def _pq_sinks(spark, tmp_path, embeddings):
-    from __spark_entry__ import _pq_fixed_cb
+    from contract.common import _pq_fixed_cb
 
     from caspr_spark.streaming import pq_ingest_sink
     state = str(tmp_path / "state")
@@ -132,7 +132,7 @@ def test_held_lease_skips_the_repeat_probe(embeddings, tmp_path, job_group):
     """Under a held lease the third fold skips the quantizer probe
     (``limit(1)`` reads of the newest frames) that a direct caller
     pays on every fold."""
-    from __spark_entry__ import _ivf_fixed_centroids
+    from contract.common import _ivf_fixed_centroids
 
     from caspr_spark.streaming import ann_ingest_sink
     spark = embeddings.sparkSession
@@ -157,6 +157,29 @@ def test_held_lease_skips_the_repeat_probe(embeddings, tmp_path, job_group):
     direct = third_fold_jobs(str(tmp_path / "direct"), None)
     leased = third_fold_jobs(str(tmp_path / "leased"), "query-A")
     assert leased < direct, (direct, leased)
+
+
+def test_direct_fold_onto_claimed_dir_refused(embeddings, tmp_path):
+    """A stream folds under its query id; a direct ``append_ivf_state``
+    with a new batch id onto that dir then refuses before writing, so
+    the stream's trust in its lease (it skips the quantizer probe)
+    stays sound. A direct replay of a committed batch stays a no-op."""
+    from contract.common import _ivf_fixed_centroids
+
+    from caspr_spark.llm.similarity import append_ivf_state
+    from caspr_spark.state import state_listing
+    from caspr_spark.streaming import ann_ingest_sink
+    spark = embeddings.sparkSession
+    state = str(tmp_path / "state")
+    cents = _ivf_fixed_centroids()
+    parts = [embeddings.filter(F.col("vec_id") % 2 == r) for r in range(2)]
+    with as_stream(spark, "query-A"):
+        ann_ingest_sink(state, cents)(parts[0], 0)
+    before = state_listing(spark, state)
+    append_ivf_state(spark, state, before[-1][0], parts[1], cents)
+    with pytest.raises(RuntimeError, match="claimed by writer"):
+        append_ivf_state(spark, state, before[-1][0] + 1, parts[1], cents)
+    assert state_listing(spark, state) == before
 
 
 def test_one_lease_claim():

@@ -4,9 +4,9 @@ Mechanically derived from the CORRECTNESS_r0*.json files the driver
 wrote each round (r4 verdict item 10): for every ``queries()`` entry,
 which rounds certified it (name present AND rows+schema+hash all true —
 or rows-only true for oracle-less queries), whether it carries a DuckDB
-oracle, and its current slot. Re-run after each round and paste the
-output over the table in COVERAGE.md (or pipe:
-``python tools/gen_certification_table.py``).
+oracle, and its current slot. Re-run after each round and replace the
+block between COVERAGE.md's CERT TABLE markers with the output;
+tests/test_entry_contract.py fails while the two differ.
 """
 
 from __future__ import annotations

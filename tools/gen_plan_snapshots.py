@@ -2,9 +2,15 @@
 
 Run after an INTENTIONAL plan change:
 
-    python tools/gen_plan_snapshots.py
+    python tools/gen_plan_snapshots.py            # re-pin every snapshot
+    python tools/gen_plan_snapshots.py q1 q2 ...  # ...and add q1, q2
 
-Builds each snapshot query from ``__spark_entry__.queries()`` at sf0.001
+The snapshot set is the set of names already pinned in the JSON file
+(what tests/test_plans.py parametrizes over) plus any named on the
+command line: batch queries with a lazily-planned result DataFrame
+(streaming memory sinks and driver-side training loops have no single
+plan to pin, and an iterative query whose result is a localCheckpoint
+scan, like dedup_keep_best, has no stable declarative one). Builds each from ``__spark_entry__.queries()`` at sf0.001
 (plans only; construction-time fits/collects run on the tiny SF) and
 writes the ``caspr_spark.plans.plan_digest`` of each. tests/test_plans.py
 fails on any drift, so a broadcast join degrading to sort-merge or a
@@ -23,92 +29,6 @@ SF_DIR = os.environ.get("SNAP_SF_DIR", "/root/testdata/sf0.001")
 OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "tests", "plan_snapshots.json")
 
-# batch headliners with a lazily-planned result DataFrame (streaming memory
-# sinks and driver-side training loops have no single plan to pin)
-SNAPSHOT_QUERIES = [
-    "pipeline_events",
-    "pipeline_events_array",
-    "pipeline_orders_profile",
-    "pipeline_lineitem",
-    "asof_join",
-    "w1_rank",
-    "f1_history_window",
-    "e1_encode_capped",
-    "e5_normalize_minmax",
-    "p3_pivot_last5",
-    "x3_sliding_union",
-    "range_join_campaigns",
-    "hypertable_rollup",
-    "funnel_conversion",
-    "bloom_semi_join",
-    "a9_label_multihot",
-    "e8_date_fill_pivoted",
-    "w5_sessionize",
-    "j2_semi_prune",
-    "dedup_exact",
-    "text_token_counts",
-    "text_quality",
-    "text_langid",
-    "simsearch_topk",
-    "simsearch_topk_lsh",
-    "score_linear",
-    "segment_dec",
-    "multimodal_features",
-    "pipeline_events_percutoff",
-    "pipeline_orders_composite",
-    "e12_time_shuffle",
-    "emb_near_dup",
-    "seq_pack_offset",
-    "seq_pack_nextfit",
-    "mixture_sample",
-    "cluster_balanced",
-    "lm_perplexity",
-    "doc_chunks",
-    "winnow_pairs",
-    "related_docs",
-    "sketch_distinct_rollup",
-    # round-4 part five (dedup_keep_best excluded: its iterative
-    # connected-components localCheckpoint makes the final plan a
-    # checkpoint scan, not a stable declarative plan)
-    "clean_paragraph_dedup",
-    "clean_boilerplate",
-    "quality_hashed_bow",
-    "token_budget_select",
-    "merge_upsert_orders",
-    "hybrid_search_rrf",
-    "heavy_hitters",
-    "fuzzy_join_parts",
-    "zorder_layout",
-    "weighted_sample",
-    "cv_folds",
-    "llm_curate_v2",
-    "diff_snapshots",
-    "profile_table",
-    "quantize_embeddings",
-    "rollup_incremental",
-    "outlier_robust",
-    "calibration_bins",
-    # round-5 additions
-    "scd2_orders",
-    "text_normalize",
-    "attribution_last_touch",
-    "resample_daily",
-    # round-9 additions: the distributed-ntile exact quantile path and
-    # the new curation operators (substring-dedup pair, DSIR selection)
-    "e10_quantile_bucket",
-    "dsir_select",
-    "duplicated_spans",
-    "trim_duplicated_spans",
-    "contamination_fraction",
-    # round-10 additions: the shared-gram-table composition and the
-    # prefix-scan stratum samplers (skew fix — no stratum-keyed window)
-    "span_shared_grams",
-    "span_census_incremental",
-    "span_trim_incremental",
-    "stratified_sample_exact",
-    "downsample_cap",
-]
-
 
 def main() -> None:
     import __spark_entry__ as entrymod
@@ -118,8 +38,10 @@ def main() -> None:
     spark = get_spark("plan-snapshots", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
+    with open(OUT) as f:
+        names = set(json.load(f)) | set(sys.argv[1:])
     snaps: dict[str, dict[str, int]] = {}
-    for name in SNAPSHOT_QUERIES:
+    for name in sorted(names):
         spark.catalog.clearCache()  # digests are pinned against a cold cache
         snaps[name] = plan_digest(qs[name](spark, SF_DIR))
         print(f"{name}: {snaps[name]}")

@@ -17,7 +17,9 @@ same rule):
 
 Usage::
 
-    python tools/gen_window.py              # print the NEXT window
+    python tools/gen_window.py              # print the NEXT window, one
+                                            # name per line: its specs go
+                                            # first in contract/registry.py
     python tools/gen_window.py --check      # exit 1 on drift vs next window
     python tools/gen_window.py --round 13   # window FOR round 13: use only
                                             # records from rounds < 13
@@ -115,10 +117,9 @@ def main() -> int:
             return 1
         print(f"window OK: {WINDOW_SIZE} slots match the mechanical rule")
         return 0
-    print("_WINDOW = [")
-    for n in window:
-        print(f'    "{n}",')
-    print("]")
+    # apply it by moving these entries, in this order, to the head of
+    # contract/registry.py's REGISTRY
+    print("\n".join(window))
     return 0
 
 
