@@ -206,9 +206,11 @@ def main() -> None:
                  "independent) for cross-round host-speed normalization; "
                  "r1-r3 benches predate the field and ran on hosts "
                  "observed up to ~35% faster per-query at identical code. "
-                 "queries_extended = round-4 operators timed cold, "
-                 "excluded from value/value_warm so the headline totals "
-                 "stay baseline-comparable.",
+                 "queries_extended = the 71 queries added in rounds 4-16, "
+                 "each timed cold and warm (queries_extended_warm, "
+                 "value_extended/value_extended_warm), excluded from "
+                 "value/value_warm so the headline totals stay "
+                 "baseline-comparable.",
         "queries": timings,
         "queries_warm": warm,
         "queries_extended": extended,

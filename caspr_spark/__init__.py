@@ -13,12 +13,18 @@ Reference parity: /root/reference (microsoft/CASPR), primarily
 caspr/utils/spark/preprocess.py — cited per-function in docstrings.
 """
 
+from pyspark import TaskContext
+
 from caspr_spark.cache import (cache_scope, register_cache,
                                strict_scope_active)
 from caspr_spark.roles import ColumnRoles, generate_col_lists
 from caspr_spark.session import get_spark
 from caspr_spark.sources import load_tables, read_parquet_table
 from caspr_spark.pipeline import SequenceFeaturizer, SequenceFeaturizerModel
+
+if TaskContext.get() is not None:  # a Python worker unpickling a task
+    from caspr_spark import workers
+    workers.install()
 
 __all__ = [
     "cache_scope",

@@ -4,7 +4,10 @@ both engines use (the Spark builders and their DuckDB oracle SQL).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -16,6 +19,20 @@ from caspr_spark.llm.similarity import lsh_plan
 # scratch root of the write/read round-trip queries (git-ignored)
 _TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                     ".tmp")
+
+_SCRATCH = None
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A new dir for a streaming builder's source, checkpoint, state or
+    output, under one per-process root that is removed at exit: the
+    returned DataFrames read these dirs lazily, so none can go sooner."""
+    global _SCRATCH
+    if _SCRATCH is None:
+        _SCRATCH = tempfile.mkdtemp(prefix="caspr_contract_")
+        atexit.register(shutil.rmtree, _SCRATCH, True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH)
+
 
 SEQ_N = 5
 HIST_DAYS = 14

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from contract.common import (
     _events, _ivf_fixed_centroids, _ivf_fixed_sql, _pq_fixed_cb,
-    _pq_fixed_sql, _t, _utc,
+    _pq_fixed_sql, _scratch_dir, _t, _utc,
 )
 
 
@@ -229,15 +229,13 @@ def q_decontaminate_state(spark, sf_dir):
     is row-identical to the one-shot q_decontaminate — whose DuckDB
     twin is this query's oracle. The census width guard (gram_n==4)
     rides in-plan through the certified path."""
-    import tempfile
-
     from caspr_spark.llm.filtering import decontaminate_from_census
     from caspr_spark.streaming import (gram_census_sink,
                                        read_gram_census_state)
     docs = _t(spark, sf_dir, "documents")
     train = docs.filter(F.col("source") != "src0")
     bench = docs.filter(F.col("source") == "src0")
-    state = tempfile.mkdtemp(prefix="decontam_state_")
+    state = _scratch_dir("decontam_state_")
     sink = gram_census_sink(state, n=4, layout="delta", compact_every=2)
     sink(bench.filter(F.col("doc_id") % 2 == 0), 1)
     sink(bench.filter(F.col("doc_id") % 2 == 1), 2)
@@ -260,13 +258,11 @@ def q_dedup_incremental_state(spark, sf_dir):
     kept set depends only on the key SET, which first-seen-wins
     merging preserves exactly, so this certifies the whole state
     protocol against the SAME oracle as dedup_incremental."""
-    import tempfile
-
     from caspr_spark.llm.dedup import (append_history_keys_state,
                                        dedup_against_history,
                                        read_history_keys_state)
     docs = _t(spark, sf_dir, "documents")
-    state = tempfile.mkdtemp(prefix="keys_state_")
+    state = _scratch_dir("keys_state_")
     for day, residue in ((1, 0), (2, 2), (3, 4)):
         append_history_keys_state(
             spark, state, day, docs.filter(F.col("doc_id") % 6 == residue),
@@ -301,13 +297,11 @@ def q_simsearch_ivf_state(spark, sf_dir):
     layout, round 14), so the certified probe search also exercises
     dynamic partition pruning; the streaming row (stream_ann_index)
     keeps the plain layout, certifying both."""
-    import tempfile
-
     from caspr_spark.llm.similarity import (append_ivf_state,
                                             cosine_topk_ivf_state)
     emb = _t(spark, sf_dir, "embeddings")
     cents = _ivf_fixed_centroids()
-    state = tempfile.mkdtemp(prefix="ivf_state_")
+    state = _scratch_dir("ivf_state_")
     for day, residue in ((1, 0), (2, 1), (3, 2)):
         append_ivf_state(spark, state, day,
                          emb.filter(F.col("vec_id") % 3 == residue),
@@ -335,16 +329,14 @@ def q_stream_ann_index(spark, sf_dir):
     inside the certified path. Searching the accumulated index must
     be row-identical to the one-shot pinned-centroid search —
     simsearch_ivf_fixed's from-scratch DuckDB twin is the oracle."""
-    import tempfile
-
     from caspr_spark.llm.similarity import cosine_topk_ivf_state
     from caspr_spark.streaming import run_ann_ingest_to_state
     _utc(spark)
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = _ivf_fixed_centroids()
-    src = tempfile.mkdtemp(prefix="ann_ingest_src_")
-    state = tempfile.mkdtemp(prefix="ann_ingest_state_")
-    ckpt = tempfile.mkdtemp(prefix="ann_ingest_ckpt_")
+    src = _scratch_dir("ann_ingest_src_")
+    state = _scratch_dir("ann_ingest_state_")
+    ckpt = _scratch_dir("ann_ingest_ckpt_")
     emb.filter(F.col("vec_id") % 2 == 0).repartition(4) \
        .write.mode("overwrite").parquet(src)
     s1 = (spark.readStream.schema(emb.schema)
@@ -388,15 +380,13 @@ def q_simsearch_ivf_deleted(spark, sf_dir):
     the same from-scratch DuckDB twin as simsearch_ivf_fixed with the
     deleted ids filtered out of the corpus scan (query ids < 5 are
     all survivors, so probe rankings are unaffected)."""
-    import tempfile
-
     from caspr_spark.llm.similarity import (append_ivf_deletes,
                                             append_ivf_state,
                                             cosine_topk_ivf_state,
                                             vacuum_ivf_state)
     emb = _t(spark, sf_dir, "embeddings")
     cents = _ivf_fixed_centroids()
-    state = tempfile.mkdtemp(prefix="ivf_del_state_")
+    state = _scratch_dir("ivf_del_state_")
     for day, residue in ((1, 0), (2, 1), (3, 2)):
         append_ivf_state(spark, state, day,
                          emb.filter(F.col("vec_id") % 3 == residue),
@@ -430,13 +420,11 @@ def q_simsearch_pq_state(spark, sf_dir):
     one-shot pq_encode + pq_search over ingested-minus-deleted:
     simsearch_pq_fixed's from-scratch DuckDB twin with the deleted
     ids filtered out of the corpus scan."""
-    import tempfile
-
     from caspr_spark.llm.pq import (adc_topk_pq_state, append_pq_deletes,
                                     append_pq_state, vacuum_pq_state)
     cb, q = _pq_fixed_cb()
     emb = _t(spark, sf_dir, "embeddings")
-    state = tempfile.mkdtemp(prefix="pq_state_")
+    state = _scratch_dir("pq_state_")
     for day, residue in ((1, 0), (2, 1), (3, 2)):
         append_pq_state(spark, state, day,
                         emb.filter(F.col("vec_id") % 3 == residue),
@@ -473,13 +461,11 @@ def q_dedup_signature_state(spark, sf_dir):
     so this certifies the whole signature-state protocol (commit
     markers, replay skip, compaction union) against the SAME
     from-scratch DuckDB twin as dedup_incremental_portable."""
-    import tempfile
-
     from caspr_spark.llm.dedup import (append_history_signatures_state,
                                        dedup_against_history,
                                        read_history_signatures_state)
     docs = _t(spark, sf_dir, "documents")
-    state = tempfile.mkdtemp(prefix="sigs_state_")
+    state = _scratch_dir("sigs_state_")
     for day, residue in ((1, 0), (2, 2), (3, 4)):
         append_history_signatures_state(
             spark, state, day, docs.filter(F.col("doc_id") % 6 == residue),
@@ -517,14 +503,12 @@ def q_dedup_signature_state_fold(spark, sf_dir):
     one-consumer risk: the optimized fold path now has its own
     end-to-end oracle row outside the streaming envelope, with the
     default state guard (check_state=True) exercised per fold."""
-    import tempfile
-
     from caspr_spark.llm.dedup import (append_history_signatures_state,
                                        build_history_signatures,
                                        dedup_against_history,
                                        read_history_signatures_state)
     docs = _t(spark, sf_dir, "documents")
-    state = tempfile.mkdtemp(prefix="sigs_state_fold_")
+    state = _scratch_dir("sigs_state_fold_")
     from caspr_spark.cache import cache_scope
     for day, residue in ((1, 0), (2, 2), (3, 4)):
         batch = docs.filter(F.col("doc_id") % 6 == residue)
@@ -568,18 +552,16 @@ def q_stream_dedup_corpus(spark, sf_dir):
     keys (order-independent: WHICH copy survives depends on arrival
     order, but the key multiset does not), checked against the
     distinct keys of the raw table."""
-    import tempfile
-
     from caspr_spark.streaming import run_dedup_corpus_to_state
     _utc(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     recrawl = (docs.filter(F.col("doc_id") % 4 == 0)
                    .withColumn("doc_id", F.col("doc_id") + 100000))
     corpus = docs.unionByName(recrawl)
-    src = tempfile.mkdtemp(prefix="dedup_corpus_src_")
-    state = tempfile.mkdtemp(prefix="dedup_corpus_state_")
-    out = tempfile.mkdtemp(prefix="dedup_corpus_out_")
-    ckpt = tempfile.mkdtemp(prefix="dedup_corpus_ckpt_")
+    src = _scratch_dir("dedup_corpus_src_")
+    state = _scratch_dir("dedup_corpus_state_")
+    out = _scratch_dir("dedup_corpus_out_")
+    ckpt = _scratch_dir("dedup_corpus_ckpt_")
     corpus.filter(F.col("doc_id") % 2 == 0).repartition(4) \
           .write.mode("overwrite").parquet(src)
     s1 = (spark.readStream.schema(corpus.schema)
@@ -616,8 +598,6 @@ def q_stream_dedup_corpus_compact(spark, sf_dir):
     path). The deduplicated corpus a consumer reads must be unchanged
     by WHEN compaction ran: same one-survivor-per-content-key multiset,
     same DuckDB twin as stream_dedup_corpus."""
-    import tempfile
-
     from caspr_spark.streaming import (compact_corpus,
                                        read_dedup_corpus,
                                        run_dedup_corpus_to_state)
@@ -626,10 +606,10 @@ def q_stream_dedup_corpus_compact(spark, sf_dir):
     recrawl = (docs.filter(F.col("doc_id") % 4 == 0)
                    .withColumn("doc_id", F.col("doc_id") + 100000))
     corpus = docs.unionByName(recrawl)
-    src = tempfile.mkdtemp(prefix="dedup_compact_src_")
-    state = tempfile.mkdtemp(prefix="dedup_compact_state_")
-    out = tempfile.mkdtemp(prefix="dedup_compact_out_")
-    ckpt = tempfile.mkdtemp(prefix="dedup_compact_ckpt_")
+    src = _scratch_dir("dedup_compact_src_")
+    state = _scratch_dir("dedup_compact_state_")
+    out = _scratch_dir("dedup_compact_out_")
+    ckpt = _scratch_dir("dedup_compact_ckpt_")
     corpus.filter(F.col("doc_id") % 2 == 0).repartition(4) \
           .write.mode("overwrite").parquet(src)
     s1 = (spark.readStream.schema(corpus.schema)
@@ -671,18 +651,16 @@ def q_stream_dedup_corpus_near(spark, sf_dir):
     verify, and the kept-key multiset equals the distinct content
     keys however the stream was carved — the same invariant, and the
     same DuckDB twin, as the exact-mode row."""
-    import tempfile
-
     from caspr_spark.streaming import run_dedup_corpus_to_state
     _utc(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     recrawl = (docs.filter(F.col("doc_id") % 4 == 0)
                    .withColumn("doc_id", F.col("doc_id") + 100000))
     corpus = docs.unionByName(recrawl)
-    src = tempfile.mkdtemp(prefix="dedup_corpus_near_src_")
-    state = tempfile.mkdtemp(prefix="dedup_corpus_near_state_")
-    out = tempfile.mkdtemp(prefix="dedup_corpus_near_out_")
-    ckpt = tempfile.mkdtemp(prefix="dedup_corpus_near_ckpt_")
+    src = _scratch_dir("dedup_corpus_near_src_")
+    state = _scratch_dir("dedup_corpus_near_state_")
+    out = _scratch_dir("dedup_corpus_near_out_")
+    ckpt = _scratch_dir("dedup_corpus_near_ckpt_")
     corpus.filter(F.col("doc_id") % 2 == 0).repartition(4) \
           .write.mode("overwrite").parquet(src)
     s1 = (spark.readStream.schema(corpus.schema)
@@ -742,8 +720,6 @@ def q_stream_dedup_history(spark, sf_dir):
     CONTENT-KEY set is deterministic regardless of arrival order —
     distinct batch keys minus history keys — so unlike the other
     stateful streams this one carries a FULL oracle."""
-    import tempfile
-
     from caspr_spark.llm.dedup import build_history_keys
     from caspr_spark.streaming import (run_to_memory,
                                        streaming_dedup_against_history)
@@ -757,7 +733,7 @@ def q_stream_dedup_history(spark, sf_dir):
                           .select("doc_id", "text"))
              .withColumn("ts", F.timestamp_seconds(
                  F.lit(1704067200) + F.col("doc_id") % 3600)))
-    tmp = tempfile.mkdtemp(prefix="stream_hist_")
+    tmp = _scratch_dir("stream_hist_")
     batch.write.mode("overwrite").parquet(tmp)
     stream = spark.readStream.schema(batch.schema).parquet(tmp)
     kept = streaming_dedup_against_history(stream, keys,
@@ -801,12 +777,10 @@ def q_stream_gram_census(spark, sf_dir):
     census ROW-FOR-ROW regardless of batch boundaries or arrival order
     — the stream_dedup_history oracle discipline. Oracle: the
     full-corpus word-4-gram census in SQL."""
-    import tempfile
-
     from caspr_spark.streaming import run_to_memory, streaming_gram_census
     _utc(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="stream_census_")
+    tmp = _scratch_dir("stream_census_")
     docs.repartition(8).write.mode("overwrite").parquet(tmp)
     stream = (spark.readStream.schema(docs.schema)
               .option("maxFilesPerTrigger", 2).parquet(tmp))
@@ -842,14 +816,12 @@ def q_stream_gram_census_state(spark, sf_dir):
     persisted state. Because the fold is a pure per-hash sum, the
     final state table must equal the one-shot full-corpus census
     row-for-row — the same invariant oracle as stream_gram_census."""
-    import tempfile
-
     from caspr_spark.streaming import run_gram_census_to_state
     _utc(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    src = tempfile.mkdtemp(prefix="census_state_src_")
-    state = tempfile.mkdtemp(prefix="census_state_tbl_")
-    ckpt = tempfile.mkdtemp(prefix="census_state_ckpt_")
+    src = _scratch_dir("census_state_src_")
+    state = _scratch_dir("census_state_tbl_")
+    ckpt = _scratch_dir("census_state_ckpt_")
     docs.filter(F.col("doc_id") % 2 == 0).repartition(4) \
         .write.mode("overwrite").parquet(src)
     stream = (spark.readStream.schema(docs.schema)
@@ -879,14 +851,12 @@ def q_stream_gram_census_delta(spark, sf_dir):
     compaction), and the merged read must equal the one-shot
     full-corpus census row-for-row — the same invariant oracle as the
     other census rows."""
-    import tempfile
-
     from caspr_spark.streaming import run_gram_census_to_state
     _utc(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    src = tempfile.mkdtemp(prefix="census_delta_src_")
-    state = tempfile.mkdtemp(prefix="census_delta_tbl_")
-    ckpt = tempfile.mkdtemp(prefix="census_delta_ckpt_")
+    src = _scratch_dir("census_delta_src_")
+    state = _scratch_dir("census_delta_tbl_")
+    ckpt = _scratch_dir("census_delta_ckpt_")
     docs.filter(F.col("doc_id") % 2 == 0).repartition(4) \
         .write.mode("overwrite").parquet(src)
     stream = (spark.readStream.schema(docs.schema)

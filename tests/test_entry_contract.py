@@ -124,3 +124,37 @@ class TestEntryContract:
         block = text.split("<!-- BEGIN CERT TABLE -->\n", 1)[1] \
             .split("<!-- END CERT TABLE -->", 1)[0]
         assert block == capsys.readouterr().out
+
+
+class TestScratchDirs:
+    """The streaming builders put their sources, checkpoints, state and
+    outputs under one per-process root (``contract.common._scratch_dir``)
+    that is removed at exit."""
+
+    def test_one_mkdtemp_call(self):
+        import re
+        from pathlib import Path
+        root = Path(__file__).parent.parent / "contract"
+        hits = [f"{p.name}:{i}" for p in sorted(root.glob("*.py"))
+                for i, line in enumerate(p.read_text().splitlines(), 1)
+                if re.search(r"\bmkdtemp\(", line)]
+        assert len(hits) == 2 and all(h.startswith("common.py:")
+                                      for h in hits), hits
+
+    def test_built_stream_leaves_nothing_outside_the_root(
+            self, spark, tmp_path, monkeypatch):
+        import os
+        import tempfile
+
+        from conftest import SF_DIR
+        from contract import common
+        from contract.streaming import q_stream_ann_index
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        monkeypatch.setattr(common, "_SCRATCH", None)
+        assert q_stream_ann_index(spark, SF_DIR).count() > 0
+        root = common._SCRATCH
+        assert os.listdir(tmp_path) == [os.path.basename(root)]
+        made = os.listdir(root)
+        assert len(made) == 3 and all(
+            sum(d.startswith(f"ann_ingest_{kind}_") for d in made) == 1
+            for kind in ("src", "state", "ckpt")), made
