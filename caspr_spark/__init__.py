@@ -22,7 +22,10 @@ from caspr_spark.session import get_spark
 from caspr_spark.sources import load_tables, read_parquet_table
 from caspr_spark.pipeline import SequenceFeaturizer, SequenceFeaturizerModel
 
-if TaskContext.get() is not None:  # a Python worker unpickling a task
+# A Python worker unpickling a task: every function the engine ships to
+# workers is marked with ``workers.shipped``, so unpickling it imports
+# this package there.
+if TaskContext.get() is not None:
     from caspr_spark import workers
     workers.install()
 

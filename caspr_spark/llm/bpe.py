@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from caspr_spark.workers import shipped
+
 #: end-of-word sentinel (Sennrich's ``</w>``) — lets the tokenizer
 #: distinguish "low" as a word from "low" as a prefix of "lower".
 EOW = "▁"
@@ -128,6 +130,7 @@ def apply_bpe(df: DataFrame, merges: list[tuple[str, str]],
     ranks = {tuple(p): i for i, p in enumerate(merges)}
 
     @F.pandas_udf("array<string>")
+    @shipped
     def _tok(texts: pd.Series) -> pd.Series:
         cache: dict[str, list[str]] = {}
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from caspr_spark.operators.sampling import (_hash_col, downsample_to_cap,
                                             global_running_sum)
+from caspr_spark.workers import shipped
 
 _PREFIX = 8  # md5 hex prefix compared against the rate threshold
 
@@ -400,6 +401,7 @@ def pack_sequences_nextfit(df: DataFrame, token_col: str, budget: int,
                                StructField(fill_col, LongType())])
     b = int(budget)
 
+    @shipped
     def walk(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
         seqs, fills = [], []

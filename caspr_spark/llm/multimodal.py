@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from caspr_spark.workers import shipped
+
 try:  # real codecs, if ever present in the image
     from PIL import Image  # noqa: F401
     HAVE_PIL = True
@@ -62,6 +64,7 @@ def extract_features(df: DataFrame, payload_col: str = "payload",
     """
     schema = f"{id_col} long, n_bytes long, head_mean double, head_max int"
 
+    @shipped
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
         for pdf in batches:
@@ -104,6 +107,7 @@ def sample_frames(df: DataFrame, payload_col: str = "payload",
     schema = f"{id_col} long, frame_idx int, frame_byte int"
     span = (max_frames - 1) * stride + 1          # last sampled position + 1
 
+    @shipped
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
         for pdf in batches:

@@ -32,6 +32,8 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from caspr_spark.workers import shipped
+
 
 def _check(dim: int, m: int, k: int):
     if dim % m:
@@ -89,6 +91,7 @@ def pq_encode(df: DataFrame, codebooks: np.ndarray,
     m, k, dsub = cb.shape
 
     @F.pandas_udf("array<int>")
+    @shipped
     def _enc(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
@@ -114,6 +117,7 @@ def pq_decode(df: DataFrame, codebooks: np.ndarray,
     m, k, dsub = cb.shape
 
     @F.pandas_udf("array<double>")
+    @shipped
     def _dec(codes: pd.Series) -> pd.Series:
         if len(codes) == 0:
             return pd.Series([], dtype=object)
@@ -144,6 +148,7 @@ def pq_search(df: DataFrame, query: np.ndarray, codebooks: np.ndarray,
         for j in range(m)])                                 # [m, k]
 
     @F.pandas_udf("double")
+    @shipped
     def _adc(codes: pd.Series) -> pd.Series:
         if len(codes) == 0:
             return pd.Series([], dtype="float64")

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from caspr_spark.cache import register_cache
+from caspr_spark.workers import shipped
 
 
 def _dot(a, b):
@@ -39,6 +40,7 @@ def cosine_similarity_col(a, b):
     return _dot(ad, bd) / (_norm(ad) * _norm(bd))
 
 
+@shipped
 def _pair_cosine_fn(a: pd.Series, b: pd.Series) -> pd.Series:
     """Arrow-batched pairwise cosine — one einsum per batch.
 
@@ -195,6 +197,7 @@ def add_lsh_buckets(df: DataFrame, vec_col: str, dim: int, n_planes: int,
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
     @F.pandas_udf("array<long>")
+    @shipped
     def _buckets(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
@@ -244,6 +247,7 @@ def add_lsh_buckets_packed(df: DataFrame, vec_col: str, dim: int,
     weights = (1 << np.arange(n_tables * n_planes)).astype(np.int64)
 
     @F.pandas_udf("long")
+    @shipped
     def _packed(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype="int64")
@@ -450,6 +454,7 @@ def nearest_centroid_arrow(vec_col, centroids):
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("int")
+    @shipped
     def _assign(vecs: pd.Series) -> pd.Series:
         X = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
         if X.size == 0:

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from caspr_spark.workers import shipped
+
 
 def add_gaussian_noise(df: DataFrame, cols: list[str], p: float = 0.1,
                        sigma: float = 0.1, seed: int = 42) -> DataFrame:
@@ -181,6 +183,7 @@ def smote_nc_oversample(df: DataFrame, label_col: str, cont_cols: list[str],
         "__salt", F.floor(F.rand(seed) * salt_buckets).cast("int"))
     schema = feat.schema
 
+    @shipped
     def synthesize(keys, pdf: pd.DataFrame) -> pd.DataFrame:
         import zlib
         lbl, bucket = keys

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from caspr_spark.workers import shipped
+
 
 def heavy_hitters(df: DataFrame, col: str, threshold_frac: float,
                   width: int | None = None) -> DataFrame:
@@ -57,6 +59,7 @@ def heavy_hitters(df: DataFrame, col: str, threshold_frac: float,
     vals = df.select(F.col(col).alias("v")).filter(F.col("v").isNotNull())
     w = width
 
+    @shipped
     def mg_partition(batches):
         # vectorized Misra-Gries via the mergeable-summaries form
         # (Agarwal et al.): exact per-batch value_counts, pointwise add,

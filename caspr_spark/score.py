@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from caspr_spark.workers import shipped
+
 INNER_BATCH = 16 * 2048  # reference caspr/utils/spark/score.py:18
 
 
@@ -62,6 +64,7 @@ def score(df: DataFrame, model, seq_len: int, n_seq_cat: int, n_seq_cont: int,
         df = pack_for_scoring(df, cont_cols or [], cat_cols or [])
 
     @pandas_udf("array<float>")
+    @shipped
     def calculate_embeddings(cont: pd.Series, cat: pd.Series) -> pd.Series:
         n = len(cont)
         if n == 0:
@@ -101,6 +104,7 @@ def score_linear(df: DataFrame, vec_col: str, weights, round_digits: int = 6,
     out_dim = W.shape[0]
 
     @pandas_udf("array<double>")
+    @shipped
     def project(vec: pd.Series) -> pd.Series:
         if len(vec) == 0:
             return pd.Series([], dtype=object)

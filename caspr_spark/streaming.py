@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType
 
+from caspr_spark.workers import shipped
+
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
@@ -118,6 +120,7 @@ def streaming_last_n(stream: DataFrame, n: int, key_col: str = "user_id",
                     ", ".join(f"v{i} array<double>"
                               for i in range(len(value_cols))) + ", ver int")
 
+    @shipped
     def update(key, pdfs, state: GroupState):
         import pandas as pd
         tuples, ver = [], 0
@@ -218,6 +221,7 @@ def streaming_anomaly_zscore(stream: DataFrame, key_col: str = "user_id",
                   "n_prior int, z double")
     state_schema = ANOMALY_STATE_SCHEMA
 
+    @shipped
     def update(key, pdfs, state: GroupState):
         import numpy as np
         import pandas as pd

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from caspr_spark.train import (EarlyStopping, LinearAutoencoder, scale_lr,
                                warmup_lr)
+from caspr_spark.workers import shipped
 
 ROOT_RANK = 0  # large/train.py:49
 
@@ -182,8 +183,9 @@ def fit_linear_autoencoder_ddp(df: DataFrame, cols: list[str],
 # fixed cost was ~0.4 s on 4 cores, whatever the kernel computed: every
 # task's ``importlib.invalidate_caches()`` (PySpark's
 # ``setup_spark_files``) re-read pyspark.zip and the spark-core jar once
-# per cached zip importer on Python 3.10-3.12. Unpickling this module in
-# a worker imports ``caspr_spark``, which installs the stat guard of
+# per cached zip importer on Python 3.10-3.12. The kernel is marked with
+# ``workers.shipped``, so unpickling it in a worker imports
+# ``caspr_spark``, which installs the stat guard of
 # :mod:`caspr_spark.workers`; from the next task on, an unchanged archive
 # is not re-read and a pass costs ~0.15-0.2 s, about a JVM-only
 # ``count()``.
@@ -213,6 +215,7 @@ def _fold_partitions(df: DataFrame, part, state=None, model=None, *,
         {k: np.asarray(v) for k, v in model.state_dict().items()})
     blob = pickle.dumps((state, recipe))
 
+    @shipped
     def kernel(batches):
         import pandas as pd
 

@@ -1,25 +1,34 @@
-"""Python-worker process setup: CPython 3.13's zipimport cache behaviour.
+"""Python-worker process setup: a stat guard on zipimport's cache
+invalidation.
 
 PySpark's ``setup_spark_files`` ends every task with
 ``importlib.invalidate_caches()``. On Python 3.10-3.12 each cached
 ``zipimporter`` then re-reads its archive's whole directory; a reused
 worker holds one importer per subpackage of ``pyspark.zip`` (1,328
 entries), plus the py4j zip and the spark-core jar (5,359 entries), so
-that one call costs more per task than a small kernel. Python 3.13
-only drops the cache.
+that one call costs more per task than a small kernel. (Python 3.13
+only drops the cache and re-reads lazily.)
 
 :func:`install` puts a stat guard on ``zipimporter.invalidate_caches``:
-an archive's directory is re-read only when its ``(st_mtime_ns,
-st_size)`` differs from the values recorded when the cached directory
-was read, so an unchanged archive is read zero times per task and a
-rewritten one is still re-read (once, not once per importer).
+an archive's directory is re-read only when its ``(st_ino, st_size,
+st_mtime_ns, st_ctime_ns)`` differs from the values recorded when the
+cached directory was read, so an unchanged archive is read zero times
+per task, and one rewritten or replaced (even by a same-size copy with
+its mtime kept: the ctime or the inode changes) is re-read once, not
+once per importer.
+
+``caspr_spark/__init__.py`` installs the guard when the package is
+imported inside a task. Every function the engine ships to Python
+workers is marked with :func:`shipped`, so unpickling it there imports
+the package even when the function is a closure over numpy, pandas and
+arrays only.
 """
 
 import os
 import sys
 import zipimport
 
-# archive path -> (st_mtime_ns, st_size) when its cached directory was read
+# archive path -> stat stamp when its cached directory was read
 _stamps: dict = {}
 _reread = zipimport.zipimporter.invalidate_caches
 
@@ -29,7 +38,7 @@ def _stamp(archive):
         st = os.stat(archive)
     except OSError:
         return None
-    return st.st_mtime_ns, st.st_size
+    return st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns
 
 
 def _invalidate_caches(self):
@@ -59,3 +68,19 @@ def install():
         if stamp is not None:
             _stamps[archive] = stamp
     zipimport.zipimporter.invalidate_caches = _invalidate_caches
+
+
+def shipped(fn):
+    """Mark ``fn``, a function the engine ships to Python workers, so
+    that unpickling it in a worker imports ``caspr_spark`` (and so
+    installs the guard).
+
+    cloudpickle ships a nested function by value, with only the globals
+    its code names: a kernel that uses only numpy, pandas and closed-over
+    arrays would never import this package in a worker. A function's
+    ``__dict__`` is pickled with it, and :func:`install`, a module-level
+    function, is pickled by name, so loading it imports this module.
+    ``fn`` itself is returned unchanged (signature and type hints
+    included)."""
+    fn.worker_setup = install
+    return fn
