@@ -9,11 +9,11 @@ import contextlib
 import glob
 import json
 import os
-import uuid
 import subprocess
 import sys
 import textwrap
 import types
+import uuid
 import zipimport
 
 import pytest
