@@ -1615,14 +1615,9 @@ def read_history_keys_state(spark, state_dir: str) -> DataFrame:
     doc's keys stop suppressing future docs the moment its tombstone
     commits) — feed straight to
     ``dedup_against_history(..., history_keys=...)``."""
-    from caspr_spark.state import (live_frames, read_deletes_state,
-                                   state_listing, state_path)
+    from caspr_spark.state import read_deletes_state, read_live_frames
 
-    frames = live_frames(state_listing(spark, state_dir))
-    if not frames:
-        raise RuntimeError(f"no committed key state under {state_dir}")
-    dfs = [spark.read.parquet(state_path(state_dir, b, k))
-           for b, k in frames]
+    dfs = read_live_frames(spark, state_dir, "key")
     deletes = read_deletes_state(spark, state_dir)
     if len(dfs) == 1 and deletes is None:
         return dfs[0]
@@ -1738,25 +1733,6 @@ def check_signature_state(spark, state_dir: str, hash_family: str,
             "new state dir")
 
 
-def merge_history_signature_frames(frames: list) -> DataFrame:
-    """Merge signature-table frames: a pure ``unionByName``. Unlike
-    the key table there is no election to run — every frame holds the
-    signatures of ONE accepted (already-deduplicated) crawl batch, and
-    batches carry disjoint ``history_id`` sets by construction (the
-    state protocol skips replayed batch ids, so the one way a batch's
-    rows could appear twice — a post-crash replay of the same crawl
-    day — never reaches the union). Kept as a named merge so the
-    compaction step and any tree-of-partials build state the
-    disjointness invariant in one place."""
-    if not frames:
-        raise ValueError(
-            "merge_history_signature_frames needs at least one frame")
-    u = frames[0]
-    for f in frames[1:]:
-        u = u.unionByName(f)
-    return u
-
-
 def append_history_signatures_state(spark, state_dir: str, batch_id: int,
                                     accepted: DataFrame,
                                     id_col: str = "doc_id",
@@ -1781,7 +1757,7 @@ def append_history_signatures_state(spark, state_dir: str, batch_id: int,
     batch ids skip via the shared :mod:`caspr_spark.state` commit
     protocol (``_SUCCESS`` markers, out-of-order folds refuse loudly);
     every ``compact_every``-th commit unions the live frames into a
-    compact (:func:`merge_history_signature_frames` — batches hold
+    compact (:func:`caspr_spark.state.compact_merge` — batches hold
     disjoint ids, so the union IS the merge). ``batch_id`` must be
     caller-supplied and strictly increasing across crawls (the day
     number) — that is what makes re-running a day idempotent.
@@ -1801,7 +1777,7 @@ def append_history_signatures_state(spark, state_dir: str, batch_id: int,
                                         history_signatures=sigs, ...)
         append_history_signatures_state(spark, state_dir, day, kept, ...)
     """
-    from caspr_spark.state import fold_commit
+    from caspr_spark.state import compact_merge, fold_commit
 
     if hash_family not in ("fast", "portable"):
         raise ValueError(f"hash_family must be 'fast' or 'portable', "
@@ -1810,10 +1786,11 @@ def append_history_signatures_state(spark, state_dir: str, batch_id: int,
         # ``check_state=False`` is for a caller that ALREADY verified
         # family+width against this dir (the streaming sink runs
         # check_signature_state pre-write in the same fold, or in an
-        # earlier fold under the stream's writer lease) — the probe is
-        # one limit(1) Spark job per fold, pure latency on a
-        # micro-batch. Batch callers keep the default: the guard is
-        # what makes a mismatched pre-existing state refuse loudly.
+        # earlier fold under the stream's writer lease) — the probe
+        # costs 2 Spark jobs per fold (schema inference plus limit(1)),
+        # pure latency on a micro-batch. Batch callers keep the
+        # default: the guard is what makes a mismatched pre-existing
+        # state refuse loudly.
         check_signature_state(spark, state_dir, hash_family, num_hashes)
 
     if signatures is not None:
@@ -1860,18 +1837,9 @@ def append_history_signatures_state(spark, state_dir: str, batch_id: int,
                                             num_hashes, shingle_size,
                                             hash_family)
 
-    def merge(frames):
-        # compaction bakes forgotten ids in (forget_documents_state);
-        # union first, then mask — signature frames hold disjoint ids,
-        # so order is immaterial here, unlike the key-table election
-        from caspr_spark.state import apply_deletes_state
-
-        return apply_deletes_state(
-            spark, state_dir, merge_history_signature_frames(frames),
-            "history_id")
-
+    # compaction bakes forgotten ids in (forget_documents_state)
     fold_commit(spark, state_dir, batch_id, "delta", compact_every,
-                new_rows, merge)
+                new_rows, compact_merge(spark, state_dir, "history_id"))
 
 
 def read_history_signatures_state(spark, state_dir: str) -> DataFrame:
@@ -1880,21 +1848,12 @@ def read_history_signatures_state(spark, state_dir: str) -> DataFrame:
     with every younger delta, minus FORGOTTEN documents' rows
     (:func:`forget_documents_state`) — feed straight to
     ``dedup_against_history(..., history_signatures=...)``. The read
-    is file-backed, so the family guard's bounded probe stays one
-    parquet-footer row, never a recompute (and the guard probes raw
-    frames via ``probe_newest_nonempty``, bypassing the tombstone
-    anti-join)."""
-    from caspr_spark.state import (apply_deletes_state, live_frames,
-                                   state_listing, state_path)
+    is file-backed (:func:`caspr_spark.state.read_masked_state`), so
+    the family guard's probe reads raw frames, never a recompute, and
+    never pays the tombstone anti-join."""
+    from caspr_spark.state import read_masked_state
 
-    frames = live_frames(state_listing(spark, state_dir))
-    if not frames:
-        raise RuntimeError(
-            f"no committed signature state under {state_dir}")
-    merged = merge_history_signature_frames(
-        [spark.read.parquet(state_path(state_dir, b, k))
-         for b, k in frames])
-    return apply_deletes_state(spark, state_dir, merged, "history_id")
+    return read_masked_state(spark, state_dir, "signature", "history_id")
 
 
 def forget_documents_state(spark, state_dir: str, batch_id: int,

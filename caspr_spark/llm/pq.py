@@ -192,33 +192,6 @@ def _codebook_fingerprint(codebooks) -> str:
     return hashlib.md5(payload.encode("utf-8")).hexdigest()
 
 
-def _merge_pq_frames(frames: list) -> DataFrame:
-    """Pure ``unionByName`` — ingest batches carry disjoint vector ids
-    by the caller's contract (replayed batch ids never reach the
-    merge; same invariant as the IVF frame merge)."""
-    if not frames:
-        raise ValueError("_merge_pq_frames needs at least one frame")
-    u = frames[0]
-    for f in frames[1:]:
-        u = u.unionByName(f)
-    return u
-
-
-def _pq_compact_merge(spark, state_dir: str, id_col: str):
-    """Compaction merge: union the live frames, then BAKE IN any
-    tombstones the delete side-stream holds — the compact is the full
-    state, so an anti-joined row simply leaves it, and pruning the
-    superseded frames erases its bytes (the same rule as the IVF
-    compact merge). Runs only when ``fold_commit`` decides to
-    compact, so delta folds stay O(batch)."""
-    from caspr_spark.state import apply_deletes_state
-
-    def merge(frames):
-        return apply_deletes_state(spark, state_dir,
-                                   _merge_pq_frames(frames), id_col)
-    return merge
-
-
 def append_pq_state(spark, state_dir: str, batch_id: int,
                     batch: DataFrame, codebooks,
                     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -230,14 +203,14 @@ def append_pq_state(spark, state_dir: str, batch_id: int,
     commit ``(id, pq_codes)`` as a delta. ``batch_id`` is
     caller-supplied and strictly increasing (the day number); replayed
     ids skip, out-of-order ids refuse, and a codebook-fingerprint
-    guard (one parquet-footer probe of the newest non-empty frame,
-    :func:`caspr_spark.state.probe_newest_nonempty`) refuses a fold
-    under different codebooks. Tombstones folded by
+    guard (a probe of the newest non-empty frame,
+    :func:`caspr_spark.state.check_stamp`) refuses a fold under
+    different codebooks. Tombstones folded by
     :func:`append_pq_deletes` are baked in at every compaction;
     :func:`vacuum_pq_state` forces that off-cadence. Search with
     :func:`adc_topk_pq_state`; prune superseded frames with
     :func:`caspr_spark.state.prune_state`."""
-    from caspr_spark.state import fold_commit, probe_newest_nonempty
+    from caspr_spark.state import check_stamp, compact_merge, fold_commit
 
     fp = _codebook_fingerprint(codebooks)
     if check_state:
@@ -246,18 +219,11 @@ def append_pq_state(spark, state_dir: str, batch_id: int,
         # first fold under the stream's writer lease; later frames were
         # committed by that writer under the same pinned codebooks).
         # Batch callers keep the default probe.
-        probe = probe_newest_nonempty(spark, state_dir,
-                                      [F.col("codebook_fp")])
-        if probe is not None and probe[0] != fp:
-            raise ValueError(
-                f"PQ state under {state_dir} was built with codebook "
-                f"fingerprint {probe[0]!r} but this fold uses {fp!r}; "
-                "codes from different codebooks are incommensurable — "
-                "use the stored codebooks or a new state dir")
+        check_stamp(spark, state_dir, "codebook_fp", fp, "PQ")
     frame = pq_encode(batch, codebooks, vec_col=vec_col) \
         .select(F.col(id_col), "pq_codes", F.lit(fp).alias("codebook_fp"))
     fold_commit(spark, state_dir, batch_id, "delta", compact_every,
-                frame, _pq_compact_merge(spark, state_dir, id_col))
+                frame, compact_merge(spark, state_dir, id_col))
 
 
 def append_pq_deletes(spark, state_dir: str, batch_id: int,
@@ -285,71 +251,40 @@ def vacuum_pq_state(spark, state_dir: str, batch_id: int, codebooks,
     superseded frames, erasing the deleted codes' bytes. ``batch_id``
     comes from the SAME sequence as the ingest folds (the vacuum IS a
     fold). Returns the pruned batch ids."""
-    from caspr_spark.state import (fold_commit, live_frames, prune_state,
-                                   state_listing, state_path)
+    from caspr_spark.state import vacuum_state
 
-    frames = live_frames(state_listing(spark, state_dir))
-    if not frames:
-        raise RuntimeError(
-            f"no committed PQ state under {state_dir} — nothing to "
-            "vacuum")
-    fp = _codebook_fingerprint(codebooks)
-    newest_b, newest_k = frames[-1]
-    sample = spark.read.parquet(state_path(state_dir, newest_b, newest_k))
-    probe = sample.select("codebook_fp").limit(1).collect()
-    if probe and probe[0][0] != fp:
-        raise ValueError(
-            f"PQ state under {state_dir} carries codebook fingerprint "
-            f"{probe[0][0]!r} but this vacuum passes {fp!r} — pass the "
-            "codebooks the table was ingested under")
-    frame = sample.limit(0).select(id_col, "pq_codes", "codebook_fp")
-    fold_commit(spark, state_dir, batch_id, "delta", 2, frame,
-                _pq_compact_merge(spark, state_dir, id_col),
-                force_compact=True)
-    return prune_state(spark, state_dir, keep_last)
+    return vacuum_state(spark, state_dir, batch_id, id_col, "codebook_fp",
+                        _codebook_fingerprint(codebooks), "PQ", keep_last)
 
 
 def read_pq_state(spark, state_dir: str) -> DataFrame:
     """Current code table from a versioned state dir: newest compact
     unioned with every younger delta, minus any tombstoned ids — the
-    ``(id, pq_codes)`` relation ADC scores. File-backed, so the
-    codebook guard's probe stays one parquet-footer row; a
-    tombstone-free dir keeps its exact pre-tombstone plan (the
-    no-tombstones probe is one listing)."""
-    from caspr_spark.state import (apply_deletes_state, live_frames,
-                                   state_listing, state_path)
+    ``(id, pq_codes)`` relation ADC scores
+    (:func:`caspr_spark.state.read_masked_state`). A tombstone-free
+    dir keeps its exact pre-tombstone plan (the no-tombstones probe
+    is one listing)."""
+    from caspr_spark.state import read_masked_state
 
-    frames = live_frames(state_listing(spark, state_dir))
-    if not frames:
-        raise RuntimeError(f"no committed PQ state under {state_dir}")
-    merged = _merge_pq_frames(
-        [spark.read.parquet(state_path(state_dir, b, k))
-         for b, k in frames])
-    return apply_deletes_state(spark, state_dir, merged,
-                               merged.columns[0])
+    return read_masked_state(spark, state_dir, "PQ")
 
 
 def adc_topk_pq_state(spark, state_dir: str, query, codebooks,
                       top_k: int = 10, id_col: str = "vec_id",
                       dist_col: str = "adc_distance") -> DataFrame:
     """ADC top-k over the VERSIONED code table: verify the codebook
-    fingerprint (one footer probe — searching under the wrong
-    codebooks returns wrong neighbors silently, so refuse loudly),
+    fingerprint (:func:`caspr_spark.state.check_stamp` — searching
+    under the wrong codebooks returns wrong neighbors silently, so
+    refuse loudly),
     read the state (tombstones masked), then the shared
     :func:`pq_search` scoring — byte-identical arithmetic to a
     one-shot ``pq_encode`` + ``pq_search`` over the union of the
     ingested batches minus deletions (the certified invariant:
     ``simsearch_pq_state`` in ``contract.streaming``)."""
-    from caspr_spark.state import probe_newest_nonempty
+    from caspr_spark.state import check_stamp
 
-    fp = _codebook_fingerprint(codebooks)
-    probe = probe_newest_nonempty(spark, state_dir,
-                                  [F.col("codebook_fp")])
-    if probe is not None and probe[0] != fp:
-        raise ValueError(
-            f"PQ state under {state_dir} carries codebook fingerprint "
-            f"{probe[0]!r} but this search uses {fp!r} — pass the "
-            "codebooks the table was ingested under")
+    check_stamp(spark, state_dir, "codebook_fp",
+                _codebook_fingerprint(codebooks), "PQ")
     codes = read_pq_state(spark, state_dir).drop("codebook_fp")
     return pq_search(codes, query, codebooks, id_col=id_col,
                      top_k=top_k, dist_col=dist_col)

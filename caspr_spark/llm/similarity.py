@@ -561,20 +561,6 @@ def _centroid_fingerprint(centroids: list) -> str:
     return hashlib.md5(payload.encode("utf-8")).hexdigest()
 
 
-def _merge_ivf_frames(frames: list) -> DataFrame:
-    """Pure ``unionByName`` — ingest batches carry disjoint vector ids
-    by the caller's contract (the state protocol already makes
-    replayed batch ids a no-op, so a re-run of a crashed ingest day
-    never reaches the union), same disjointness invariant as the
-    signature-table merge."""
-    if not frames:
-        raise ValueError("_merge_ivf_frames needs at least one frame")
-    u = frames[0]
-    for f in frames[1:]:
-        u = u.unionByName(f)
-    return u
-
-
 def append_ivf_state(spark, state_dir: str, batch_id: int,
                      batch: DataFrame, centroids: list,
                      id_col: str = "vec_id", vec_col: str = "embedding",
@@ -591,7 +577,8 @@ def append_ivf_state(spark, state_dir: str, batch_id: int,
     vectors under the PINNED ``centroids`` (the deterministic
     :func:`nearest_centroid` election) and commits them as a delta
     (O(batch)); every ``compact_every``-th commit unions the live
-    frames (:func:`_merge_ivf_frames` — disjoint ids by contract).
+    frames (:func:`caspr_spark.state.compact_merge` — disjoint ids by
+    contract).
     Shares the :mod:`caspr_spark.state` commit protocol: ``_SUCCESS``
     markers, replayed batch ids skip, out-of-order folds refuse; under
     a stream, :func:`caspr_spark.streaming.ann_ingest_sink` holds the
@@ -600,8 +587,8 @@ def append_ivf_state(spark, state_dir: str, batch_id: int,
 
     The quantizer is enforced against the COMMITTED state: every frame
     carries a constant ``centroid_fp`` column and a bounded probe
-    (newest non-empty live frame — empty deltas are skipped, not
-    trusted) refuses a fold under different centroids, which would
+    (:func:`caspr_spark.state.check_stamp`: newest non-empty live
+    frame — empty deltas are skipped, not trusted) refuses a fold under different centroids, which would
     poison the index with cells from two quantizers. Frames are
     repartitioned by ``ivf_cell`` before the write so each frame's
     parquet clusters by cell; ``partition_by_cell=True`` additionally
@@ -631,7 +618,7 @@ def append_ivf_state(spark, state_dir: str, batch_id: int,
     vectors and a following ``prune_state`` erases their bytes from
     the superseded frames (the right-to-erasure path;
     :func:`vacuum_ivf_state` forces it off-cadence)."""
-    from caspr_spark.state import fold_commit, probe_newest_nonempty
+    from caspr_spark.state import check_stamp, compact_merge, fold_commit
 
     fp = _centroid_fingerprint(centroids)
     if check_state:
@@ -639,20 +626,12 @@ def append_ivf_state(spark, state_dir: str, batch_id: int,
         # the quantizer fingerprint against this dir (the streaming
         # sink probes on its first fold under the stream's writer
         # lease; every later frame was committed by that writer under
-        # the same pinned centroids), so the per-fold ``limit(1)``
-        # probe job is pure micro-batch latency there.
+        # the same pinned centroids), so the per-fold probe's 2 Spark
+        # jobs (schema inference plus limit(1)) are pure micro-batch
+        # latency there.
         # Batch callers keep the default: the probe is what makes a
         # mismatched pre-existing state refuse loudly.
-        probe = probe_newest_nonempty(spark, state_dir,
-                                      [F.col("centroid_fp")])
-        if probe is not None and probe[0] != fp:
-            raise ValueError(
-                f"IVF state under {state_dir} was built with centroid "
-                f"fingerprint {probe[0]!r} but this fold uses "
-                f"{fp!r}; cells from different quantizers are "
-                "incommensurable (probes would silently search the "
-                "wrong cells) — use the stored centroids or a new "
-                "state dir")
+        check_stamp(spark, state_dir, "centroid_fp", fp, "IVF")
     if assign not in ("expr", "arrow"):
         raise ValueError(f"assign must be 'expr' or 'arrow', "
                          f"got {assign!r}")
@@ -663,24 +642,8 @@ def append_ivf_state(spark, state_dir: str, batch_id: int,
         elect(vec_col, centroids).alias("ivf_cell"),
         F.lit(fp).alias("centroid_fp")).repartition("ivf_cell")
     fold_commit(spark, state_dir, batch_id, "delta", compact_every,
-                frame, _ivf_compact_merge(spark, state_dir, id_col),
+                frame, compact_merge(spark, state_dir, id_col),
                 partition_by=["ivf_cell"] if partition_by_cell else None)
-
-
-def _ivf_compact_merge(spark, state_dir: str, id_col: str):
-    """The IVF compaction merge: union the live frames
-    (:func:`_merge_ivf_frames`), then BAKE IN any tombstones the
-    delete side-stream holds (:mod:`caspr_spark.state` tombstone
-    protocol) — the compact is the full state, so an anti-joined row
-    simply leaves it, and pruning the superseded frames then erases
-    its bytes. Runs only when :func:`caspr_spark.state.fold_commit`
-    decides to compact, so delta folds stay O(batch)."""
-    from caspr_spark.state import apply_deletes_state
-
-    def merge(frames):
-        return apply_deletes_state(spark, state_dir,
-                                   _merge_ivf_frames(frames), id_col)
-    return merge
 
 
 def append_ivf_deletes(spark, state_dir: str, batch_id: int,
@@ -714,7 +677,6 @@ def append_ivf_deletes(spark, state_dir: str, batch_id: int,
 def vacuum_ivf_state(spark, state_dir: str, batch_id: int,
                      centroids: list, keep_last: int = 1,
                      id_col: str = "vec_id",
-                     vec_col: str = "embedding",
                      partition_by_cell: bool = False) -> list[int]:
     """Force tombstone resolution NOW instead of at the compaction
     cadence — the erasure-deadline path: commit a FORCED compact (an
@@ -733,33 +695,11 @@ def vacuum_ivf_state(spark, state_dir: str, batch_id: int,
     deletes), then run ``prune_state`` beside the stream.
     ``keep_last=1`` by default: erasure means superseded frames go,
     not linger as restore points that still hold the vectors."""
-    from caspr_spark.state import (fold_commit, live_frames, prune_state,
-                                   state_listing, state_path)
+    from caspr_spark.state import vacuum_state
 
-    frames = live_frames(state_listing(spark, state_dir))
-    if not frames:
-        raise RuntimeError(
-            f"no committed IVF state under {state_dir} — nothing to "
-            "vacuum")
-    fp = _centroid_fingerprint(centroids)
-    newest_b, newest_k = frames[-1]
-    # schema-exact empty batch from the newest frame (vector element
-    # type follows whatever was ingested); the fingerprint guard rides
-    # the merge's own frames, but assert here too for a loud refusal
-    sample = spark.read.parquet(state_path(state_dir, newest_b, newest_k))
-    frame = sample.limit(0).select(id_col, vec_col, "ivf_cell",
-                                   "centroid_fp")
-    probe = sample.select("centroid_fp").limit(1).collect()
-    if probe and probe[0][0] != fp:
-        raise ValueError(
-            f"IVF state under {state_dir} carries centroid fingerprint "
-            f"{probe[0][0]!r} but this vacuum passes {fp!r} — pass the "
-            "centroids the index was ingested under")
-    fold_commit(spark, state_dir, batch_id, "delta", 2, frame,
-                _ivf_compact_merge(spark, state_dir, id_col),
-                partition_by=["ivf_cell"] if partition_by_cell else None,
-                force_compact=True)
-    return prune_state(spark, state_dir, keep_last)
+    return vacuum_state(spark, state_dir, batch_id, id_col, "centroid_fp",
+                        _centroid_fingerprint(centroids), "IVF", keep_last,
+                        ["ivf_cell"] if partition_by_cell else None)
 
 
 def read_ivf_state(spark, state_dir: str) -> DataFrame:
@@ -768,21 +708,13 @@ def read_ivf_state(spark, state_dir: str) -> DataFrame:
     younger delta, minus any tombstoned ids
     (:func:`append_ivf_deletes` — a deleted vector is invisible the
     moment its tombstone commits, before any compaction bakes it in).
-    The ``(id, vector, ivf_cell)`` relation a probe searches;
-    file-backed, so the quantizer guard's probe stays one
-    parquet-footer row, and a delete-free state dir keeps its exact
-    pre-tombstone plan (the no-tombstones probe is one listing)."""
-    from caspr_spark.state import (apply_deletes_state, live_frames,
-                                   state_listing, state_path)
+    The ``(id, vector, ivf_cell)`` relation a probe searches
+    (:func:`caspr_spark.state.read_masked_state`); a delete-free
+    state dir keeps its exact pre-tombstone plan (the no-tombstones
+    probe is one listing)."""
+    from caspr_spark.state import read_masked_state
 
-    frames = live_frames(state_listing(spark, state_dir))
-    if not frames:
-        raise RuntimeError(f"no committed IVF state under {state_dir}")
-    merged = _merge_ivf_frames(
-        [spark.read.parquet(state_path(state_dir, b, k))
-         for b, k in frames])
-    id_col = merged.columns[0]    # the ingest contract's id column
-    return apply_deletes_state(spark, state_dir, merged, id_col)
+    return read_masked_state(spark, state_dir, "IVF")
 
 
 def cosine_topk_ivf_state(spark, state_dir: str, queries: DataFrame,
@@ -803,9 +735,9 @@ def cosine_topk_ivf_state(spark, state_dir: str, queries: DataFrame,
     ``cosine_topk_ivf(corpus, ..., centroids=...)`` index over the
     union of the ingested batches MINUS any tombstoned ids
     (:func:`append_ivf_deletes`) — the certified invariant. The
-    fingerprint probe reads a raw frame footer directly
-    (:func:`caspr_spark.state.probe_newest_nonempty`), so it never
-    pays the tombstone anti-join the masked read carries.
+    fingerprint probe reads a raw frame directly
+    (:func:`caspr_spark.state.check_stamp`), so it never pays the
+    tombstone anti-join the masked read carries.
 
     ``static_prune=True`` (default) pushes the probed cell set into
     the frame scans as a literal filter instead of relying on the
@@ -813,16 +745,10 @@ def cosine_topk_ivf_state(spark, state_dir: str, queries: DataFrame,
     compile instead of two, and prunes the plain layout's row groups
     too (see :func:`_ivf_probe_topk`); ``False`` keeps the pure
     broadcast-join plan (no driver-side probe materialization)."""
-    from caspr_spark.state import probe_newest_nonempty
+    from caspr_spark.state import check_stamp
 
-    fp = _centroid_fingerprint(centroids)
-    probe = probe_newest_nonempty(spark, state_dir,
-                                  [F.col("centroid_fp")])
-    if probe is not None and probe[0] != fp:
-        raise ValueError(
-            f"IVF state under {state_dir} carries centroid fingerprint "
-            f"{probe[0]!r} but this search uses {fp!r} — pass the "
-            "centroids the index was ingested under")
+    check_stamp(spark, state_dir, "centroid_fp",
+                _centroid_fingerprint(centroids), "IVF")
     indexed = read_ivf_state(spark, state_dir)
     return _ivf_probe_topk(indexed.drop("centroid_fp"), queries, k,
                            n_probe, centroids, id_col, vec_col,

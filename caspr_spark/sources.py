@@ -7,6 +7,10 @@ file footer (pyarrow, driver-side — no data read), flip the
 timestamps with *integer* division (nanosecond epochs exceed 2^53, so
 float division would corrupt them). Truncation toward zero matches how
 DuckDB / pyarrow downcast ns -> us, which keeps oracle comparisons exact.
+Spark-written parquet stores timestamps as INT96, which pyarrow also
+reports as ``timestamp[ns]`` but Spark reads as a timestamp: only a
+column that arrives as a long is rebuilt (:func:`_rebuild_nanos`, shared
+with :func:`caspr_spark.streaming.stream_events`).
 """
 
 from __future__ import annotations
@@ -17,6 +21,7 @@ import os
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
@@ -37,6 +42,17 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
         if str(typ) == "timestamp[ns]":
             out.append(name)
     return out
+
+
+def _rebuild_nanos(df: DataFrame, ns_cols: list[str]) -> DataFrame:
+    """Microsecond timestamps from the ns epoch longs a ``nanosAsLong``
+    read yields for ``ns_cols``; a column Spark already reads as a
+    timestamp (INT96) is left as it is."""
+    types = {f.name: f.dataType for f in df.schema}
+    for c in ns_cols:
+        if isinstance(types[c], LongType):
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    return df
 
 
 # (path, (file, mtime)×N, applicationId) -> inferred Spark schema.
@@ -83,9 +99,7 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
         # the memo key is conf-independent but the cached schema was
         # captured under nanosAsLong=true for ns tables (this branch
         # always sets it before reading), so reuse is self-consistent
-        df = _read_with_schema_memo(spark, path)
-        for c in ns_cols:
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+        df = _rebuild_nanos(_read_with_schema_memo(spark, path), ns_cols)
     finally:
         spark.conf.set(_NANOS_CONF, prev)
     return df

@@ -1,7 +1,29 @@
-"""Versioned parquet state dirs — the shared commit protocol under the
-incremental-state sinks (the streaming gram census,
-:func:`caspr_spark.streaming.gram_census_sink`, and the exact-dedup
-history key table, :func:`caspr_spark.llm.dedup.append_history_keys_state`).
+"""Versioned parquet state dirs — the one append-only table rule under
+every incremental-state family:
+
+- the gram census (:func:`caspr_spark.streaming.gram_census_sink`,
+  merged by :func:`~caspr_spark.llm.dedup.merge_gram_censuses`);
+- the exact-dedup key table
+  (:func:`caspr_spark.llm.dedup.append_history_keys_state`, a
+  first-seen-wins election);
+- the near-dedup signature table
+  (:func:`caspr_spark.llm.dedup.append_history_signatures_state`);
+- the IVF index (:func:`caspr_spark.llm.similarity.append_ivf_state`,
+  stamped with ``centroid_fp``);
+- the PQ code table (:func:`caspr_spark.llm.pq.append_pq_state`,
+  stamped with ``codebook_fp``);
+- and the tombstone side-stream each of them can carry
+  (:func:`append_deletes_state`).
+
+Every family commits through :func:`fold_commit` and reads through
+:func:`read_live_frames` (the live frames, oldest first). The three
+union families (signatures, IVF, PQ) share the rest of the rule here:
+:func:`union_frames` is their merge, :func:`read_masked_state` their
+read (union, then :func:`apply_deletes_state`), :func:`compact_merge`
+their compaction (union, then bake the deletes in), :func:`check_stamp`
+the quantizer guard of fold, search and vacuum, and
+:func:`vacuum_state` the forced compact plus prune. No other module
+reads a state frame.
 
 One state dir holds immutable per-commit subdirs named
 ``{kind}{batch_id}``:
@@ -126,8 +148,11 @@ def probe_newest_nonempty(spark, state_dir: str, exprs: list):
     for streaming sinks), or ``None`` when no live frame has rows.
     The shared guard-probe for state writers that enforce a
     constant-per-table contract (the signature table's
-    family/width, the IVF index's centroid fingerprint): file-backed
-    ``limit(1)`` reads, never a recompute."""
+    family/width, :func:`check_stamp`'s quantizer fingerprints):
+    file-backed reads, never a recompute. Each probed frame costs 2
+    Spark jobs (measured with ``statusTracker``: the read's schema
+    inference plus the ``limit(1)``), so an empty newest delta makes
+    the probe 4."""
     frames = live_frames(state_listing(spark, state_dir))
     for b, k in reversed(frames):
         probe = (spark.read.parquet(state_path(state_dir, b, k))
@@ -174,6 +199,31 @@ def live_frames(listing: list,
     out += [(b, k) for b, k in listing
             if k == "delta" and (base is None or b > base)]
     return out
+
+
+def union_frames(frames: list):
+    """``unionByName`` of ``frames`` in order — the whole merge of the
+    signature, IVF and PQ tables, whose batches carry disjoint ids by
+    contract (a replayed batch id never reaches a merge)."""
+    if not frames:
+        raise ValueError("union_frames needs at least one frame")
+    u = frames[0]
+    for f in frames[1:]:
+        u = u.unionByName(f)
+    return u
+
+
+def read_live_frames(spark, state_dir: str, what: str,
+                     frames: list | None = None) -> list:
+    """The live frames of ``state_dir`` as DataFrames, oldest first
+    (``frames``: an already-decided ``live_frames`` list). Raises
+    ``no committed {what} state`` when there is none."""
+    if frames is None:
+        frames = live_frames(state_listing(spark, state_dir))
+    if not frames:
+        raise RuntimeError(f"no committed {what} state under {state_dir}")
+    return [spark.read.parquet(state_path(state_dir, b, k))
+            for b, k in frames]
 
 
 def claim_writer(spark, state_dir: str, writer_id: str) -> None:
@@ -353,21 +403,16 @@ def fold_commit(spark, state_dir: str, batch_id: int, layout: str,
             "id, so an out-of-order fold would be silently excluded "
             "or rewrite history")
     live = live_frames(listing, before=batch_id)
-
-    def _read(frames):
-        return [spark.read.parquet(state_path(state_dir, b, k))
-                for b, k in frames]
-
-    if layout == "rebuild":
-        frame = (merge_fn(_read(live) + [batch_frame]) if live
-                 else batch_frame)
-        kind = "full"
+    if live and (layout == "rebuild" or force_compact
+                 or sum(k == "delta" for _, k in live) + 1
+                 >= compact_every):
+        frame = merge_fn(read_live_frames(spark, state_dir, "base", live)
+                         + [batch_frame])
+        kind = "full" if layout == "rebuild" else "compact"
+    elif layout == "rebuild":
+        frame, kind = batch_frame, "full"
     elif not live:
         frame, kind = batch_frame, "compact"   # first commit IS full
-    elif (force_compact
-          or sum(k == "delta" for _, k in live) + 1 >= compact_every):
-        frame = merge_fn(_read(live) + [batch_frame])
-        kind = "compact"
     else:
         frame, kind = batch_frame, "delta"
     # overwrite is safe HERE and only here: the dir can only pre-exist
@@ -510,19 +555,6 @@ def deletes_dir(state_dir: str) -> str:
     return f"{state_dir}/{_DELETES_SUBDIR}"
 
 
-def _merge_delete_frames(frames: list):
-    """Tombstone merge: union + distinct. Repeated deletes of the same
-    id are routine (an erasure request re-submitted, a replayed delete
-    day) and the anti-join doesn't care, but compaction deduplicates so
-    the standing delete set is bounded by DISTINCT deleted ids."""
-    if not frames:
-        raise ValueError("_merge_delete_frames needs at least one frame")
-    u = frames[0]
-    for f in frames[1:]:
-        u = u.unionByName(f)
-    return u.distinct()
-
-
 def append_deletes_state(spark, state_dir: str, batch_id: int,
                          ids_frame, compact_every: int = 8) -> None:
     """Fold a tombstone batch (id rows ONLY — one column, named the
@@ -531,7 +563,10 @@ def append_deletes_state(spark, state_dir: str, batch_id: int,
     strictly-increasing ``batch_id`` (its OWN sequence, independent of
     the parent's — the two streams have separate frontiers), replayed
     ids skip, out-of-order ids refuse. The ids take effect immediately
-    on any read that goes through :func:`apply_deletes_state`."""
+    on any read that goes through :func:`apply_deletes_state`.
+    Compaction merges with ``distinct``: repeated deletes of one id
+    are routine (a re-submitted erasure request, a replayed delete
+    day), so the standing delete set stays bounded by DISTINCT ids."""
     if len(ids_frame.columns) != 1:
         raise ValueError(
             f"tombstone frames carry exactly ONE column (the parent "
@@ -539,7 +574,8 @@ def append_deletes_state(spark, state_dir: str, batch_id: int,
             "id before folding so no content rides into the delete "
             "stream")
     fold_commit(spark, deletes_dir(state_dir), batch_id, "delta",
-                compact_every, ids_frame, _merge_delete_frames)
+                compact_every, ids_frame,
+                lambda frames: union_frames(frames).distinct())
 
 
 def read_deletes_state(spark, state_dir: str):
@@ -552,12 +588,8 @@ def read_deletes_state(spark, state_dir: str):
     frames = live_frames(state_listing(spark, deletes_dir(state_dir)))
     if not frames:
         return None
-    dfs = [spark.read.parquet(state_path(deletes_dir(state_dir), b, k))
-           for b, k in frames]
-    u = dfs[0]
-    for f in dfs[1:]:
-        u = u.unionByName(f)
-    return u
+    return union_frames(read_live_frames(spark, deletes_dir(state_dir),
+                                         "tombstone", frames))
 
 
 def apply_deletes_state(spark, state_dir: str, frame,
@@ -585,6 +617,73 @@ def apply_deletes_state(spark, state_dir: str, frame,
         _F.broadcast(deletes.select(_F.col(deletes.columns[0])
                                     .alias(col)).distinct()),
         on=col, how="left_anti")
+
+
+def read_masked_state(spark, state_dir: str, what: str,
+                      id_col: str | None = None):
+    """The current table of a union family (signatures, IVF, PQ): its
+    live frames unioned oldest first, minus tombstoned ``id_col``
+    values (default: the first column, the ingest contract's id). A
+    tombstone-free dir keeps its exact pre-tombstone plan."""
+    merged = union_frames(read_live_frames(spark, state_dir, what))
+    return apply_deletes_state(spark, state_dir, merged,
+                               id_col or merged.columns[0])
+
+
+def compact_merge(spark, state_dir: str, id_col: str):
+    """The ``merge_fn`` of a union family's :func:`fold_commit`: union
+    the live frames, then BAKE IN the current delete set — the compact
+    is the full state, so a tombstoned row simply leaves it, and
+    pruning the superseded frames erases its bytes. Runs only when
+    ``fold_commit`` compacts, so delta folds stay O(batch)."""
+    def merge(frames):
+        return apply_deletes_state(spark, state_dir, union_frames(frames),
+                                   id_col)
+    return merge
+
+
+def check_stamp(spark, state_dir: str, col: str, stamp: str,
+                what: str) -> None:
+    """The quantizer guard of a stamped family's fold, search and
+    vacuum: every frame carries a constant ``col`` (the IVF
+    ``centroid_fp``, the PQ ``codebook_fp``), and a ``stamp`` other
+    than the committed one refuses — cells or codes from two
+    quantizers are incommensurable, and mixing them returns wrong
+    neighbours silently. Probes the newest NON-EMPTY live frame
+    (:func:`probe_newest_nonempty`: an empty delta is probed past, not
+    trusted); an empty or absent state passes."""
+    probe = probe_newest_nonempty(spark, state_dir, [col])
+    if probe is not None and probe[0] != stamp:
+        raise ValueError(
+            f"{what} state under {state_dir} carries fingerprint "
+            f"{col}={probe[0]!r} but this call uses {stamp!r}; frames "
+            "from different quantizers are incommensurable — pass the "
+            "quantizer the state was ingested under, or use a new "
+            "state dir")
+
+
+def vacuum_state(spark, state_dir: str, batch_id: int, id_col: str,
+                 col: str, stamp: str, what: str, keep_last: int,
+                 partition_by: list[str] | None = None) -> list[int]:
+    """Force tombstone resolution NOW (the erasure-deadline path) for
+    a stamped family: after :func:`check_stamp`, commit a FORCED
+    compact — the batch is the newest live frame's ``limit(0)``, an
+    empty, schema-exact frame, so the :func:`compact_merge` bakes the
+    current delete set into a full frame — then prune the superseded
+    frames (``keep_last``), erasing the deleted rows' bytes.
+    ``batch_id`` comes from the SAME sequence as the ingest folds (the
+    vacuum IS a fold). Returns the pruned batch ids."""
+    frames = live_frames(state_listing(spark, state_dir))
+    if not frames:
+        raise RuntimeError(
+            f"no committed {what} state under {state_dir} — nothing to "
+            "vacuum")
+    check_stamp(spark, state_dir, col, stamp, what)
+    newest = read_live_frames(spark, state_dir, what, frames[-1:])[0]
+    fold_commit(spark, state_dir, batch_id, "delta", 2, newest.limit(0),
+                compact_merge(spark, state_dir, id_col),
+                partition_by=partition_by, force_compact=True)
+    return prune_state(spark, state_dir, keep_last)
 
 
 # ---------------------------------------------------------------------------

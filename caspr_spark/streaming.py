@@ -24,11 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import LongType
 
 from caspr_spark.workers import shipped
-
-_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def stream_events(spark: SparkSession, path: str,
@@ -42,7 +39,8 @@ def stream_events(spark: SparkSession, path: str,
     import glob as _glob
     import os as _os
 
-    from caspr_spark.sources import _nanos_timestamp_cols
+    from caspr_spark.sources import (_NANOS_CONF, _nanos_timestamp_cols,
+                                     _rebuild_nanos)
 
     if _os.path.isdir(path):
         base, pattern = path, "*.parquet"
@@ -63,14 +61,7 @@ def stream_events(spark: SparkSession, path: str,
               .option("pathGlobFilter", pattern))
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(base)
-    for c in ns_cols:
-        # pyarrow reports both TIMESTAMP(NANOS) and Spark-written INT96 as
-        # timestamp[ns]; only the former surfaces as a long under the
-        # legacy conf and needs rebuilding
-        if isinstance(df.schema[c].dataType, LongType):
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
+    return _rebuild_nanos(reader.parquet(base), ns_cols)
 
 
 def windowed_event_stats(stream: DataFrame, ts_col: str = "ts",
@@ -408,8 +399,7 @@ def streaming_gram_census(stream: DataFrame, id_col: str = "doc_id",
                  .withColumn("gram_n", F.lit(n).cast("int")))
 
 
-from caspr_spark.state import (check_layout, live_frames, prune_state,
-                               state_listing, state_path)
+from caspr_spark.state import prune_state, read_live_frames
 
 
 def _leased(state_dir: str, fold):
@@ -457,19 +447,6 @@ def _drain(writer, what: str, timeout_sec: int) -> None:
         raise TimeoutError(f"{what} did not drain within {timeout_sec}s")
 
 
-def _census_state_listing(spark, state_dir: str) -> list[tuple[int, str]]:
-    """Committed census state dirs as sorted ``(batch_id, kind)``
-    pairs (see :mod:`caspr_spark.state` for the shared dir protocol:
-    ``v{b}`` full / ``c{b}`` compact / ``d{b}`` delta, ``_SUCCESS``
-    markers, Hadoop FS)."""
-    return state_listing(spark, state_dir)
-
-
-def _census_state_versions(spark, state_dir: str) -> list[int]:
-    """Committed batch ids regardless of kind (the replay-skip set)."""
-    return [b for b, _ in state_listing(spark, state_dir)]
-
-
 def read_gram_census_state(spark, state_dir: str, n: int):
     """Current census state as ONE DataFrame, either layout.
 
@@ -482,11 +459,7 @@ def read_gram_census_state(spark, state_dir: str, n: int):
     sink and a delta sink pointed at the same path)."""
     from caspr_spark.llm.dedup import _check_gram_n, merge_gram_censuses
 
-    frames = live_frames(state_listing(spark, state_dir))
-    if not frames:
-        raise RuntimeError(f"no committed census state under {state_dir}")
-    dfs = [spark.read.parquet(state_path(state_dir, b, k))
-           for b, k in frames]
+    dfs = read_live_frames(spark, state_dir, "census")
     # the single-frame path keeps the in-plan width guard the merge
     # path gets from merge_gram_censuses — a state built at one n must
     # never silently feed a consumer expecting another

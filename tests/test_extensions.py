@@ -117,10 +117,11 @@ class TestIVFState:
         assert np.allclose(got["cosine"].values, want["cosine"].values)
 
     def test_guards_and_ordering(self, embeddings, tmp_path):
-        """Quantizer fingerprint guard (fold AND search, probing past
-        an empty delta), out-of-order refusal."""
+        """Quantizer fingerprint guard (fold, search AND vacuum, probing
+        past an empty delta), out-of-order refusal."""
         from caspr_spark.llm.similarity import (append_ivf_state,
-                                                cosine_topk_ivf_state)
+                                                cosine_topk_ivf_state,
+                                                vacuum_ivf_state)
         spark = embeddings.sparkSession
         cents, other = self._cents(), self._cents(n_cells=8)
         state = str(tmp_path / "ivf")
@@ -135,6 +136,10 @@ class TestIVFState:
         q = embeddings.filter(F.col("vec_id") < 2)
         with pytest.raises(ValueError, match="fingerprint"):
             cosine_topk_ivf_state(spark, state, q, k=3, centroids=other)
+        # the newest live frame is the empty delta: the vacuum's guard
+        # must probe past it, not pass a wrong quantizer
+        with pytest.raises(ValueError, match="fingerprint"):
+            vacuum_ivf_state(spark, state, 3, other)
 
     def test_partitioned_ingest_prunes_and_matches(self, embeddings,
                                                    tmp_path):
@@ -637,8 +642,8 @@ class TestPQState:
         assert got == want
 
     def test_codebook_guard_and_ordering(self, embeddings, tmp_path):
-        """Codebook-fingerprint guard on fold, search, and vacuum;
-        out-of-order refusal."""
+        """Codebook-fingerprint guard on fold, search, and vacuum (also
+        with an empty newest delta); out-of-order refusal."""
         import numpy as np
 
         from caspr_spark.llm.pq import (adc_topk_pq_state,
@@ -657,6 +662,10 @@ class TestPQState:
             adc_topk_pq_state(spark, state, q, other, top_k=3)
         with pytest.raises(ValueError, match="fingerprint"):
             vacuum_pq_state(spark, state, 2, other)
+        append_pq_state(spark, state, 2, embeddings.filter("vec_id < 0"),
+                        cb)                       # empty newest delta
+        with pytest.raises(ValueError, match="fingerprint"):
+            vacuum_pq_state(spark, state, 3, other)
 
     def test_tombstones_and_vacuum(self, embeddings, tmp_path):
         """append_pq_deletes masks immediately, a replayed erasure day

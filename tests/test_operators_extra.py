@@ -466,3 +466,21 @@ class TestEnsureParallelismCache:
              .coalesce(1).write.mode("overwrite").parquet(p)
         c = read_parquet_table(spark, p)
         assert c.columns == ["id", "v"]         # re-inferred, not stale
+
+
+class TestReadParquetTable:
+    def test_spark_written_timestamps_round_trip(self, spark, tmp_path):
+        """Spark writes timestamps as INT96, which pyarrow reports as
+        ``timestamp[ns]`` like a TIMESTAMP(NANOS) column, but Spark
+        reads it as a timestamp: it comes back as written instead of
+        going through the ns-long rebuild."""
+        from caspr_spark.sources import _nanos_timestamp_cols, read_parquet_table
+        p = str(tmp_path / "ts.parquet")
+        df = spark.range(3).selectExpr(
+            "id", "timestamp_micros(1704067200123456 + id) AS ts")
+        df.coalesce(1).write.parquet(p)
+        assert _nanos_timestamp_cols(p) == ["ts"]
+        got = read_parquet_table(spark, p)
+        assert dict(got.dtypes) == {"id": "bigint", "ts": "timestamp"}
+        assert sorted(map(tuple, got.collect())) == \
+            sorted(map(tuple, df.collect()))

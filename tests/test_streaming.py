@@ -503,13 +503,13 @@ class TestGramCensusStateSink:
         committed is a post-crash replay — the fold must be a no-op
         even if the replayed frame differs (the committed state is the
         truth; re-folding would double-count)."""
-        from caspr_spark.streaming import (_census_state_versions,
-                                           gram_census_sink)
+        from caspr_spark.state import state_listing
+        from caspr_spark.streaming import gram_census_sink
         state = str(tmp_path / "state")
         fold = gram_census_sink(state, n=3)
         docs = self._docs(spark)
         fold(docs, 0)
-        assert _census_state_versions(spark, state) == [0]
+        assert [b for b, _ in state_listing(spark, state)] == [0]
         before = self._census_rows(spark.read.parquet(f"{state}/v0"))
         fold(docs.limit(5), 0)              # replay with different data
         assert self._census_rows(
@@ -520,17 +520,17 @@ class TestGramCensusStateSink:
         attempt of the SAME batch (ids never reuse) — it is invisible
         to version listing and overwritten idempotently."""
         import os
-        from caspr_spark.streaming import (_census_state_versions,
-                                           gram_census_sink)
         from caspr_spark.llm.dedup import build_gram_census
+        from caspr_spark.state import state_listing
+        from caspr_spark.streaming import gram_census_sink
         state = str(tmp_path / "state")
         os.makedirs(f"{state}/v0")
         with open(f"{state}/v0/part-junk.parquet", "w") as fh:
             fh.write("partial garbage")     # no _SUCCESS marker
-        assert _census_state_versions(spark, state) == []
+        assert [b for b, _ in state_listing(spark, state)] == []
         docs = self._docs(spark)
         gram_census_sink(state, n=3)(docs, 0)
-        assert _census_state_versions(spark, state) == [0]
+        assert [b for b, _ in state_listing(spark, state)] == [0]
         assert self._census_rows(spark.read.parquet(f"{state}/v0")) == \
             self._census_rows(build_gram_census(docs, n=3))
 
@@ -538,8 +538,8 @@ class TestGramCensusStateSink:
         """The TTL job: old committed versions go, the newest keep_last
         stay, markerless (in-flight/crashed) dirs are untouched."""
         import os
-        from caspr_spark.streaming import (_census_state_versions,
-                                           gram_census_sink,
+        from caspr_spark.state import state_listing
+        from caspr_spark.streaming import (gram_census_sink,
                                            prune_census_state)
         state = str(tmp_path / "state")
         docs = self._docs(spark)
@@ -547,10 +547,10 @@ class TestGramCensusStateSink:
         for b in range(4):
             fold(docs.filter(f"doc_id % 4 = {b}"), b)
         os.makedirs(f"{state}/v9")          # markerless in-flight dir
-        assert _census_state_versions(spark, state) == [0, 1, 2, 3]
+        assert [b for b, _ in state_listing(spark, state)] == [0, 1, 2, 3]
         deleted = prune_census_state(spark, state, keep_last=2)
         assert deleted == [0, 1]
-        assert _census_state_versions(spark, state) == [2, 3]
+        assert [b for b, _ in state_listing(spark, state)] == [2, 3]
         assert os.path.isdir(f"{state}/v9")  # never touched
         assert prune_census_state(spark, state, keep_last=2) == []
         with pytest.raises(ValueError, match="keep_last"):
@@ -562,8 +562,8 @@ class TestGramCensusStateSink:
         one-shot census across a restart; pruning drops only what the
         newest compact supersedes."""
         from caspr_spark.llm.dedup import build_gram_census
-        from caspr_spark.streaming import (_census_state_listing,
-                                           prune_census_state,
+        from caspr_spark.state import state_listing
+        from caspr_spark.streaming import (prune_census_state,
                                            read_gram_census_state,
                                            run_gram_census_to_state)
         docs = self._docs(spark)
@@ -577,7 +577,7 @@ class TestGramCensusStateSink:
                                  compact_every=3)
         # 3 one-file batches: first commit is a compact, then deltas
         # (batch 2 sees only one live delta, below the threshold)
-        assert _census_state_listing(spark, state) == \
+        assert state_listing(spark, state) == \
             [(0, "compact"), (1, "delta"), (2, "delta")]
         docs.filter("doc_id % 2 = 1").repartition(3) \
             .write.mode("append").parquet(src)
@@ -587,14 +587,14 @@ class TestGramCensusStateSink:
                                          layout="delta", compact_every=3)
         # restart resumed at batch 3: two live deltas + the batch hit
         # the threshold -> compact c3; 4 and 5 are deltas again
-        assert _census_state_listing(spark, state) == \
+        assert state_listing(spark, state) == \
             [(0, "compact"), (1, "delta"), (2, "delta"),
              (3, "compact"), (4, "delta"), (5, "delta")]
         want = self._census_rows(build_gram_census(docs, n=3))
         assert self._census_rows(final) == want
         # prune: c3 supersedes c0/d1/d2; live deltas d4/d5 untouched
         assert prune_census_state(spark, state, keep_last=1) == [0, 1, 2]
-        assert _census_state_listing(spark, state) == \
+        assert state_listing(spark, state) == \
             [(3, "compact"), (4, "delta"), (5, "delta")]
         assert self._census_rows(
             read_gram_census_state(spark, state, n=3)) == want
