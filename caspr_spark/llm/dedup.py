@@ -1336,10 +1336,10 @@ def dedup_against_history(batch: DataFrame, history: DataFrame | None,
     Spark, at the same single-digit premium measured for the one-shot
     path. The family must match what a passed ``history_signatures``
     table was built with: tables written by
-    :func:`build_history_signatures` carry a ``hash_family`` column
-    and a mismatch RAISES up front (one 1-row probe of the state
-    table — signatures from different families silently share no band
-    keys, which would report "no duplicates" forever). Tables from
+    :func:`build_history_signatures` carry a stamped ``hash_family``
+    column and a mismatch RAISES up front (a schema read — signatures
+    from different families silently share no band keys, which would
+    report "no duplicates" forever). Tables from
     before this column existed are accepted as ``'fast'`` only.
 
     Exactly one of ``history`` / the mode's state table must be given.
@@ -1437,9 +1437,15 @@ def build_history_keys(history: DataFrame, id_col: str = "doc_id",
     one 16-byte key per distinct normalized text (smallest id wins —
     the same election as :func:`exact_dedup`), null-text rows dropped.
     Uses the shared :func:`_content_key` definition, so incremental
-    results stay identical to full-corpus ``exact_dedup`` results."""
+    results stay identical to full-corpus ``exact_dedup`` results.
+    ``content_key`` is stamped with ``normalize``
+    (:func:`caspr_spark.state.stamp`): the two settings key the same
+    text differently, so a versioned key table refuses a fold under
+    the other one."""
+    from caspr_spark.state import stamp
+
     key = _content_key(text_col, normalize)
-    return (history.select(key.alias("content_key"),
+    return (history.select(stamp(key, "content_key", normalize=normalize),
                            F.col(id_col).alias("history_id"))
             .filter(F.col("content_key").isNotNull())
             .groupBy("content_key")
@@ -1474,42 +1480,33 @@ def _check_signature_family(history_signatures: DataFrame,
     mismatch doesn't error downstream — it silently reports zero
     duplicates forever. Tables written by
     :func:`build_history_signatures` carry a constant ``hash_family``
-    column; one bounded 1-row probe reads it (same probe discipline as
-    the gram-table ``gram_n`` check, but the family can't ride in-plan
-    — band keys are already diverged by the time rows meet). The probe
-    is ``limit(1)`` over the bare ``hash_family`` projection — minimal
-    for a file-backed table; pass a PERSISTED/loaded table rather than
-    a computed plan, or producing that one probe row re-runs the
-    plan's whole shingle+minhash pipeline. Frames still carrying
-    :func:`build_history_signatures`' in-process provenance attribute
-    are checked WITHOUT a probe (one fewer scheduler round-trip per
-    guard — material for per-micro-batch callers). Tables without the
-    column (pre-round-12 / external writers) are accepted as
+    column stamped with the family (:func:`caspr_spark.state.stamp`),
+    which the guard reads from the schema — no job (the family can't
+    ride in-plan: band keys are already diverged by the time rows
+    meet). A table with the column but no stamp (written by an
+    external writer, say) pays one bounded ``limit(1)`` probe of the
+    bare ``hash_family`` projection — pass a PERSISTED/loaded table
+    rather than a computed plan, or producing that one probe row
+    re-runs the plan's whole shingle+minhash pipeline. Tables without
+    the column (pre-round-12 / external writers) are accepted as
     ``'fast'`` only."""
-    known = getattr(history_signatures, "_caspr_hash_family", None)
-    if known is not None:
-        if known != hash_family:
-            raise ValueError(
-                f"history_signatures was built with "
-                f"hash_family={known!r} but this call requests "
-                f"{hash_family!r}; signatures from different families "
-                "share no band keys (every batch would silently match "
-                "nothing) — rebuild the state table or pass the "
-                "matching family")
-        return
-    if "hash_family" in history_signatures.columns:
+    from caspr_spark.state import frame_stamp
+
+    has_col = "hash_family" in history_signatures.columns
+    stored = frame_stamp(history_signatures).get("hash_family")
+    if stored is None and has_col:
         probe = (history_signatures.select("hash_family")
                  .limit(1).collect())
         stored = probe[0][0] if probe else None
-        if stored is not None and stored != hash_family:
-            raise ValueError(
-                f"history_signatures was built with "
-                f"hash_family={stored!r} but this call requests "
-                f"{hash_family!r}; signatures from different families "
-                "share no band keys (every batch would silently match "
-                "nothing) — rebuild the state table or pass the "
-                "matching family")
-    elif hash_family != "fast":
+    if stored is not None and stored != hash_family:
+        raise ValueError(
+            f"history_signatures was built with "
+            f"hash_family={stored!r} but this call requests "
+            f"{hash_family!r}; signatures from different families "
+            "share no band keys (every batch would silently match "
+            "nothing) — rebuild the state table or pass the "
+            "matching family")
+    if not has_col and hash_family != "fast":
         raise ValueError(
             "history_signatures carries no hash_family column (built "
             "before the portable family existed, or by an external "
@@ -1636,12 +1633,13 @@ def build_history_signatures(history: DataFrame, id_col: str = "doc_id",
     re-shingling it. ``num_hashes``/``shingle_size`` are baked into the
     stored values — reload with the same settings. ``hash_family``
     (``'fast'`` xxhash64 / ``'portable'`` md5-60-bit, see
-    :func:`_base_hash_pair`) rides as a constant column so
-    :func:`dedup_against_history` can refuse a mismatched batch up
-    front instead of silently matching nothing. Shingle arrays are
-    roughly text-sized; at corpus scale the table is comparable to the
-    corpus itself but is written ONCE and only the candidate-pair rows
-    are ever joined back.
+    :func:`_base_hash_pair`) rides as a constant column, stamped with
+    the family and ``num_hashes`` (:func:`_family_col`), so
+    :func:`dedup_against_history` and the versioned fold can refuse a
+    mismatched batch up front instead of silently matching nothing.
+    Shingle arrays are roughly text-sized; at corpus scale the table
+    is comparable to the corpus itself but is written ONCE and only the
+    candidate-pair rows are ever joined back.
     """
     if hash_family not in ("fast", "portable"):
         raise ValueError(f"hash_family must be 'fast' or 'portable', "
@@ -1655,14 +1653,20 @@ def build_history_signatures(history: DataFrame, id_col: str = "doc_id",
         .persist())
     sigs = _signatures_from_shingles(sh, "history_id", num_hashes,
                                      hash_family=hash_family)
-    out = (sh.select("history_id", F.col("__shingles").alias("shingles"))
-           .join(sigs, on="history_id")
-           .withColumn("hash_family", F.lit(hash_family)))
-    # in-process provenance: callers holding THIS object (not a reload)
-    # let _check_signature_family skip its bounded probe — worth one
-    # scheduler round-trip per guard on latency-bound micro-batches
-    out._caspr_hash_family = hash_family
-    return out
+    return (sh.select("history_id", F.col("__shingles").alias("shingles"))
+            .join(sigs, on="history_id")
+            .withColumn("hash_family",
+                        _family_col(hash_family, num_hashes)))
+
+
+def _family_col(hash_family: str, num_hashes: int):
+    """The signature table's constant ``hash_family`` column, stamped
+    with the family and the width (:func:`caspr_spark.state.stamp`):
+    guards read both from a frame's schema, never its rows."""
+    from caspr_spark.state import stamp
+
+    return stamp(F.lit(hash_family), "hash_family",
+                 hash_family=hash_family, num_hashes=num_hashes)
 
 
 def append_history_signatures(signatures: DataFrame, accepted: DataFrame,
@@ -1692,47 +1696,6 @@ def append_history_signatures(signatures: DataFrame, accepted: DataFrame,
     return signatures.unionByName(new)
 
 
-def check_signature_state(spark, state_dir: str, hash_family: str,
-                          num_hashes: int) -> None:
-    """Refuse a family OR width mismatch against the COMMITTED
-    signature state under ``state_dir`` — the shared guard behind both
-    the fold side (:func:`append_history_signatures_state`) and the
-    streaming sink's PRE-WRITE check
-    (:func:`caspr_spark.streaming.dedup_corpus_sink` runs it before a
-    batch's output dir is written, so a mismatched pre-existing state
-    can never commit an under-deduped output that a replay then folds
-    permanently). One bounded probe of the newest NON-EMPTY live frame
-    (empty deltas are probed past, not trusted — a batch where every
-    doc deduped away commits a zero-row delta, routine for the
-    streaming sink); an empty/absent state passes (nothing committed
-    to contradict). Mismatched families share no band keys and
-    mismatched widths band differently — either silently part-matches
-    forever, so both refuse loudly."""
-    from caspr_spark.state import probe_newest_nonempty
-
-    probe = probe_newest_nonempty(
-        spark, state_dir,
-        [F.col("hash_family"), F.size("minhash").alias("__nh")])
-    if probe is None:
-        return
-    stored_family, stored_nh = probe[0], probe[1]
-    if stored_family != hash_family:
-        raise ValueError(
-            f"signature state under {state_dir} was built with "
-            f"hash_family={stored_family!r} but this fold uses "
-            f"{hash_family!r}; mixed-family frames share no "
-            "band keys (batches would silently part-match "
-            "forever) — use the stored family or a new state "
-            "dir")
-    if stored_nh != num_hashes:
-        raise ValueError(
-            f"signature state under {state_dir} holds "
-            f"{stored_nh}-hash signatures but this fold uses "
-            f"num_hashes={num_hashes}; band keys from different "
-            "widths never match — use the stored width or a "
-            "new state dir")
-
-
 def append_history_signatures_state(spark, state_dir: str, batch_id: int,
                                     accepted: DataFrame,
                                     id_col: str = "doc_id",
@@ -1741,8 +1704,8 @@ def append_history_signatures_state(spark, state_dir: str, batch_id: int,
                                     shingle_size: int = 3,
                                     hash_family: str = "fast",
                                     compact_every: int = 8,
-                                    signatures: DataFrame | None = None,
-                                    check_state: bool = True) -> None:
+                                    signatures: DataFrame | None = None
+                                    ) -> None:
     """Fold an ACCEPTED crawl batch's signatures into a VERSIONED
     signature-table state dir — the exactly-once form of
     :func:`append_history_signatures`, closing the near-mode half of
@@ -1763,13 +1726,14 @@ def append_history_signatures_state(spark, state_dir: str, batch_id: int,
     number) — that is what makes re-running a day idempotent.
 
     The ``hash_family`` and ``num_hashes`` are enforced against the
-    COMMITTED state: one bounded probe of a live frame (file-backed
-    parquet, minimal projection) refuses a fold whose family or
-    signature width differs from what the dir holds — a mismatched
-    family would poison the table with rows that silently share no
-    band keys. ``shingle_size`` stays the caller's contract exactly as
-    on :func:`build_history_signatures` (it is not recoverable from
-    the stored values). Prune superseded frames with
+    COMMITTED state: every frame stamps both on its ``hash_family``
+    column (:func:`_family_col`), and the commit's schema read of the
+    newest frame (:func:`caspr_spark.state.fold_commit`) refuses a
+    fold whose family or signature width differs from what the dir
+    holds — a mismatched family would poison the table with rows that
+    silently share no band keys. ``shingle_size`` stays the caller's
+    contract exactly as on :func:`build_history_signatures` (it is not
+    recoverable from the stored values). Prune superseded frames with
     :func:`caspr_spark.state.prune_state`. The near-mode daily loop::
 
         sigs = read_history_signatures_state(spark, state_dir)
@@ -1782,17 +1746,6 @@ def append_history_signatures_state(spark, state_dir: str, batch_id: int,
     if hash_family not in ("fast", "portable"):
         raise ValueError(f"hash_family must be 'fast' or 'portable', "
                          f"got {hash_family!r}")
-    if check_state:
-        # ``check_state=False`` is for a caller that ALREADY verified
-        # family+width against this dir (the streaming sink runs
-        # check_signature_state pre-write in the same fold, or in an
-        # earlier fold under the stream's writer lease) — the probe
-        # costs 2 Spark jobs per fold (schema inference plus limit(1)),
-        # pure latency on a micro-batch. Batch callers keep the
-        # default: the guard is what makes a mismatched pre-existing
-        # state refuse loudly.
-        check_signature_state(spark, state_dir, hash_family, num_hashes)
-
     if signatures is not None:
         # a caller that already built this batch's signatures (the
         # streaming sink computes them once per micro-batch for the
@@ -1809,9 +1762,9 @@ def append_history_signatures_state(spark, state_dir: str, batch_id: int,
         # In-plan width tripwire (zero extra jobs): a frame built with a
         # different num_hashes would commit signatures whose band keys
         # never match future batches — silent under-dedup forever. The
-        # family guard above can't see width (it probes the COMMITTED
-        # state, which may be empty on the first fold), so every folded
-        # row asserts its own width at execution; valid rows pass
+        # commit's stamp check compares the DECLARED width with the
+        # committed state (there is none on the first fold), so every
+        # folded row asserts its own width at execution; valid rows pass
         # through untouched, so committed bytes are unchanged. Note the
         # row-set contract stays the caller's: an accepted id MISSING
         # from the frame is silently absent from the fold (the semi-join
@@ -1831,7 +1784,8 @@ def append_history_signatures_state(spark, state_dir: str, batch_id: int,
                     .join(accepted.select(id_col), on=id_col,
                           how="left_semi")
                     .select(F.col(id_col).alias("history_id"), "shingles",
-                            guarded.alias("minhash"), "hash_family"))
+                            guarded.alias("minhash"),
+                            _family_col(hash_family, num_hashes)))
     else:
         new_rows = build_history_signatures(accepted, id_col, text_col,
                                             num_hashes, shingle_size,
@@ -1848,9 +1802,9 @@ def read_history_signatures_state(spark, state_dir: str) -> DataFrame:
     with every younger delta, minus FORGOTTEN documents' rows
     (:func:`forget_documents_state`) — feed straight to
     ``dedup_against_history(..., history_signatures=...)``. The read
-    is file-backed (:func:`caspr_spark.state.read_masked_state`), so
-    the family guard's probe reads raw frames, never a recompute, and
-    never pays the tombstone anti-join."""
+    is file-backed (:func:`caspr_spark.state.read_masked_state`) and
+    its schema carries the family stamp, so the family guard runs no
+    job."""
     from caspr_spark.state import read_masked_state
 
     return read_masked_state(spark, state_dir, "signature", "history_id")

@@ -195,33 +195,26 @@ def _codebook_fingerprint(codebooks) -> str:
 def append_pq_state(spark, state_dir: str, batch_id: int,
                     batch: DataFrame, codebooks,
                     id_col: str = "vec_id", vec_col: str = "embedding",
-                    compact_every: int = 8,
-                    check_state: bool = True) -> None:
+                    compact_every: int = 8) -> None:
     """Fold a batch of NEW embeddings into a VERSIONED PQ code table:
     encode the batch's vectors under the PINNED ``codebooks``
     (:func:`pq_encode` — the deterministic per-subspace argmin) and
     commit ``(id, pq_codes)`` as a delta. ``batch_id`` is
     caller-supplied and strictly increasing (the day number); replayed
     ids skip, out-of-order ids refuse, and a codebook-fingerprint
-    guard (a probe of the newest non-empty frame,
-    :func:`caspr_spark.state.check_stamp`) refuses a fold under
-    different codebooks. Tombstones folded by
+    guard (the ``codebook_fp`` stamp,
+    :func:`caspr_spark.state.stamp`, compared on commit) refuses a
+    fold under different codebooks. Tombstones folded by
     :func:`append_pq_deletes` are baked in at every compaction;
     :func:`vacuum_pq_state` forces that off-cadence. Search with
     :func:`adc_topk_pq_state`; prune superseded frames with
     :func:`caspr_spark.state.prune_state`."""
-    from caspr_spark.state import check_stamp, compact_merge, fold_commit
+    from caspr_spark.state import compact_merge, fold_commit, stamp
 
     fp = _codebook_fingerprint(codebooks)
-    if check_state:
-        # ``check_state=False``: caller already verified the codebook
-        # fingerprint against this dir (the streaming sink probes on its
-        # first fold under the stream's writer lease; later frames were
-        # committed by that writer under the same pinned codebooks).
-        # Batch callers keep the default probe.
-        check_stamp(spark, state_dir, "codebook_fp", fp, "PQ")
     frame = pq_encode(batch, codebooks, vec_col=vec_col) \
-        .select(F.col(id_col), "pq_codes", F.lit(fp).alias("codebook_fp"))
+        .select(F.col(id_col), "pq_codes",
+                stamp(F.lit(fp), "codebook_fp", codebook_fp=fp))
     fold_commit(spark, state_dir, batch_id, "delta", compact_every,
                 frame, compact_merge(spark, state_dir, id_col))
 
@@ -253,8 +246,9 @@ def vacuum_pq_state(spark, state_dir: str, batch_id: int, codebooks,
     fold). Returns the pruned batch ids."""
     from caspr_spark.state import vacuum_state
 
-    return vacuum_state(spark, state_dir, batch_id, id_col, "codebook_fp",
-                        _codebook_fingerprint(codebooks), "PQ", keep_last)
+    return vacuum_state(spark, state_dir, batch_id, id_col,
+                        {"codebook_fp": _codebook_fingerprint(codebooks)},
+                        "PQ", keep_last)
 
 
 def read_pq_state(spark, state_dir: str) -> DataFrame:
@@ -272,19 +266,20 @@ def read_pq_state(spark, state_dir: str) -> DataFrame:
 def adc_topk_pq_state(spark, state_dir: str, query, codebooks,
                       top_k: int = 10, id_col: str = "vec_id",
                       dist_col: str = "adc_distance") -> DataFrame:
-    """ADC top-k over the VERSIONED code table: verify the codebook
-    fingerprint (:func:`caspr_spark.state.check_stamp` — searching
-    under the wrong codebooks returns wrong neighbors silently, so
-    refuse loudly),
-    read the state (tombstones masked), then the shared
+    """ADC top-k over the VERSIONED code table: read the state
+    (tombstones masked), verify the codebook fingerprint its schema
+    carries (:func:`caspr_spark.state.check_stamp` — searching under
+    the wrong codebooks returns wrong neighbors silently, so refuse
+    loudly), then the shared
     :func:`pq_search` scoring — byte-identical arithmetic to a
     one-shot ``pq_encode`` + ``pq_search`` over the union of the
     ingested batches minus deletions (the certified invariant:
     ``simsearch_pq_state`` in ``contract.streaming``)."""
     from caspr_spark.state import check_stamp
 
-    check_stamp(spark, state_dir, "codebook_fp",
-                _codebook_fingerprint(codebooks), "PQ")
-    codes = read_pq_state(spark, state_dir).drop("codebook_fp")
+    codes = read_pq_state(spark, state_dir)
+    check_stamp(state_dir, codes,
+                {"codebook_fp": _codebook_fingerprint(codebooks)}, "PQ")
+    codes = codes.drop("codebook_fp")
     return pq_search(codes, query, codebooks, id_col=id_col,
                      top_k=top_k, dist_col=dist_col)

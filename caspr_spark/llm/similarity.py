@@ -566,8 +566,7 @@ def append_ivf_state(spark, state_dir: str, batch_id: int,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      compact_every: int = 8,
                      partition_by_cell: bool = False,
-                     assign: str = "expr",
-                     check_state: bool = True) -> None:
+                     assign: str = "expr") -> None:
     """Fold a batch of NEW embeddings into a VERSIONED IVF index state
     dir — continuous embedding ingest, the similarity-family member of
     the exactly-once state story (the key table and signature table
@@ -586,10 +585,11 @@ def append_ivf_state(spark, state_dir: str, batch_id: int,
     strictly increasing across ingests (the day number).
 
     The quantizer is enforced against the COMMITTED state: every frame
-    carries a constant ``centroid_fp`` column and a bounded probe
-    (:func:`caspr_spark.state.check_stamp`: newest non-empty live
-    frame — empty deltas are skipped, not trusted) refuses a fold under different centroids, which would
-    poison the index with cells from two quantizers. Frames are
+    carries a constant ``centroid_fp`` column stamped with the same
+    fingerprint (:func:`caspr_spark.state.stamp`), and the commit's
+    schema read of the newest frame refuses a fold under different
+    centroids, which would poison the index with cells from two
+    quantizers (:func:`caspr_spark.state.fold_commit`). Frames are
     repartitioned by ``ivf_cell`` before the write so each frame's
     parquet clusters by cell; ``partition_by_cell=True`` additionally
     writes each frame HIVE-PARTITIONED on ``ivf_cell``, so a probe
@@ -618,29 +618,19 @@ def append_ivf_state(spark, state_dir: str, batch_id: int,
     vectors and a following ``prune_state`` erases their bytes from
     the superseded frames (the right-to-erasure path;
     :func:`vacuum_ivf_state` forces it off-cadence)."""
-    from caspr_spark.state import check_stamp, compact_merge, fold_commit
+    from caspr_spark.state import compact_merge, fold_commit, stamp
 
-    fp = _centroid_fingerprint(centroids)
-    if check_state:
-        # ``check_state=False`` is for a caller that ALREADY verified
-        # the quantizer fingerprint against this dir (the streaming
-        # sink probes on its first fold under the stream's writer
-        # lease; every later frame was committed by that writer under
-        # the same pinned centroids), so the per-fold probe's 2 Spark
-        # jobs (schema inference plus limit(1)) are pure micro-batch
-        # latency there.
-        # Batch callers keep the default: the probe is what makes a
-        # mismatched pre-existing state refuse loudly.
-        check_stamp(spark, state_dir, "centroid_fp", fp, "IVF")
     if assign not in ("expr", "arrow"):
         raise ValueError(f"assign must be 'expr' or 'arrow', "
                          f"got {assign!r}")
     elect = (nearest_centroid if assign == "expr"
              else nearest_centroid_arrow)
+    fp = _centroid_fingerprint(centroids)
     frame = batch.select(
         F.col(id_col), F.col(vec_col),
         elect(vec_col, centroids).alias("ivf_cell"),
-        F.lit(fp).alias("centroid_fp")).repartition("ivf_cell")
+        stamp(F.lit(fp), "centroid_fp", centroid_fp=fp)
+    ).repartition("ivf_cell")
     fold_commit(spark, state_dir, batch_id, "delta", compact_every,
                 frame, compact_merge(spark, state_dir, id_col),
                 partition_by=["ivf_cell"] if partition_by_cell else None)
@@ -697,8 +687,9 @@ def vacuum_ivf_state(spark, state_dir: str, batch_id: int,
     not linger as restore points that still hold the vectors."""
     from caspr_spark.state import vacuum_state
 
-    return vacuum_state(spark, state_dir, batch_id, id_col, "centroid_fp",
-                        _centroid_fingerprint(centroids), "IVF", keep_last,
+    return vacuum_state(spark, state_dir, batch_id, id_col,
+                        {"centroid_fp": _centroid_fingerprint(centroids)},
+                        "IVF", keep_last,
                         ["ivf_cell"] if partition_by_cell else None)
 
 
@@ -735,9 +726,8 @@ def cosine_topk_ivf_state(spark, state_dir: str, queries: DataFrame,
     ``cosine_topk_ivf(corpus, ..., centroids=...)`` index over the
     union of the ingested batches MINUS any tombstoned ids
     (:func:`append_ivf_deletes`) — the certified invariant. The
-    fingerprint probe reads a raw frame directly
-    (:func:`caspr_spark.state.check_stamp`), so it never pays the
-    tombstone anti-join the masked read carries.
+    fingerprint check reads the stamp from the masked read's schema
+    (:func:`caspr_spark.state.check_stamp`): no job beyond the read.
 
     ``static_prune=True`` (default) pushes the probed cell set into
     the frame scans as a literal filter instead of relying on the
@@ -747,9 +737,9 @@ def cosine_topk_ivf_state(spark, state_dir: str, queries: DataFrame,
     broadcast-join plan (no driver-side probe materialization)."""
     from caspr_spark.state import check_stamp
 
-    check_stamp(spark, state_dir, "centroid_fp",
-                _centroid_fingerprint(centroids), "IVF")
     indexed = read_ivf_state(spark, state_dir)
+    check_stamp(state_dir, indexed,
+                {"centroid_fp": _centroid_fingerprint(centroids)}, "IVF")
     return _ivf_probe_topk(indexed.drop("centroid_fp"), queries, k,
                            n_probe, centroids, id_col, vec_col,
                            query_id_col, static_prune=static_prune)

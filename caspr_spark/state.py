@@ -5,9 +5,10 @@ every incremental-state family:
   merged by :func:`~caspr_spark.llm.dedup.merge_gram_censuses`);
 - the exact-dedup key table
   (:func:`caspr_spark.llm.dedup.append_history_keys_state`, a
-  first-seen-wins election);
+  first-seen-wins election, stamped on ``content_key``);
 - the near-dedup signature table
-  (:func:`caspr_spark.llm.dedup.append_history_signatures_state`);
+  (:func:`caspr_spark.llm.dedup.append_history_signatures_state`,
+  stamped on ``hash_family``);
 - the IVF index (:func:`caspr_spark.llm.similarity.append_ivf_state`,
   stamped with ``centroid_fp``);
 - the PQ code table (:func:`caspr_spark.llm.pq.append_pq_state`,
@@ -20,10 +21,20 @@ Every family commits through :func:`fold_commit` and reads through
 union families (signatures, IVF, PQ) share the rest of the rule here:
 :func:`union_frames` is their merge, :func:`read_masked_state` their
 read (union, then :func:`apply_deletes_state`), :func:`compact_merge`
-their compaction (union, then bake the deletes in), :func:`check_stamp`
-the quantizer guard of fold, search and vacuum, and
+their compaction (union, then bake the deletes in) and
 :func:`vacuum_state` the forced compact plus prune. No other module
 reads a state frame.
+
+A family whose table holds one constant per state dir (the IVF
+quantizer, the PQ codebooks, the signature table's hash family and
+width, the key table's text normalization) STAMPS it: one column of
+every frame carries the constant in its Spark column metadata
+(:func:`stamp`), which rides through parquet writes (empty frames
+included), unions, joins, selects and renames. Guards read it from a
+frame's schema (:func:`frame_stamp`, :func:`check_stamp`), never from
+its rows: :func:`fold_commit` compares the batch's stamp with the
+newest committed frame's on every fold, and search and vacuum check
+the frame they already read.
 
 One state dir holds immutable per-commit subdirs named
 ``{kind}{batch_id}``:
@@ -60,10 +71,11 @@ Commit rules shared by every writer:
   it with the stream's query id, which Structured Streaming keeps in
   the checkpoint: a restart from the same checkpoint re-claims, a
   stream under another checkpoint refuses. Direct (non-stream) folds
-  take no lease and run every state probe instead; and since a leased
-  stream skips those probes, :func:`fold_commit` refuses any new
-  commit onto a claimed dir from a writer other than its lease holder
-  (direct callers included).
+  take no lease; since they number batches outside the stream's
+  checkpoint, :func:`fold_commit` refuses any new commit onto a
+  claimed dir from a writer other than its lease holder (direct
+  callers included). The lease guards batch ids only: every fold,
+  leased or not, checks the state's stamp.
 
 Everything goes through the Hadoop FileSystem API, not ``os`` — state
 dirs are ``hdfs://``/``s3a://`` in production, local only in tests.
@@ -139,27 +151,6 @@ def output_committed(spark, out_path: str) -> bool:
     jvm, fs, jpath = _fs(spark, out_path)
     return bool(fs.exists(
         jvm.org.apache.hadoop.fs.Path(jpath, "_SUCCESS")))
-
-
-def probe_newest_nonempty(spark, state_dir: str, exprs: list):
-    """One row of ``exprs`` from the newest NON-EMPTY live frame of a
-    versioned state dir, probing PAST empty frames (a batch where
-    every row deduped/filtered away commits a zero-row delta — routine
-    for streaming sinks), or ``None`` when no live frame has rows.
-    The shared guard-probe for state writers that enforce a
-    constant-per-table contract (the signature table's
-    family/width, :func:`check_stamp`'s quantizer fingerprints):
-    file-backed reads, never a recompute. Each probed frame costs 2
-    Spark jobs (measured with ``statusTracker``: the read's schema
-    inference plus the ``limit(1)``), so an empty newest delta makes
-    the probe 4."""
-    frames = live_frames(state_listing(spark, state_dir))
-    for b, k in reversed(frames):
-        probe = (spark.read.parquet(state_path(state_dir, b, k))
-                 .select(*exprs).limit(1).collect())
-        if probe:
-            return probe[0]
-    return None
 
 
 def check_layout(listing: list, layout: str, state_dir: str) -> None:
@@ -335,7 +326,8 @@ def fold_commit(spark, state_dir: str, batch_id: int, layout: str,
     excluded (below a compact) or rewrite history, never something to
     do quietly. A new commit onto a dir whose ``_writer`` lease names
     another writer than the calling thread's stream (a direct caller
-    has none) raises too, before anything is written.
+    has none) raises too, before anything is written: its batch ids
+    would interleave with the lease holder's.
 
     ``partition_by`` writes each frame hive-partitioned on the given
     columns, so readers that filter or join on them get partition
@@ -357,14 +349,16 @@ def fold_commit(spark, state_dir: str, batch_id: int, layout: str,
 
     SCHEMA is part of the one-dir-one-table contract: a batch frame
     whose column set or types drift from the committed state refuses
-    BEFORE any bytes are written (the same pre-write discipline as
-    the signature family/width guards) — a drifted delta would commit
+    BEFORE any bytes are written — a drifted delta would commit
     fine and then poison every later read or compaction with a
     union error (or, worse, a silent numeric widening). The check is
     one parquet-footer schema read of the newest committed frame;
     column ORDER is free (hive-partitioned frames read their
     partition column last), evolution means a new state dir or an
-    explicit migration rewrite."""
+    explicit migration rewrite. The same read carries the state's
+    STAMP (:func:`stamp`): a batch frame stamped otherwise refuses
+    (:func:`check_stamp`), replays included, so no family probes its
+    state's rows before a fold."""
     if layout not in ("rebuild", "delta"):
         raise ValueError(f"layout must be 'rebuild' or 'delta', "
                          f"got {layout!r}")
@@ -373,10 +367,9 @@ def fold_commit(spark, state_dir: str, batch_id: int, layout: str,
     listing = state_listing(spark, state_dir)
     check_layout(listing, layout, state_dir)
     if listing:
-        newest_b, newest_k = listing[-1]
+        newest = spark.read.parquet(state_path(state_dir, *listing[-1]))
         stored = {(f.name, f.dataType.simpleString())
-                  for f in spark.read.parquet(
-                      state_path(state_dir, newest_b, newest_k)).schema}
+                  for f in newest.schema}
         batch = {(f.name, f.dataType.simpleString())
                  for f in batch_frame.schema}
         if stored != batch:
@@ -387,11 +380,13 @@ def fold_commit(spark, state_dir: str, batch_id: int, layout: str,
                 "drifted delta would poison later reads/compactions; "
                 "migrate to a new state dir (or rewrite all frames) "
                 "to evolve the schema")
+        check_stamp(state_dir, newest, frame_stamp(batch_frame),
+                    "committed")
     if batch_id in {b for b, _ in listing}:
         return                           # committed replay — skip
-    # a new commit onto a claimed dir must come from the lease holder:
-    # the holder's stream skips the state probes that would catch an
-    # incommensurable frame (direct callers have no query id)
+    # a new commit onto a claimed dir must come from the lease holder
+    # (direct callers have no query id): another writer numbers its
+    # batches outside the holder's checkpoint
     writer_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
     stored = _lease_holder(spark, state_dir)
     if stored is not None and stored != writer_id:
@@ -642,44 +637,80 @@ def compact_merge(spark, state_dir: str, id_col: str):
     return merge
 
 
-def check_stamp(spark, state_dir: str, col: str, stamp: str,
-                what: str) -> None:
-    """The quantizer guard of a stamped family's fold, search and
-    vacuum: every frame carries a constant ``col`` (the IVF
-    ``centroid_fp``, the PQ ``codebook_fp``), and a ``stamp`` other
-    than the committed one refuses — cells or codes from two
-    quantizers are incommensurable, and mixing them returns wrong
-    neighbours silently. Probes the newest NON-EMPTY live frame
-    (:func:`probe_newest_nonempty`: an empty delta is probed past, not
-    trusted); an empty or absent state passes."""
-    probe = probe_newest_nonempty(spark, state_dir, [col])
-    if probe is not None and probe[0] != stamp:
+_STAMP = "caspr_stamp"
+
+
+def stamp(column, name: str, **values):
+    """``column`` named ``name``, carrying ``values`` as its frame's
+    STAMP in the Spark column metadata: the constant a stamped family
+    holds per state dir. Every frame a fold commits carries it, so the
+    newest frame's schema states what the whole dir was written
+    under."""
+    return column.alias(name, metadata={_STAMP: values})
+
+
+def frame_stamp(frame) -> dict:
+    """The stamp ``frame``'s schema carries, ``{}`` when unstamped —
+    a schema read, never a job over rows."""
+    out = {}
+    for f in frame.schema.fields:
+        out.update(f.metadata.get(_STAMP, {}))
+    return out
+
+
+def _fmt(stamp: dict) -> str:
+    """A stamp as ``key=value`` pairs; a width reads as ``N-hash``."""
+    text = ", ".join(f"{k}={v!r}" for k, v in sorted(stamp.items()))
+    if "num_hashes" in stamp:
+        text += f" ({stamp['num_hashes']}-hash signatures)"
+    return text or "no stamp"
+
+
+def check_stamp(state_dir: str, frame, want: dict, what: str) -> None:
+    """The one guard of every stamped family's fold, search and
+    vacuum: refuse unless ``frame`` — a read of ``state_dir``'s
+    committed frames — is stamped ``want``. Cells or codes from two
+    quantizers, signatures from two hash families or widths, content
+    keys under two normalizations never match each other, and mixing
+    them loses neighbours or duplicates silently. A frame without a
+    stamp under a stamped family is a schema drift."""
+    got = frame_stamp(frame)
+    if got == want:
+        return
+    if not got:
         raise ValueError(
-            f"{what} state under {state_dir} carries fingerprint "
-            f"{col}={probe[0]!r} but this call uses {stamp!r}; frames "
-            "from different quantizers are incommensurable — pass the "
-            "quantizer the state was ingested under, or use a new "
-            "state dir")
+            f"{what} state under {state_dir} holds frames without a "
+            f"stamp but this call stamps {_fmt(want)} — one state dir, "
+            "one schema: migrate by folding the table's rows into a new "
+            "state dir through its append_*_state fold, which stamps "
+            "every frame")
+    raise ValueError(
+        f"{what} state under {state_dir} is stamped {_fmt(got)} but "
+        f"this call uses {_fmt(want)}; frames under another quantizer "
+        "fingerprint, hash family, signature width or key normalization "
+        "are incommensurable — pass the settings the state was written "
+        "under, or use a new state dir")
 
 
 def vacuum_state(spark, state_dir: str, batch_id: int, id_col: str,
-                 col: str, stamp: str, what: str, keep_last: int,
+                 want: dict, what: str, keep_last: int,
                  partition_by: list[str] | None = None) -> list[int]:
     """Force tombstone resolution NOW (the erasure-deadline path) for
-    a stamped family: after :func:`check_stamp`, commit a FORCED
-    compact — the batch is the newest live frame's ``limit(0)``, an
-    empty, schema-exact frame, so the :func:`compact_merge` bakes the
-    current delete set into a full frame — then prune the superseded
-    frames (``keep_last``), erasing the deleted rows' bytes.
-    ``batch_id`` comes from the SAME sequence as the ingest folds (the
-    vacuum IS a fold). Returns the pruned batch ids."""
+    a stamped family: after :func:`check_stamp` of the newest live
+    frame against ``want``, commit a FORCED compact — the batch is that
+    frame's ``limit(0)``, an empty, schema-exact frame, so the
+    :func:`compact_merge` bakes the current delete set into a full
+    frame — then prune the superseded frames (``keep_last``), erasing
+    the deleted rows' bytes. ``batch_id`` comes from the SAME sequence
+    as the ingest folds (the vacuum IS a fold). Returns the pruned
+    batch ids."""
     frames = live_frames(state_listing(spark, state_dir))
     if not frames:
         raise RuntimeError(
             f"no committed {what} state under {state_dir} — nothing to "
             "vacuum")
-    check_stamp(spark, state_dir, col, stamp, what)
     newest = read_live_frames(spark, state_dir, what, frames[-1:])[0]
+    check_stamp(state_dir, newest, want, what)
     fold_commit(spark, state_dir, batch_id, "delta", 2, newest.limit(0),
                 compact_merge(spark, state_dir, id_col),
                 partition_by=partition_by, force_compact=True)

@@ -404,8 +404,8 @@ from caspr_spark.state import prune_state, read_live_frames
 
 def _leased(state_dir: str, fold):
     """The ``foreachBatch`` callable of a state sink: runs
-    ``fold(batch_df, batch_id, trusted)`` under the single-writer lease
-    on ``state_dir``.
+    ``fold(batch_df, batch_id)`` under the single-writer lease on
+    ``state_dir``.
 
     On a stream's thread the writer is the stream's query id (the
     ``sql.streaming.queryId`` local property: the same after a restart
@@ -413,25 +413,20 @@ def _leased(state_dir: str, fold):
     first fold under each id claims the dir for it
     (:func:`caspr_spark.state.claim_writer`), so a second stream
     pointed at the same state dir fails at its first fold instead of
-    interleaving batch ids. ``trusted`` is True only while that lease
-    is held and an earlier fold under it completed: that fold ran the
-    sink's state probe, and every frame since was committed by this
-    writer, so the sink may skip the probe. A direct caller has no
-    query id: it takes no lease, ``trusted`` stays False and every
-    fold probes, as the batch APIs do."""
+    interleaving batch ids. A direct caller has no query id and takes
+    no lease. The lease guards batch ids only: every fold, leased or
+    not, runs the same state checks."""
     from caspr_spark.state import claim_writer
 
-    held = {}          # query id -> an earlier fold under its lease completed
+    claimed = set()    # query ids this sink has claimed the dir for
 
     def _run(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         qid = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
-        if qid is not None and qid not in held:
+        if qid is not None and qid not in claimed:
             claim_writer(spark, state_dir, qid)
-            held[qid] = False
-        fold(batch_df, batch_id, held.get(qid, False))
-        if qid is not None:
-            held[qid] = True
+            claimed.add(qid)
+        fold(batch_df, batch_id)
 
     return _run
 
@@ -529,7 +524,7 @@ def gram_census_sink(state_dir: str, id_col: str = "doc_id",
                                        merge_gram_censuses)
     from caspr_spark.state import fold_commit
 
-    def _fold(batch_df: DataFrame, batch_id: int, _trusted: bool) -> None:
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         fold_commit(
             batch_df.sparkSession, state_dir, batch_id, layout,
             compact_every,
@@ -662,27 +657,36 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
                                        append_history_keys_state,
                                        append_history_signatures_state,
                                        build_history_signatures,
-                                       check_signature_state,
                                        dedup_against_history, exact_dedup,
                                        read_history_keys_state,
                                        read_history_signatures_state)
-    from caspr_spark.state import output_committed, state_listing
+    from caspr_spark.state import (check_stamp, output_committed,
+                                   read_live_frames, state_listing)
 
-    def _fold(batch_df: DataFrame, batch_id: int, trusted: bool) -> None:
+    if mode == "exact":
+        want, what = {"normalize": normalize}, "key"
+    else:
+        want = {"hash_family": hash_family, "num_hashes": num_hashes}
+        what = "signature"
+
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         from caspr_spark.cache import cache_scope
 
         spark = batch_df.sparkSession
-        committed = [b for b, _ in state_listing(spark, state_dir)]
-        if mode == "near" and committed and not trusted:
-            # PRE-WRITE guard, ahead of the replay skip as in the IVF
-            # and PQ sinks: verify BOTH the hash family AND the
-            # signature width against the committed state before any
-            # output bytes are written. A mismatched state would
-            # otherwise mis-band the history join silently and commit
-            # an under-deduped output dir that a corrected replay then
-            # skips and folds permanently.
-            check_signature_state(spark, state_dir, hash_family,
-                                  num_hashes)
+        listing = state_listing(spark, state_dir)
+        committed = [b for b, _ in listing]
+        if listing:
+            # PRE-WRITE guard, ahead of the replay skip: the newest
+            # frame's stamp (one schema read) must match this sink's
+            # normalization, or hash family AND signature width,
+            # before any output bytes are written. A mismatched state
+            # would otherwise key or band the history join wrongly
+            # and commit an under-deduped output dir that a corrected
+            # replay then skips and folds permanently.
+            check_stamp(state_dir,
+                        read_live_frames(spark, state_dir, what,
+                                         listing[-1:])[0],
+                        want, what)
         if batch_id in committed:
             return               # replay of a committed batch — no-op
         if any(b >= batch_id for b in committed):
@@ -718,9 +722,6 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
                                          num_hashes, shingle_size,
                                          hash_family)
                 .withColumnRenamed("history_id", id_col).persist())
-            # withColumnRenamed returns a fresh object — re-attach the
-            # provenance mark so the fold's family guard skips its probe
-            batch_sigs._caspr_hash_family = hash_family
             history = None
             if committed:
                 history = _signature_side(
@@ -739,8 +740,8 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
         # fold replays here with the output dir already complete; the
         # recompute is deterministic (identical pre-batch state AND
         # configuration — hold the sink's parameters constant across
-        # replays of an uncommitted batch; family/width drift refuses
-        # via the guards BEFORE this write, and the other knobs are
+        # replays of an uncommitted batch; stamp drift refuses via the
+        # guard BEFORE this write, and the other knobs are
         # part of the state-dir contract regardless), so the existing
         # bytes are already correct — skip the rewrite to keep marked
         # dirs genuinely immutable for concurrent readers. One O(1)
@@ -758,13 +759,11 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
             # (kept_written ids) but reuses the batch's already-computed
             # signature values instead of a second full shingle+minhash
             # pass — deterministic build, so the committed state bytes
-            # are identical (regression-tested in test_streaming); the
-            # family/width probe already ran pre-write, in this fold or
-            # in an earlier one under the held lease
+            # are identical (regression-tested in test_streaming)
             append_history_signatures_state(
                 spark, state_dir, batch_id, kept_written, id_col,
                 text_col, num_hashes, shingle_size, hash_family,
-                compact_every, signatures=batch_sigs, check_state=False)
+                compact_every, signatures=batch_sigs)
 
     return _leased(state_dir, _fold)
 
@@ -794,11 +793,10 @@ def ann_ingest_sink(state_dir: str, centroids: list,
     superseded frames with :func:`caspr_spark.state.prune_state`."""
     from caspr_spark.llm.similarity import append_ivf_state
 
-    def _fold(batch_df: DataFrame, batch_id: int, trusted: bool) -> None:
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         append_ivf_state(batch_df.sparkSession, state_dir, batch_id + 1,
                          batch_df, centroids, id_col, vec_col,
-                         compact_every, partition_by_cell=partition_by_cell,
-                         check_state=not trusted)
+                         compact_every, partition_by_cell=partition_by_cell)
 
     return _leased(state_dir, _fold)
 
@@ -840,10 +838,10 @@ def pq_ingest_sink(state_dir: str, codebooks,
     :func:`caspr_spark.llm.pq.adc_topk_pq_state`."""
     from caspr_spark.llm.pq import append_pq_state
 
-    def _fold(batch_df: DataFrame, batch_id: int, trusted: bool) -> None:
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         append_pq_state(batch_df.sparkSession, state_dir, batch_id + 1,
                         batch_df, codebooks, id_col, vec_col,
-                        compact_every, check_state=not trusted)
+                        compact_every)
 
     return _leased(state_dir, _fold)
 

@@ -502,7 +502,7 @@ def q_dedup_signature_state_fold(spark, sf_dir):
     is the SAME oracle as dedup_signature_state. This closes the
     one-consumer risk: the optimized fold path now has its own
     end-to-end oracle row outside the streaming envelope, with the
-    default state guard (check_state=True) exercised per fold."""
+    commit's stamp guard exercised per fold."""
     from caspr_spark.llm.dedup import (append_history_signatures_state,
                                        build_history_signatures,
                                        dedup_against_history,
@@ -517,7 +517,6 @@ def q_dedup_signature_state_fold(spark, sf_dir):
                 batch, num_hashes=16, shingle_size=3,
                 hash_family="portable").withColumnRenamed("history_id",
                                                           "doc_id")
-            sigs._caspr_hash_family = "portable"
             append_history_signatures_state(
                 spark, state, day, batch, num_hashes=16, shingle_size=3,
                 hash_family="portable", compact_every=2, signatures=sigs)

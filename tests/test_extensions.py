@@ -141,6 +141,30 @@ class TestIVFState:
         with pytest.raises(ValueError, match="fingerprint"):
             vacuum_ivf_state(spark, state, 3, other)
 
+    def test_unstamped_state_refuses_as_drift(self, embeddings, tmp_path):
+        """A committed frame whose ``centroid_fp`` carries no stamp (an
+        external writer's, say) refuses a fold and a search as a schema
+        drift, and the message names the migration."""
+        from caspr_spark.llm.similarity import (_centroid_fingerprint,
+                                                append_ivf_state,
+                                                cosine_topk_ivf_state,
+                                                nearest_centroid)
+        from caspr_spark.state import compact_merge, fold_commit
+        spark = embeddings.sparkSession
+        cents = self._cents()
+        state = str(tmp_path / "ivf")
+        frame = embeddings.select(
+            "vec_id", "embedding",
+            nearest_centroid("embedding", cents).alias("ivf_cell"),
+            F.lit(_centroid_fingerprint(cents)).alias("centroid_fp"))
+        fold_commit(spark, state, 1, "delta", 8, frame,
+                    compact_merge(spark, state, "vec_id"))
+        with pytest.raises(ValueError, match="without a stamp.*migrate"):
+            append_ivf_state(spark, state, 2, embeddings, cents)
+        q = embeddings.filter(F.col("vec_id") < 2)
+        with pytest.raises(ValueError, match="without a stamp"):
+            cosine_topk_ivf_state(spark, state, q, k=3, centroids=cents)
+
     def test_partitioned_ingest_prunes_and_matches(self, embeddings,
                                                    tmp_path):
         """partition_by_cell=True: frames are hive-partitioned on
@@ -739,11 +763,10 @@ class TestPQState:
 class TestSinkProbeOnce:
     def test_ann_sink_first_fold_still_refuses_mismatch(self, embeddings,
                                                         tmp_path):
-        """Round-16 probe skip: ann_ingest_sink probes the quantizer
-        fingerprint once per instance — the FIRST fold of a fresh sink
-        must still refuse a mismatched pre-existing state, and
-        same-instance later folds (probe skipped) commit identically
-        to the always-probing batch path."""
+        """The FIRST fold of a fresh ann_ingest_sink refuses a
+        pre-existing state stamped with another quantizer fingerprint,
+        and same-instance later folds commit identically to the batch
+        path (both check the stamp on every commit)."""
         from caspr_spark.llm.similarity import (append_ivf_state,
                                                 read_ivf_state)
         from caspr_spark.streaming import ann_ingest_sink
@@ -762,7 +785,7 @@ class TestSinkProbeOnce:
         good = str(tmp_path / "good")
         sink = ann_ingest_sink(good, cents)
         sink(b0, 0)
-        sink(b1, 1)           # probe skipped on this fold
+        sink(b1, 1)
         ref = str(tmp_path / "ref")
         append_ivf_state(spark, ref, 1, b0, cents)
         append_ivf_state(spark, ref, 2, b1, cents)

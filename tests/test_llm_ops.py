@@ -988,31 +988,6 @@ class TestIncrementalDedup:
                 spark, str(tmp_path / "bad"), 1, batch, num_hashes=16,
                 hash_family="portable", signatures=sigs)
 
-    def test_fold_check_state_skip_identical(self, spark, tmp_path):
-        """Round-16 optimization: ``check_state=False`` (the streaming
-        sink's per-micro-batch probe skip) commits byte-identical state
-        to the guarded fold."""
-        from caspr_spark.llm.dedup import (append_history_signatures_state,
-                                           read_history_signatures_state)
-        batch, _ = self._corpora(spark)
-        dirs = {}
-        for name, check in (("guarded", True), ("skipped", False)):
-            d = str(tmp_path / name)
-            dirs[name] = d
-            for day, ids in ((1, (2, 3)), (2, (4,))):
-                append_history_signatures_state(
-                    spark, d, day,
-                    batch.filter(batch.doc_id.isin(list(ids))),
-                    num_hashes=16, hash_family="portable",
-                    compact_every=2, check_state=check)
-        key = lambda r: (r.history_id, tuple(r.shingles),
-                         tuple(r.minhash), r.hash_family)
-        a = sorted(map(key, read_history_signatures_state(
-            spark, dirs["guarded"]).collect()))
-        b = sorted(map(key, read_history_signatures_state(
-            spark, dirs["skipped"]).collect()))
-        assert a == b
-
     def test_precomputed_signature_plumbing_is_identical(self, spark):
         """Round-14 one-pass-per-batch optimization: minhash_lsh_dedup
         with a precomputed ``signatures=`` frame and

@@ -994,6 +994,38 @@ class TestGramCensusStateSink:
                                             num_hashes=32,
                                             hash_family="portable")
 
+    def test_key_state_normalize_mismatch_refuses(self, spark, tmp_path):
+        """The two ``normalize`` settings key the same text differently,
+        so a copy that differs only in case or spacing would be kept
+        silently: a key-table fold and an exact-mode sink under the
+        other setting refuse, the sink before writing any output dir;
+        the stamp survives a compaction."""
+        import os
+
+        from caspr_spark.llm.dedup import append_history_keys_state
+        from caspr_spark.state import state_listing
+        from caspr_spark.streaming import dedup_corpus_sink
+        state, out = str(tmp_path / "state"), str(tmp_path / "out")
+        day = lambda i, text: spark.createDataFrame(
+            [(i, text)], "doc_id long, text string")
+        append_history_keys_state(spark, state, 1, day(1, "Hello  World"),
+                                  compact_every=2)
+        append_history_keys_state(spark, state, 2, day(2, "other text"),
+                                  compact_every=2)       # a compaction
+        with pytest.raises(ValueError, match="normalize"):
+            append_history_keys_state(spark, state, 3,
+                                      day(3, "hello world"),
+                                      normalize=False)
+        sink = dedup_corpus_sink(state, out, mode="exact", normalize=False)
+        with pytest.raises(ValueError, match="normalize"):
+            sink(day(4, "hello world"), 4)
+        assert not os.path.exists(os.path.join(out, "k4")), \
+            "output dir written before the normalize refusal"
+        # under the state's own setting the copy is found and dropped
+        dedup_corpus_sink(state, out, mode="exact")(day(5, "hello world"), 5)
+        assert state_listing(spark, state)[-1][0] == 5
+        assert spark.read.parquet(os.path.join(out, "k5")).count() == 0
+
     def test_near_sink_width_mismatch_refuses_before_output(
             self, spark, tmp_path):
         """r14 ADVICE regression: a near-mode sink pointed at a
@@ -1388,7 +1420,6 @@ class TestNearCorpusSinkFold:
         sigs = build_history_signatures(
             batch, "doc_id", "text", 64, 3,
             hash_family).withColumnRenamed("history_id", "doc_id")
-        sigs._caspr_hash_family = hash_family
         kept = batch
         if batch_internal:
             kept = minhash_lsh_dedup(kept, num_hashes=64, bands=16,
@@ -1398,7 +1429,6 @@ class TestNearCorpusSinkFold:
         if committed:
             bs = (sigs.join(kept.select("doc_id"), "doc_id", "left_semi")
                   if batch_internal else sigs)
-            bs._caspr_hash_family = hash_family
             kept = dedup_against_history(
                 kept, None, mode="near", num_hashes=64, bands=16,
                 threshold=threshold, hash_family=hash_family,
@@ -1462,7 +1492,7 @@ class TestNearCorpusSinkFold:
                 "doc_id long, text string")
             for b in range(3)]
         sink(batches[0], 0)
-        sink(batches[1], 1)          # first history fold: state probe
+        sink(batches[1], 1)          # first history fold
         sc = spark.sparkContext
         sc.setJobGroup("near-fold-budget", "warm near fold")
         try:
